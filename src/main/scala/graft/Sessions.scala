@@ -34,6 +34,16 @@ object Sessions {
       // bench-only config in r21, confounding the round's deltas).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         (sys.env.getOrElse("SPARK_GRAFT_CACHED_REPART", "1") != "0").toString)
+      // list input paths on the driver, never in a Spark job: a store
+      // read hands the scan one path per live chain segment (512 for a
+      // 64-bucket delta store at 8 generations), far above the default
+      // threshold of 32, and the "parallel" listing job then runs on the
+      // same local cores at ~5 ms of scheduling per path-task — seconds
+      // per read for what a driver-side listStatus does in milliseconds.
+      // A cluster session, whose listing tasks run on other machines,
+      // is not built here.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     muteCheckpointUnpersistWarn()

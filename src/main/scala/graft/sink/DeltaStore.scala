@@ -1,6 +1,5 @@
 package graft.sink
 
-import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -29,6 +28,17 @@ import scala.jdk.CollectionConverters._
   *     amortized O(bucket/maxChain) per batch, the classic LSM trade.
   *     A store-wide fold triggers when live generation DIRS exceed
   *     `maxLiveGens`, bounding file counts on long streams.
+  *
+  * Write path: a batch that can fold nothing (no chain at `maxChain`,
+  * live generation dirs below `maxLiveGens`) is written verbatim by ONE
+  * query — no cache, no bucket-id collect — and the buckets it
+  * appends to are read back from the `bucket=` dirs it produced. Only a
+  * batch that can fold first collects its bucket ids, to pick the fold
+  * set (touched buckets at the cap); so the `delta.net` PhaseClock
+  * sub-phase appears only on such batches. Every generation write, here
+  * and in [[BucketStore]], runs `min(buckets, defaultParallelism)` tasks
+  * with one file per `bucket=` dir; [[BucketStore.writeBuckets]] states
+  * the rule and the per-file floor that remains.
   *
   * Crash contract is [[BucketStore]]'s, unchanged: generation dirs are
   * keyed by batch id and written mode=overwrite (replay self-heals its
@@ -391,81 +401,82 @@ object DeltaStore {
     }
     writePkCols(target, pkCols)
     if (bucketExpr.isDefined) markSemanticBuckets(target)
-    val bucketed = net
-      .withColumn("bucket",
-        bucketExpr.getOrElse(BucketStore.bucketCol(pkCols, nBuckets))).cache()
+    val bucketOf = bucketExpr.getOrElse(BucketStore.bucketCol(pkCols, nBuckets))
+    val globalFold = manifest0.values.flatten.toSet.size >= maxLiveGens
+    def foldsOnAppend(b: Int): Boolean = manifest0.getOrElse(b, Nil).size + 1 > maxChain
+    // a batch can fold only if some chain (or, with maxChain < 1, even a
+    // fresh one) is at its cap, or the store-wide fold is due
+    val canFold = globalFold || maxChain < 1 || manifest0.keys.exists(foldsOnAppend)
     // delta.* are attribution sub-phases of the enclosing sink "apply"
     // ([[graft.PhaseClock]]): delta.net = computing+caching the net batch
-    // (the collect below fills the cache), delta.write = the generation
-    // write INCLUDING any chain-fold reads, delta.flip = manifest flip +
-    // GC sweep. delta.folds counts chain-capped bucket folds, so the
-    // artifact shows how often the LSM fold cost is actually paid.
-    val touched = graft.PhaseClock.time("delta.net") {
-      bucketed.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet // bucket ids only — bounded metadata
-    }
-    val globalFold = manifest0.values.flatten.toSet.size >= maxLiveGens
-    if (touched.isEmpty && !globalFold) {
-      // empty micro-batch: nothing to write — a gen dir holding only
-      // _SUCCESS would be referenced by no chain and leak forever
-      bucketed.unpersist()
-      return manifest0
-    }
-    val foldBuckets =
-      if (globalFold) manifest0.keySet ++ touched
-      else touched.filter(b => manifest0.getOrElse(b, Nil).size + 1 > maxChain)
-    val appendBuckets = touched -- foldBuckets
-    val deltaPart = bucketed.filter(col("bucket").isin(appendBuckets.toSeq: _*))
-    val foldedPart: Option[DataFrame] =
-      if (foldBuckets.isEmpty) None
-      else {
-        val chains = manifest0.view.filterKeys(foldBuckets).toMap
-        val base = chainFrames(spark, target, chains)
-        val newDeltas = bucketed.filter(col("bucket").isin(foldBuckets.toSeq: _*))
-          .drop("bucket").withColumn("_seq", lit(batchId))
-        val all = base.map(_.unionByName(newDeltas)).getOrElse(newDeltas)
-        Some(resolve(all, pkCols)
-          .withColumn("net_op", lit("insert"))
-          .withColumn("bucket",
-            bucketExpr.getOrElse(BucketStore.bucketCol(pkCols, nBuckets))))
+    // and collecting its bucket ids (only on batches that can fold),
+    // delta.write = the generation write INCLUDING any chain-fold reads,
+    // delta.flip = manifest flip + GC sweep. delta.folds counts
+    // chain-capped bucket folds, so the artifact shows how often the LSM
+    // fold cost is actually paid.
+    if (!canFold) {
+      // no chain can fold: the generation is the batch's rows verbatim,
+      // written by ONE query — no cache, no bucket-id collect. The buckets
+      // it appends to are the bucket dirs the write produced; an empty
+      // batch produces none, flips the manifest unchanged, and its
+      // _SUCCESS-only dir is swept by that flip like any unreferenced
+      // generation.
+      val present = graft.PhaseClock.time("delta.write") {
+        BucketStore.writeBuckets(net.withColumn("bucket", bucketOf), genDir, nBuckets)
       }
-    if (foldBuckets.nonEmpty) {
-      graft.PhaseClock.count("delta.folds", foldBuckets.size)
-      // folded rows re-assert under THIS batch's id — states older than
-      // it stop being reconstructable; record that before the flip
-      raiseHistoryFloor(target, batchId)
+      return manifest0 ++
+        present.map(b => b -> (manifest0.getOrElse(b, Seq.empty) :+ genName))
     }
-    val out = foldedPart
-      .map(f => deltaPart.unionByName(f, allowMissingColumns = false))
-      .getOrElse(deltaPart)
-    graft.PhaseClock.time("delta.write") {
-      // write tasks sized by the buckets this generation actually
-      // carries, not the store's full bucket count: hash(bucket) % n
-      // keeps every bucket's rows in ONE task, and partitionBy still
-      // splits files per bucket value, so the on-disk layout (one
-      // bucket=N dir, one file per bucket) is identical — a small batch
-      // just stops paying (nBuckets − touched) empty write tasks. At
-      // scale a batch touches every bucket and n == nBuckets, the
-      // store's designed write parallelism.
-      val writeTasks = math.max(1,
-        math.min(nBuckets, appendBuckets.size + foldBuckets.size))
-      out.repartition(writeTasks, col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(genDir)
-    }
-    bucketed.unpersist()
-    require(Files.exists(Paths.get(genDir, "_SUCCESS")),
-      s"generation write did not complete: $genDir")
-    // a folded bucket can net to empty (all rows deleted): no bucket dir
-    // is written and its chain must be dropped, not reset
-    val present = Option(new File(genDir).list()).getOrElse(Array.empty)
-      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
-      .toSet
-    val kept = manifest0.view
-      .filterKeys(b => !foldBuckets(b) && !appendBuckets(b)).toMap
-    kept ++
-      appendBuckets.intersect(present)
-        .map(b => b -> (manifest0.getOrElse(b, Seq.empty) :+ genName)) ++
-      foldBuckets.intersect(present).map(b => b -> Seq(genName))
+    val bucketed = net.withColumn("bucket", bucketOf).cache()
+    try {
+      val touched = graft.PhaseClock.time("delta.net") {
+        bucketed.select("bucket").distinct()
+          .collect().map(_.getInt(0)).toSet // bucket ids only — bounded metadata
+      }
+      if (touched.isEmpty && !globalFold) {
+        // empty micro-batch: nothing to write — a gen dir holding only
+        // _SUCCESS would be referenced by no chain
+        return manifest0
+      }
+      val foldBuckets =
+        if (globalFold) manifest0.keySet ++ touched
+        else touched.filter(foldsOnAppend)
+      val appendBuckets = touched -- foldBuckets
+      val deltaPart = bucketed.filter(col("bucket").isin(appendBuckets.toSeq: _*))
+      val foldedPart: Option[DataFrame] =
+        if (foldBuckets.isEmpty) None
+        else {
+          val chains = manifest0.view.filterKeys(foldBuckets).toMap
+          val base = chainFrames(spark, target, chains)
+          val newDeltas = bucketed.filter(col("bucket").isin(foldBuckets.toSeq: _*))
+            .drop("bucket").withColumn("_seq", lit(batchId))
+          val all = base.map(_.unionByName(newDeltas)).getOrElse(newDeltas)
+          Some(resolve(all, pkCols)
+            .withColumn("net_op", lit("insert"))
+            .withColumn("bucket", bucketOf))
+        }
+      if (foldBuckets.nonEmpty) {
+        graft.PhaseClock.count("delta.folds", foldBuckets.size)
+        // folded rows re-assert under THIS batch's id — states older than
+        // it stop being reconstructable; record that before the flip
+        raiseHistoryFloor(target, batchId)
+      }
+      val out = foldedPart
+        .map(f => deltaPart.unionByName(f, allowMissingColumns = false))
+        .getOrElse(deltaPart)
+      // a folded bucket can net to empty (all rows deleted): no bucket dir
+      // is written and its chain must be dropped, not reset
+      val present = graft.PhaseClock.time("delta.write") {
+        BucketStore.writeBuckets(out, genDir,
+          math.min(nBuckets, appendBuckets.size + foldBuckets.size))
+      }
+      val kept = manifest0.view
+        .filterKeys(b => !foldBuckets(b) && !appendBuckets(b)).toMap
+      kept ++
+        appendBuckets.intersect(present)
+          .map(b => b -> (manifest0.getOrElse(b, Seq.empty) :+ genName)) ++
+        foldBuckets.intersect(present).map(b => b -> Seq(genName))
+    } finally bucketed.unpersist()
   }
 
   /** Phase 2: atomically flip MANIFEST (recording `appliedBatchId` in the
@@ -515,19 +526,13 @@ object DeltaStore {
     val genDir = s"$target/$genName"
     val pkCols = inferPkCols(target)
     val all = chainFrames(spark, target, chains).get
-    resolve(all, pkCols)
-      .withColumn("net_op", lit("insert"))
-      .withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets))
-      .repartition(nBuckets, col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(genDir)
-    require(Files.exists(Paths.get(genDir, "_SUCCESS")),
-      s"snapshot write did not complete: $genDir")
-    raiseHistoryFloor(target, applied)
     // every key resolved away (all tombstoned) writes no bucket dir: the
     // manifest legitimately flips to empty and the GC sweeps everything
-    val present = Option(new File(genDir).list()).getOrElse(Array.empty)
-      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
-      .toSet
+    val present = BucketStore.writeBuckets(resolve(all, pkCols)
+      .withColumn("net_op", lit("insert"))
+      .withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)),
+      genDir, nBuckets)
+    raiseHistoryFloor(target, applied)
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied)
   }
 
@@ -597,14 +602,8 @@ object DeltaStore {
           "would collapse the versions under one id; use snapshot " +
           "(maintenance type \"snapshot\") instead")
     }
-    merged.repartition(chains.size, col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(genDir)
-    require(Files.exists(Paths.get(genDir, "_SUCCESS")),
-      s"optimize write did not complete: $genDir")
+    val present = BucketStore.writeBuckets(merged, genDir, chains.size)
     raiseHistoryFloor(target, applied)
-    val present = Option(new File(genDir).list()).getOrElse(Array.empty)
-      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
-      .toSet
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied, fs)
   }
 
@@ -645,15 +644,9 @@ object DeltaStore {
     if (manifest0.values.exists(_.contains(genName)) ||
         batchId <= readApplied(target)) return
     writePkCols(target, pkCols)
-    net.withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets))
-      .repartition(nBuckets, col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(genDir)
-    require(Files.exists(Paths.get(genDir, "_SUCCESS")),
-      s"generation write did not complete: $genDir")
+    val present = BucketStore.writeBuckets(
+      net.withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), genDir, nBuckets)
     raiseHistoryFloor(target, batchId)
-    val present = Option(new File(genDir).list()).getOrElse(Array.empty)
-      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
-      .toSet
     flip(target, present.map(b => b -> Seq(genName)).toMap, batchId, fs)
   }
 

@@ -34,10 +34,12 @@ object StreamTuning {
     * 0 bytes and the whole input-sized derivation silently degrades to
     * the session constant (r21 verdict item 4). Handles bare local
     * paths, qualified URIs, and comma-separated lists; globs resolve
-    * via globStatus. Unreadable/missing paths count 0 (the caller's
-    * unknown-input fallback then keeps the session setting). */
+    * via globStatus, brace alternations (`dir/{a,b}/x`) included — the
+    * list splits only on commas outside `{…}`. Unreadable/missing paths
+    * count 0 (the caller's unknown-input fallback then keeps the session
+    * setting). */
   private[graft] def sizeOf(spark: SparkSession, path: String): Long =
-    path.split(",").map(_.trim).filter(_.nonEmpty).map { one =>
+    splitOutsideBraces(path).map(_.trim).filter(_.nonEmpty).map { one =>
       try {
         val conf = spark.sparkContext.hadoopConfiguration
         val p = new org.apache.hadoop.fs.Path(one)
@@ -47,6 +49,25 @@ object StreamTuning {
         else stats.map(s => fs.getContentSummary(s.getPath).getLength).sum
       } catch { case _: Exception => 0L }
     }.sum
+
+  /** Split a comma-separated path list on the commas at brace depth 0:
+    * a Hadoop glob's `{a,b}` alternation is one path, not two. */
+  private def splitOutsideBraces(paths: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    paths.indices.foreach { i =>
+      paths(i) match {
+        case '{' => depth += 1
+        case '}' => depth = math.max(0, depth - 1)
+        case ',' if depth == 0 =>
+          out += paths.substring(from, i)
+          from = i + 1
+        case _ =>
+      }
+    }
+    (out += paths.substring(from)).result()
+  }
 
   private def bytesConf(spark: SparkSession, key: String,
       dflt: Long): Long =

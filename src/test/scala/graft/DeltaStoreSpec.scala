@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import graft.sink.DeltaStore
+import scala.jdk.CollectionConverters._
+import graft.sink.{BucketStore, DeltaStore}
 
 /** The append-only delta-log target: last-writer-wins resolution,
   * O(|batch|) appends, chain-capped compaction, and the BucketStore
@@ -216,6 +221,98 @@ class DeltaStoreSpec extends SparkSpec {
     // offline snapshot collapses everything to the applied id
     DeltaStore.snapshot(spark, target, nBuckets = 4)
     assert(DeltaStore.readHistoryFloor(target) === 2L)
+  }
+
+  /** Call sites of the SQL executions and task counts of the stages
+    * `body` runs, seen by a SparkListener; a job tag set on this thread
+    * keeps any other thread's work out. */
+  private def observed(body: => Unit): (Seq[String], Seq[Int]) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-observed-${java.util.UUID.randomUUID}"
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobTags(tag) =>
+          executions.add(x.description)
+        case _ =>
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) stageTasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(l)
+    sc.addJobTag(tag)
+    try body
+    finally {
+      sc.removeJobTag(tag)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    (executions.asScala.toSeq, stageTasks.asScala.toSeq)
+  }
+
+  test("an append that can fold nothing writes in one cores-sized job: " +
+      "no collect, one file per bucket dir") {
+    val target = tmp("graft-delta-onejob")
+    val nBuckets = 64
+    val cap = math.min(nBuckets, spark.sparkContext.defaultParallelism)
+    val batch0 = (0 until 400).map(i =>
+      (s"t${i % 7}", i.toLong, "insert", i.toLong, i, i / 4.0))
+    val (writes, tasks) = observed {
+      DeltaStore.append(netOf(batch0: _*), target, pkCols,
+        nBuckets = nBuckets, batchId = 0, maxChain = 1)
+    }
+    assert(writes.size == 1 && writes.head.startsWith("parquet"),
+      s"a no-fold append must run only its generation write: $writes")
+    assert(tasks.nonEmpty && tasks.max <= cap,
+      s"stage task counts $tasks exceed min(nBuckets, defaultParallelism) = $cap")
+    val dirs = new java.io.File(s"$target/gen-0").listFiles()
+      .filter(_.getName.startsWith("bucket="))
+    assert(dirs.length > cap, "the batch must span more buckets than write tasks")
+    dirs.foreach { d =>
+      assert(d.list().count(_.endsWith(".parquet")) == 1, s"${d.getName}: ${d.list().toSeq}")
+    }
+    assert(DeltaStore.readManifest(target) ==
+      dirs.map(d => d.getName.stripPrefix("bucket=").toInt -> Seq("gen-0")).toMap)
+    // every chain is now at maxChain = 1: the next append can fold, so it
+    // collects its bucket ids first — the listener does see that job
+    val (foldRuns, _) = observed {
+      DeltaStore.append(netOf(("t0", 0L, "update", 0L, -1, -1.0)), target, pkCols,
+        nBuckets = nBuckets, batchId = 1, maxChain = 1)
+    }
+    assert(foldRuns.exists(_.startsWith("collect")), s"fold-capable append ran: $foldRuns")
+    assert(state(target) == batch0.map { case (t, pk, _, rid, rk, rv) =>
+      (t, pk) -> (if (pk == 0L) (0L, -1, -1.0) else (rid, rk, rv)) }.toMap)
+  }
+
+  test("fold timing at maxChain = 2: an untouched bucket at the cap keeps " +
+      "its chain, a touched one folds") {
+    val target = tmp("graft-delta-foldtime")
+    val keys = (1L to 50L).map(pk => ("t", pk))
+    val bucketOf = keys.toDF("tbl", "pk")
+      .withColumn("b", BucketStore.bucketCol(pkCols, 4)).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val a = keys.head
+    val b = keys.find(k => bucketOf(k) != bucketOf(a)).get
+    def row(k: (String, Long), op: String, v: Int) = (k._1, k._2, op, k._2, v, v.toDouble)
+    def append(id: Long, rows: (String, Long, String, Long, Int, Double)*): Unit =
+      DeltaStore.append(netOf(rows: _*), target, pkCols,
+        nBuckets = 4, batchId = id, maxChain = 2)
+    append(0, row(a, "insert", 0), row(b, "insert", 0))
+    append(1, row(a, "update", 1), row(b, "update", 1))
+    val (ba, bb) = (bucketOf(a), bucketOf(b))
+    assert(DeltaStore.readManifest(target) ==
+      Map(ba -> Seq("gen-0", "gen-1"), bb -> Seq("gen-0", "gen-1")))
+    // both chains at the cap; batch 2 touches only a's bucket
+    append(2, row(a, "update", 2))
+    assert(DeltaStore.readManifest(target) ==
+      Map(ba -> Seq("gen-2"), bb -> Seq("gen-0", "gen-1")))
+    assert(DeltaStore.readHistoryFloor(target) == 2L)
+    append(3, row(b, "update", 3))
+    assert(DeltaStore.readManifest(target) ==
+      Map(ba -> Seq("gen-2"), bb -> Seq("gen-3")))
+    assert(state(target) == Map(a -> (a._2, 2, 2.0), b -> (b._2, 3, 3.0)))
   }
 
   test("append writes only the batch: untouched chains keep their files") {

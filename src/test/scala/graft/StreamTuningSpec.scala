@@ -74,6 +74,17 @@ class StreamTuningSpec extends SparkSpec {
     assert(StreamTuning.sizeOf(spark, s"$dir/*.bin") == 123L)
   }
 
+  test("sizeOf keeps a brace glob's alternation whole: dir/{a,b}/*.bin " +
+      "sizes both halves, also inside a comma list") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-st-brace")
+    Seq("a" -> 100, "b" -> 23, "c" -> 7).foreach { case (sub, n) =>
+      val d = java.nio.file.Files.createDirectory(dir.resolve(sub))
+      java.nio.file.Files.write(d.resolve("x.bin"), new Array[Byte](n))
+    }
+    assert(StreamTuning.sizeOf(spark, s"$dir/{a,b}/*.bin") == 123L)
+    assert(StreamTuning.sizeOf(spark, s"$dir/{a,b}/*.bin,$dir/c/x.bin") == 130L)
+  }
+
   test("unparseable or non-positive partition overrides never poison " +
       "the drain") {
     val f = tmpFile(1024)
