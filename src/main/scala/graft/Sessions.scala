@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.config.LoggerConfig
+import org.apache.logging.log4j.core.filter.{AbstractFilter, CompositeFilter}
 import org.apache.spark.sql.SparkSession
 
 /** ONE local-session recipe shared by every entrypoint (Run, Verify,
@@ -56,11 +60,39 @@ object Sessions {
     * recomputed after unpersisting") per unpersist — thousands of lines
     * per run that drowned the one real failure out of r21's `sbt test`
     * tail. The unpersist is deliberate (the frame that read those
-    * blocks is gone), so the warning carries no signal here: pin the
-    * rdd package's loggers to ERROR after setLogLevel (which only moves
-    * the ROOT level, leaving this per-package level in place). */
+    * blocks is gone), so that one message carries no signal: a filter
+    * on the `org.apache.spark.rdd` logger config denies it, and every
+    * other WARN of the package (HadoopRDD reads, caching) still
+    * reaches the appenders. Idempotent; the package level is WARN. */
   def muteCheckpointUnpersistWarn(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () } // logging must never fail a run
+    try {
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val cfg = ctx.getConfiguration
+      val pkg = "org.apache.spark.rdd"
+      val lc = Option(cfg.getLoggers.get(pkg)).getOrElse {
+        val c = new LoggerConfig(pkg, Level.WARN, true)
+        cfg.addLogger(pkg, c)
+        c
+      }
+      lc.setLevel(Level.WARN)
+      val installed = lc.getFilter match {
+        case _: CheckpointUnpersistFilter => true
+        case c: CompositeFilter =>
+          c.getFiltersArray.exists(_.isInstanceOf[CheckpointUnpersistFilter])
+        case _ => false
+      }
+      if (!installed) lc.addFilter(new CheckpointUnpersistFilter)
+      ctx.updateLoggers()
+    } catch { case _: Throwable => () } // logging must never fail a run
+
+  /** Denies exactly Spark's "locally checkpointed … cannot be
+    * recomputed after unpersisting" message; passes everything else. */
+  private final class CheckpointUnpersistFilter extends AbstractFilter {
+    override def filter(e: LogEvent): Filter.Result = {
+      val m = Option(e.getMessage).map(_.getFormattedMessage).getOrElse("")
+      if (m.contains("was locally checkpointed") &&
+          m.contains("cannot be recomputed after unpersisting")) Filter.Result.DENY
+      else Filter.Result.NEUTRAL
+    }
+  }
 }

@@ -94,18 +94,16 @@ object Admission {
     *     expression would re-run the regex split once per `element_at`
     *     of the shingle transform, O(tokens) re-tokenizations per doc
     *     (measured: admit.sig 8.0 s → 1.4 s over 3 sf0.1 batches);
-    *   - the portable family binds the per-shingle digest array before
-    *     perm slicing — an inlined digest expression would re-run the
-    *     md5 pass once per perm (the documented shingle trap). */
+    *   - the portable family ([[Dedup.minhashMd5]]) binds the
+    *     per-shingle digest array before perm slicing — an inlined
+    *     digest expression would re-run the md5 pass once per perm. */
   private[graft] def signatures(docs: DataFrame, perms: Int,
       portableHash: Boolean = false): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
     val sh = element_at(transform(array(toks),
       t => array_distinct(Dedup.shingles(t))), 1)
     val sig =
-      if (portableHash)
-        element_at(transform(array(Dedup.md5PerShingle(col("sh"))),
-          mh => Dedup.minhashMd5Sliced(mh, perms)), 1)
+      if (portableHash) Dedup.minhashMd5(col("sh"), perms)
       else Dedup.minhashFast(col("sh"), perms).cast("array<string>")
     docs.filter(size(toks) >= 3)
       .select(col("doc_id"), sh.as("sh"))

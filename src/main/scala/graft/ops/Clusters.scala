@@ -1,6 +1,10 @@
 package graft.ops
 
+import java.math.BigInteger
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Connected components over a near-duplicate pair graph — the step
@@ -18,80 +22,123 @@ import org.apache.spark.sql.functions._
   * O(log diameter); a `maxIters` bound turns a pathological graph into
   * a loud failure rather than an unbounded job.
   *
+  * Convergence: labels only ever DECREASE (min-fold), so the exact sum
+  * of labels is a strictly monotone potential — an equal sum in two
+  * consecutive rounds is the fixpoint. Each round's sum is ONE Spark
+  * job over the round's checkpoint RDD (a per-partition exact sum,
+  * folded on the driver); that job is also the action that fills the
+  * checkpoint blocks, so a round costs its shuffle stages plus one job
+  * and no shuffle of its own. The identity labels are never summed:
+  * self-loops are dropped from the edge set (a node's own label is
+  * already in its fold), so a remaining edge a–b between two nodes
+  * lowers max(a, b) in round 1, and comparison starts at round 2. An
+  * edge set that is empty after that needs no round at all. Round 1
+  * also skips the jump join, a no-op on identity labels.
+  *
   * Scale shape: each round is one keyed equi-join (labels × edges)
   * and one min-agg — both shuffle on the node id, no broadcast of
-  * anything corpus-sized, and the symmetrized edge set is cached once
-  * across rounds. Lineage is cut every round (RDD `localCheckpoint`;
-  * a deployment would checkpoint to the cluster FS) so round k does
-  * not replay rounds 1..k−1 — and the PREVIOUS round's checkpoint is
-  * unpersisted explicitly as soon as the next is materialized, so the
-  * loop holds exactly ONE round of label blocks at any moment
-  * (Dataset.localCheckpoint leaves the superseded rounds to the async
-  * ContextCleaner, whose GC-driven timing made repeated runs churn the
-  * block store and read as bench noise). Callers should contract
-  * identical-signature cliques BEFORE building edges (CC over distinct
-  * signatures, labels joined back to docs) — a 10⁶-doc exact-dup
-  * clique is one contracted node instead of 10¹² edges.
+  * anything corpus-sized. The symmetrized edge set is one plan
+  * (each edge exploded into both directions, then deduplicated — a
+  * union of the two directions would plan the caller's edge
+  * derivation twice) cached once across rounds. Lineage is cut every
+  * round (RDD `localCheckpoint`; a deployment would checkpoint to the
+  * cluster FS) so round k does not replay rounds 1..k−1 — and the
+  * PREVIOUS round's checkpoint is unpersisted explicitly as soon as
+  * the next is materialized, so the loop holds exactly ONE round of
+  * label blocks at any moment (Dataset.localCheckpoint leaves the
+  * superseded rounds to the async ContextCleaner, whose GC-driven
+  * timing made repeated runs churn the block store and read as bench
+  * noise). Callers should contract identical-signature cliques BEFORE
+  * building edges (CC over distinct signatures, labels joined back to
+  * docs) — a 10⁶-doc exact-dup clique is one contracted node instead
+  * of 10¹² edges.
   */
 object Clusters {
+
+  /** The undirected edge set of `edges` (aId, bId) as distinct directed
+    * (src, dst) pairs, both directions, self-loops dropped. One plan:
+    * each edge explodes into its two directions, so the caller's edge
+    * derivation is planned (and run) once. */
+  private def symmetricEdges(edges: DataFrame, aId: String,
+      bId: String): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col(aId).as("src"), col(bId).as("dst")),
+        struct(col(bId).as("src"), col(aId).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      // null-safe: an edge with one null end still propagates a label
+      // to the null id, as it always has; a loop never changes one
+      .filter(!(col("src") <=> col("dst")))
+      .distinct()
+
+  /** Exact sum of the non-null labels of a checkpointed (v, comp)
+    * label RDD: one job, per-partition partial sums in a long that
+    * spill into a BigInteger on overflow, folded on the driver. */
+  private def potential(labels: RDD[InternalRow]): BigInteger =
+    labels.sparkContext.runJob(labels, (rows: Iterator[InternalRow]) => {
+      var big = BigInteger.ZERO
+      var acc = 0L
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val v = r.getLong(1)
+          val s = acc + v
+          if (((acc ^ s) & (v ^ s)) < 0) { big = big.add(BigInteger.valueOf(acc)); acc = v }
+          else acc = s
+        }
+      }
+      big.add(BigInteger.valueOf(acc))
+    }).foldLeft(BigInteger.ZERO)(_.add(_))
 
   /** (idCol, comp) for every node: `comp` = min node id reachable in
     * the undirected graph `edges` (aId, bId). Isolated nodes keep
     * their own id. Raises if not converged within `maxIters`. */
   def components(nodes: DataFrame, idCol: String, edges: DataFrame,
       aId: String, bId: String, maxIters: Int = 25): DataFrame = {
-    val sym = edges.select(col(aId).as("src"), col(bId).as("dst"))
-      .unionByName(edges.select(col(bId).as("src"), col(aId).as("dst")))
-      .distinct().cache()
+    val sym = symmetricEdges(edges, aId, bId).cache()
     // fill the edge cache eagerly as its own phase: edge DERIVATION
     // (the caller's pair-gen plan — e.g. a hamming ball-probe join) is
     // usually the single most expensive step of a components call, and
     // letting it fill lazily inside round 1 both mis-charges it to the
     // propagation loop and makes round-1 timing non-reproducible
-    graft.PhaseClock.time("cc.edges") { sym.count() }
+    val nEdges = graft.PhaseClock.time("cc.edges") { sym.count() }
     var labels = nodes
       .select(col(idCol).cast("long").as("v"), col(idCol).cast("long").as("comp"))
-    // convergence probe: labels only ever DECREASE (min-fold), so the
-    // exact decimal sum of comps is a strictly monotone potential —
-    // equal sum ⟺ fixpoint. One tiny agg per round instead of a
-    // labels×labels diff join.
-    def potential(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-    var pot = potential(labels)
-    var converged = false
+    // no edge: the identity labels are the fixpoint (distinct, as a
+    // round's min-fold would leave them)
+    if (nEdges == 0) labels = labels.distinct()
+    var pot: Option[BigInteger] = None
+    var converged = nEdges == 0
     var it = 0
-    val spark = nodes.sparkSession
-    // the live checkpoint RDDs for the current `labels`; replaced (and
-    // the old set unpersisted) every round — see the scaladoc
-    var liveRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
+    // the live checkpoint RDD for the current `labels`; replaced (and
+    // the old one unpersisted) every round — see the scaladoc
+    var liveRdds: Seq[RDD[InternalRow]] = Nil
     while (!converged && it < maxIters) {
       val prop = sym
         .join(labels.select(col("v").as("src"), col("comp")), "src")
         .select(col("dst").as("v"), col("comp"))
       // pointer jumping: also fold in comp(comp(v)) — effective depth
       // doubles per round, so rounds = O(log diameter) instead of
-      // O(diameter) (a 100-hop chain resolves in ~7 rounds)
-      val jump = labels.as("x")
-        .join(labels.select(col("v").as("comp"), col("comp").as("jcomp")), "comp")
-        .select(col("v"), col("jcomp").as("comp"))
-      val folded = labels.unionByName(prop).unionByName(jump)
-        .groupBy("v").agg(min("comp").as("comp"))
-      // internal-row lineage cut (Lineage.cutLazy): the potential agg
-      // below is the round's ONE materializing action — it fills the
-      // checkpoint blocks as a side effect, so no separate count job.
+      // O(diameter) (a 100-hop chain resolves in ~7 rounds). Round 1's
+      // labels are the identity, whose jump is itself: skipped.
+      val candidates =
+        if (it == 0) labels.unionByName(prop)
+        else labels.unionByName(prop).unionByName(labels.as("x")
+          .join(labels.select(col("v").as("comp"), col("comp").as("jcomp")), "comp")
+          .select(col("v"), col("jcomp").as("comp")))
+      val folded = candidates.groupBy("v").agg(min("comp").as("comp"))
       graft.PhaseClock.count("cc.rounds")
       // cc.round: the whole round's cost. Under AQE the cut itself
       // executes the plan's shuffle stages (join + jump + min-fold) to
-      // pick the final plan; the potential agg then runs the final
+      // pick the final plan; the potential job then runs the final
       // stage and persists the blocks.
-      val (rdds, next, nextPot) = graft.PhaseClock.time("cc.round") {
-        val (n, r) = graft.ops.Lineage.cutLazy(folded)
-        (r, n, potential(n))
+      val (next, rdds, nextPot) = graft.PhaseClock.time("cc.round") {
+        val (n, r) = Lineage.cutLazy(folded)
+        (n, r, potential(r.head))
       }
       liveRdds.foreach(_.unpersist(blocking = false))
       liveRdds = rdds
-      converged = nextPot.compareTo(pot) == 0
-      pot = nextPot
+      converged = pot.contains(nextPot)
+      pot = Some(nextPot)
       labels = next
       it += 1
     }
@@ -153,7 +200,9 @@ object Clusters {
     * measured similarity, so components only grow through genuine
     * near-dup chains. Scale shape: candidates are the LSH bucket
     * equi-join (never all pairs), verification is per-candidate, CC is
-    * [[components]] (hash-min + pointer jumping, doc-id keyed). */
+    * [[components]] (hash-min + pointer jumping, doc-id keyed). One
+    * cache, (id, sh, sig), feeds both the band fan-out and the verify
+    * joins, and is freed as soon as [[components]] returns. */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4, rows: Int = 2,
       minJaccard: Double = 0.5): DataFrame = {
@@ -180,25 +229,23 @@ object Clusters {
       s"nearDupClusters: id column '$idCol' must be an integral type " +
         s"(got $idType) — cluster labels are min-id longs; map string " +
         "ids to a stable long (e.g. xxhash64) first")
-    val sh = docs
+    // ONE cache: (id, sh, sig). The signature feeds the per-band
+    // fan-out (uncached, its subtree would re-run once per band key)
+    // and the verify joins read `sh` from the same blocks; the md5 pass
+    // inside the signature is let-bound by Dedup.minhashMd5
+    val sig = docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col(idCol),
         array_distinct(Dedup.shingles(col("toks"))).as("sh"))
+      .withColumn("sig", Dedup.minhashMd5(col("sh"), k))
       .cache()
-    // md5-per-shingle and the sliced signature are cached BEHIND
-    // barriers before the per-perm / per-band fan-out (the documented
-    // projection-collapse trap: unbarriered, the digest pass re-runs
-    // once per perm and the sig subtree once per band key)
-    val hashed = sh.withColumn("mh", Dedup.md5PerShingle(col("sh"))).cache()
-    val sig = hashed
-      .withColumn("sig", Dedup.minhashMd5Sliced(col("mh"), k)).cache()
     val cand = Dedup.lshCandidates(
       Dedup.lshBands(sig, "sig", bands, rows, idCol), idCol)
     val (inter, uni, _) = Dedup.jaccardCols(col("_sha"), col("_shb"))
     val edges = cand
-      .join(sh.select(col(idCol).as("a_id"), col("sh").as("_sha")), "a_id")
-      .join(sh.select(col(idCol).as("b_id"), col("sh").as("_shb")), "b_id")
+      .join(sig.select(col(idCol).as("a_id"), col("sh").as("_sha")), "a_id")
+      .join(sig.select(col(idCol).as("b_id"), col("sh").as("_shb")), "b_id")
       .filter(inter * 1.0 / uni >= minJaccard)
       .select("a_id", "b_id")
     val labeled = components(
@@ -206,13 +253,11 @@ object Clusters {
           .distinct(),
         "id", edges, "a_id", "b_id")
       .select(col("id").as(idCol), col("comp").as("cluster"))
-    // components ran EAGERLY (the CC loop materializes every round and
-    // the edge derivation fills during sym.count()), so the barrier
-    // caches above are fully consumed — free them now instead of
-    // pinning blocks until session end (ADVICE r18); the returned
-    // frame reads the CC checkpoint, not these
-    sh.unpersist(blocking = false)
-    hashed.unpersist(blocking = false)
+    // components ran EAGERLY (the edge derivation fills during
+    // sym.count() and every round materializes), so the signature
+    // cache is fully consumed — free it now instead of pinning blocks
+    // until session end; the returned frame reads the CC checkpoint
+    // (or, with no edge, `docs`), not this cache
     sig.unpersist(blocking = false)
     labeled
   }

@@ -104,21 +104,18 @@ object Decontaminate {
       .filter(size(col("toks")) >= 3)
       .select(col(idCol),
         array_distinct(Dedup.shingles(col("toks"))).as("sh"))
-    // md5-per-shingle and the sliced signature sit BEHIND cache
-    // barriers before the per-perm / per-band fan-out (the documented
-    // projection-collapse trap: unbarriered, the digest pass re-runs
-    // once per perm and the sig subtree once per band key). The op is
-    // LAZY (the returned frame reads THROUGH these barriers), so it
-    // cannot unpersist them itself — they're registered on the result
-    // for GraphBlocks.release/releaseAll, like the iterative ops'
-    // checkpoint blocks (ADVICE r18: repeated calls in a long-lived
-    // session otherwise accumulate barrier caches until session end)
+    // the signature sits BEHIND a cache barrier before the per-band
+    // fan-out (unbarriered, the sig subtree re-runs once per band key;
+    // the digest pass inside it is let-bound by Dedup.minhashMd5). The
+    // op is LAZY (the returned frame reads THROUGH these barriers), so
+    // it cannot unpersist them itself — they're registered on the
+    // result for GraphBlocks.release/releaseAll, like the iterative
+    // ops' checkpoint blocks (repeated calls in a long-lived session
+    // otherwise accumulate barrier caches until session end)
     val barriers = Seq.newBuilder[DataFrame]
     def banded(sh: DataFrame) = {
-      val hashed = sh.withColumn("mh", Dedup.md5PerShingle(col("sh"))).cache()
-      val sig = hashed
-        .withColumn("sig", Dedup.minhashMd5Sliced(col("mh"), k)).cache()
-      barriers += hashed += sig
+      val sig = sh.withColumn("sig", Dedup.minhashMd5(col("sh"), k)).cache()
+      barriers += sig
       Dedup.lshBands(sig, "sig", bands, rows, idCol)
     }
     val cs = shingled(corpus).cache()

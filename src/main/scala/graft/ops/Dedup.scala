@@ -49,12 +49,21 @@ object Dedup {
       i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))
 
   /** Per-shingle md5 digests (hex) — the ONLY hashing pass of the
-    * sliced portable family. Materialize this behind a cache/checkpoint
-    * barrier BEFORE slicing perms off it: Catalyst's projection collapse
-    * inlines the subtree into every consumer, so an unbarriered
-    * [[minhashMd5Sliced]] on top would re-run the md5 pass once per perm
-    * (the same trap the shingleFrame token cache documents). */
+    * sliced portable family. Never slice perms off this expression
+    * inline: [[minhashMd5Sliced]] references its input once per perm,
+    * and interpreted HOFs get no common-subexpression elimination, so
+    * the md5 pass would re-run once per perm. [[minhashMd5]] binds it
+    * once. */
   def md5PerShingle(sh: Column): Column = transform(sh, s => md5(s))
+
+  /** Portable MinHash signature of a shingle array: the per-shingle
+    * digest array is LET-BOUND through a one-element `transform` lambda
+    * (a bound lambda variable is evaluated once and referenced by every
+    * perm slice), so one md5 pass per row needs no cache barrier
+    * between the digests and the slicing. */
+  def minhashMd5(sh: Column, k: Int): Column =
+    element_at(transform(array(md5PerShingle(sh)),
+      mh => minhashMd5Sliced(mh, k)), 1)
 
   /** MinHash signature, portable family: perm i is the lexicographic min
     * (= numeric min — fixed-width lowercase hex) over hex chars

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The per-round lineage-cut discipline shared by the iterative ops
   * (components, pageRank, LPA, BFS, k-core, triangles): checkpoint +
@@ -30,29 +32,28 @@ import org.apache.spark.sql.DataFrame
 private[graft] object Lineage {
 
   /** Checkpoint `df` lazily and return it UNMATERIALIZED with its
-    * backing RDD handles: the caller's FIRST action over the frame
+    * backing RDD handle: the caller's FIRST action over the frame
     * materializes (and persists) the blocks. Use when the loop already
-    * runs a per-round action (e.g. a convergence aggregate) — the
-    * count job [[cut]] would add is then pure overhead.
+    * runs a per-round action (e.g. a convergence fold) — the count job
+    * [[cut]] would add is then pure overhead.
     *
-    * ALL persistent-RDD ids that appeared across the checkpoint call
-    * are returned (normally exactly one — the checkpoint itself). If a
-    * concurrent query persisted an RDD in the window, the set widens;
-    * the caller's unpersist then covers a foreign-but-superseded cache
-    * too, which is harmless (ADVICE r21: returning exactly ONE id from
-    * an unordered map risked keeping the WRONG one — unpersisting a
-    * live foreign cache while leaking the checkpoint to the
-    * ContextCleaner). */
-  def cutLazy(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+    * The handle is exactly the cut frame's own checkpoint RDD, read
+    * off the `LogicalRDD` the frame scans — never a diff of the
+    * context's persistent RDDs around the call, which could take in a
+    * concurrent query's live checkpoint and hand it to the caller's
+    * unpersist (a localCheckpoint cannot be recomputed once dropped).
+    * Its rows are the frame's internal rows, in the frame's column
+    * order, so a loop can fold over it directly. */
+  def cutLazy(df: DataFrame): (DataFrame, Seq[RDD[InternalRow]]) = {
     // eager=false: marks the internal RDD persisted + localCheckpointed
     // now, materializes at the caller's first action (one job total)
     val cp = df.localCheckpoint(false)
-    val rdds = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r
-    }.toSeq
-    (cp, rdds)
+    val rdd = cp.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case p => throw new IllegalStateException(
+        s"localCheckpoint did not return an RDD scan: ${p.nodeName}")
+    }
+    (cp, Seq(rdd))
   }
 
   def cut(df: DataFrame): (DataFrame, Seq[RDD[_]], Long) = {

@@ -309,10 +309,7 @@ object DedupQueries {
         // both sides of the candidate/verify joins (at cluster scale: a
         // checkpointed signature table, one k×|shingles| hash pass)
         val withSh = shingleFrame(s, dir)
-        // one md5 per shingle, cached BEFORE the perm slicing (projection
-        // collapse would otherwise re-run the digest pass once per perm)
-        val hashed = withSh.withColumn("mh", Dedup.md5PerShingle(col("sh"))).cache()
-        val sig = hashed.withColumn("sig", Dedup.minhashMd5Sliced(col("mh"), 8)).cache()
+        val sig = withSh.withColumn("sig", Dedup.minhashMd5(col("sh"), 8)).cache()
         val cand = Dedup.lshCandidates(
           Dedup.lshBands(sig, "sig", bands = 4, rows = 2, "doc_id"), "doc_id")
         val sa = withSh.select(col("doc_id").as("a_id"), col("sh").as("sha"))
@@ -360,10 +357,7 @@ object DedupQueries {
     "dedup_incremental" -> QueryDef(
       (s, dir) => {
         val withSh = shingleFrame(s, dir)
-        // one md5 per shingle, cached BEFORE the perm slicing (projection
-        // collapse would otherwise re-run the digest pass once per perm)
-        val hashed = withSh.withColumn("mh", Dedup.md5PerShingle(col("sh"))).cache()
-        val sig = hashed.withColumn("sig", Dedup.minhashMd5Sliced(col("mh"), 8)).cache()
+        val sig = withSh.withColumn("sig", Dedup.minhashMd5(col("sh"), 8)).cache()
         val bands = Dedup.lshBands(sig, "sig", bands = 4, rows = 2, "doc_id")
         val cand = Dedup.lshCandidatesAgainst(
           bands.filter(col("doc_id") >= 400),
@@ -411,10 +405,7 @@ object DedupQueries {
     "pipeline_admit" -> QueryDef(
       (s, dir) => {
         val withSh = shingleFrame(s, dir)
-        // one md5 per shingle, cached BEFORE the perm slicing (projection
-        // collapse would otherwise re-run the digest pass once per perm)
-        val hashed = withSh.withColumn("mh", Dedup.md5PerShingle(col("sh"))).cache()
-        val sig = hashed.withColumn("sig", Dedup.minhashMd5Sliced(col("mh"), 8)).cache()
+        val sig = withSh.withColumn("sig", Dedup.minhashMd5(col("sh"), 8)).cache()
         val bands = Dedup.lshBands(sig, "sig", bands = 4, rows = 2, "doc_id")
         val cand = Dedup.lshCandidatesAgainst(
           bands.filter(col("doc_id") >= 400),

@@ -1,12 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerStageSubmitted}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import graft.sink.{BucketStore, DeltaStore}
 
 /** The append-only delta-log target: last-writer-wins resolution,
@@ -224,32 +219,10 @@ class DeltaStoreSpec extends SparkSpec {
   }
 
   /** Call sites of the SQL executions and task counts of the stages
-    * `body` runs, seen by a SparkListener; a job tag set on this thread
-    * keeps any other thread's work out. */
+    * `body` runs. */
   private def observed(body: => Unit): (Seq[String], Seq[Int]) = {
-    val sc = spark.sparkContext
-    val tag = s"graft-observed-${java.util.UUID.randomUUID}"
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart if x.jobTags(tag) =>
-          executions.add(x.description)
-        case _ =>
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(',').contains(tag))) stageTasks.add(e.stageInfo.numTasks)
-    }
-    sc.addSparkListener(l)
-    sc.addJobTag(tag)
-    try body
-    finally {
-      sc.removeJobTag(tag)
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(l)
-    }
-    (executions.asScala.toSeq, stageTasks.asScala.toSeq)
+    val o = Observed(spark)(body)
+    (o.executions.map(_._1), o.stageTasks)
   }
 
   test("an append that can fold nothing writes in one cores-sized job: " +

@@ -328,4 +328,80 @@ class GraphsPropSpec extends SparkSpec {
       .head().getLong(0)
     assert(r == 6L * 1000000000L)
   }
+
+  /** Sequential union-find: every node maps to its component's min id
+    * (the larger root always joins the smaller, so a root is its set's
+    * min). */
+  private def componentsModel(nodes: Seq[Long], edges: Seq[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  /** Labels and round count of one `Clusters.components` call. */
+  private def components(nodes: Seq[Long], edges: Seq[(Long, Long)])
+      : (Map[Long, Long], Long) = {
+    def rounds = PhaseClock.snapshot().getOrElse("cc.rounds", 0.0).toLong
+    val before = rounds
+    val got = graft.ops.Clusters.components(nodes.toDF("id"), "id",
+        edges.toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect()
+    assert(got.length == nodes.size, s"one label per node: ${got.toSeq}")
+    (got.toMap, rounds - before)
+  }
+
+  test("components equals a sequential union-find; rounds 0 without " +
+      "edges, 2 for a star") {
+    val gen = for {
+      n <- Gen.choose(1, 12)
+      nEdges <- Gen.choose(0, 14)
+      edges <- Gen.listOfN(nEdges,
+        Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
+    } yield ((0L until n).toList, edges)
+    val prop = Prop.forAll(gen) { case (nodes, edges) =>
+      // duplicate and reversed copies of the drawn edges ride along
+      val withDups = edges ++ edges.take(2) ++ edges.take(2).map(_.swap)
+      val (got, _) = components(nodes, withDups)
+      val want = componentsModel(nodes, withDups)
+      if (got != want)
+        println(s"MISMATCH nodes=$nodes edges=$withDups\n got=$got\n want=$want")
+      got == want
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+
+    val nodes = (0L until 6L).toList
+    // no edge, or self-loops only: identity labels, no round
+    for (edges <- Seq(Nil, nodes.map(n => n -> n))) {
+      val (got, rounds) = components(nodes, edges)
+      assert(got == nodes.map(n => n -> n).toMap)
+      assert(rounds == 0L, s"$edges ran $rounds rounds")
+    }
+    // a star around the min id settles in round 1; round 2 confirms it
+    val (star, starRounds) = components(nodes, nodes.tail.map(0L -> _))
+    assert(star == nodes.map(_ -> 0L).toMap)
+    assert(starRounds == 2L)
+    // a 40-node path, listed in scrambled order, needs several rounds
+    val perm = new scala.util.Random(7).shuffle((0L until 40L).toList)
+    val path = perm.zip(perm.tail)
+    val (chain, chainRounds) = components(perm, path)
+    assert(chain == componentsModel(perm, path))
+    assert(chain.values.toSet == Set(0L))
+    assert(chainRounds > 2L, s"path converged in $chainRounds rounds")
+    // ids at both ends of the long range: the label sums overflow a long
+    val wide = Seq(Long.MaxValue, Long.MaxValue - 1, Long.MaxValue - 2,
+      Long.MinValue, Long.MinValue + 1, 5L)
+    val wideEdges = Seq(wide(0) -> wide(1), wide(1) -> wide(2),
+      wide(3) -> wide(4), wide(4) -> wide(5))
+    assert(components(wide, wideEdges)._1 == componentsModel(wide, wideEdges))
+  }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.ops.Lineage
 
@@ -29,9 +32,9 @@ class LineageSpec extends SparkSpec {
     assert(cut.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == expected)
     assert(cut.schema == df.schema)
-    // the handles include the live checkpoint backing the frame
-    assert(rdds.nonEmpty)
-    assert(rdds.exists(r =>
+    // the handle is exactly the live checkpoint backing the frame
+    assert(rdds.map(_.id) == Seq(scanned(cut).id))
+    assert(rdds.forall(r =>
       r.getStorageLevel.useMemory || r.getStorageLevel.useDisk))
     rdds.foreach(_.unpersist(blocking = false))
   }
@@ -46,7 +49,7 @@ class LineageSpec extends SparkSpec {
       src.rdd.map { r => acc.add(1); Row(r.getLong(0)) },
       StructType(Seq(StructField("id", LongType))))
     val (cut, rdds) = Lineage.cutLazy(counted.groupBy().agg(sum("id").as("s")))
-    assert(rdds.nonEmpty)
+    assert(rdds.map(_.id) == Seq(scanned(cut).id))
     // NOTE: no nothing-ran-yet assertion here — under AQE the cut call
     // itself already executes the plan's shuffle map stages to pick the
     // final plan (the documented cutLazy behavior), so the source may
@@ -64,5 +67,44 @@ class LineageSpec extends SparkSpec {
     assert(cachedParts > 0)
     assert(cut.head().getLong(0) == 4950L)
     rdds.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The RDD a checkpointed frame scans. */
+  private def scanned(cut: DataFrame): RDD[_] =
+    cut.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case p => fail(s"not an RDD scan: ${p.nodeName}")
+    }
+
+  test("cut and cutLazy hand back only their own checkpoint while other " +
+      "threads persist RDDs") {
+    val sc = spark.sparkContext
+    @volatile var running = true
+    val foreign = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+    val persister = new Thread(() => {
+      while (running) {
+        foreign.add(sc.parallelize(Seq(1), 1).persist())
+        Thread.sleep(1)
+      }
+    })
+    persister.start()
+    try {
+      (0 until 5).foreach { i =>
+        val df = spark.range(0, 200, 1, 4)
+          .groupBy((col("id") % (i + 3)).as("k")).count()
+        val (lazyCut, lazyRdds) = Lineage.cutLazy(df)
+        assert(lazyRdds.map(_.id) == Seq(scanned(lazyCut).id))
+        assert(lazyCut.count() == i + 3)
+        val (cut, rdds, n) = Lineage.cut(df)
+        assert(rdds.map(_.id) == Seq(scanned(cut).id))
+        assert(n == i + 3)
+        (lazyRdds ++ rdds).foreach(_.unpersist(blocking = false))
+      }
+    } finally {
+      running = false
+      persister.join()
+      foreign.forEach(r => { r.unpersist(blocking = false); () })
+    }
+    assert(!foreign.isEmpty, "the persister thread must have run")
   }
 }

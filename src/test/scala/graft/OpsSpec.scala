@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+  InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -388,6 +393,67 @@ class OpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     assert(strict === Seq(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L),
       s"got $strict")
+  }
+
+  /** Every cache a plan reads, nested caches included. */
+  private def cachesIn(qe: QueryExecution): Seq[InMemoryRelation] = {
+    object aqe extends AdaptiveSparkPlanHelper
+    def nested(r: InMemoryRelation): Seq[InMemoryRelation] =
+      r +: aqe.collect(r.cacheBuilder.cachedPlan) {
+        case s: InMemoryTableScanExec => s.relation
+      }.flatMap(nested)
+    qe.withCachedData.collect { case r: InMemoryRelation => r }.flatMap(nested)
+  }
+
+  test("nearDupClusters plans its edges once over one signature cache") {
+    import graft.ops.Clusters
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "alpha beta gamma delta zeta"),
+      (3L, "beta gamma delta zeta eta"),
+      (4L, "totally different words over here")).toDF("doc_id", "text")
+    var got: Seq[(Long, Long)] = Nil
+    val runs = Observed(spark) {
+      got = Clusters.nearDupClusters(docs, "doc_id", "text")
+        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
+    }.executions
+    assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+    val caches = runs.flatMap { case (_, qe) => cachesIn(qe) }
+      .map(r => r.cacheBuilder -> r.output.map(_.name))
+      .distinctBy { case (b, _) => System.identityHashCode(b) }
+    // the symmetrized edge set is components' cache; its plan holds the
+    // caller's edge derivation ONCE — no union of the two directions
+    val edgeCaches = caches.filter(_._2 == Seq("src", "dst"))
+    assert(edgeCaches.size == 1, s"caches: ${caches.map(_._2)}")
+    val symPlan = edgeCaches.head._1.logicalPlan
+    assert(!symPlan.exists(_.isInstanceOf[Union]),
+      "the symmetrized edge plan holds a union of the two directions")
+    // … and everything else is the ONE signature cache
+    assert(caches.filterNot(_._2 == Seq("src", "dst")).map(_._2) ==
+      Seq(Seq("doc_id", "sh", "sig")), s"caches: ${caches.map(_._2)}")
+  }
+
+  test("components runs one job outside SQL per round and no identity " +
+      "potential") {
+    import graft.ops.Clusters
+    val nodes = (0L until 8L).toDF("id")
+    val star = (1L until 8L).map(0L -> _).toDF("a", "b")
+    def rounds = PhaseClock.snapshot().getOrElse("cc.rounds", 0.0).toInt
+    val before = rounds
+    var labeled: org.apache.spark.sql.DataFrame = null
+    val Observed(runs, _, bareJobs) = Observed(spark) {
+      labeled = Clusters.components(nodes, "id", star, "a", "b")
+    }
+    val n = rounds - before
+    assert(n == 2, s"a star around the min id takes $n rounds")
+    // the edge fill, then one lineage cut per round — no aggregate
+    // action over the identity labels or any round's labels
+    assert(runs.map(_._1.takeWhile(_ != ' ')) ==
+      "count" +: Seq.fill(n)("localCheckpoint"), s"executions: ${runs.map(_._1)}")
+    // each round's potential is one job over its checkpoint RDD
+    assert(bareJobs == n, s"$bareJobs jobs outside SQL for $n rounds")
+    assert(labeled.as[(Long, Long)].collect().toMap ==
+      (0L until 8L).map(_ -> 0L).toMap)
   }
 
   test("pqTopK: exact reconstruction when every vector is a codeword") {
