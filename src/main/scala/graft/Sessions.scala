@@ -48,6 +48,12 @@ object Sessions {
       // is not built here.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      // create local files without forking `chmod`: with no libhadoop,
+      // Hadoop's stock `file:` filesystem forks one per created dir,
+      // file and `.crc` sidecar (~200 forks per 64-bucket generation);
+      // this one sets the same umasked modes through java.nio
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sink.NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     muteCheckpointUnpersistWarn()

@@ -112,8 +112,7 @@ object AnnQueries {
         |SELECT qid,
         |       CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank,
         |       nid
-        |FROM p QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin),
-      bench = true),
+        |FROM p QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin)),
 
     // Sign-LSH bucketed ANN — the scale path, oracle-checked end to end:
     // the portable multiply-shift hyperplanes let DuckDB replicate the
@@ -755,8 +754,7 @@ object AnnQueries {
         |SELECT qid,
         |       CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank,
         |       nid
-        |FROM p QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin),
-      bench = true),
+        |FROM p QUALIFY rank <= 5 ORDER BY qid, rank""".stripMargin)),
 
     // Filtered vector search — the standard serving feature: top-k
     // restricted to a metadata predicate (label even), evaluated

@@ -198,8 +198,7 @@ object CdcQueries {
         |       n.last_seq AS last_seq
         |FROM net n LEFT JOIN lastrow l ON n.tbl = l.tbl AND n.pk = l.pk
         |WHERE NOT (n.last_op = 'delete' AND n.first_op = 'insert')
-        |ORDER BY tbl, pk""".stripMargin),
-      bench = true),
+        |ORDER BY tbl, pk""".stripMargin)),
 
     // P8b — illegal-transition quarantine (the reference hard-errors on
     // these, batchmessage.go:44-52; the engine dead-letters them).
@@ -256,8 +255,7 @@ object CdcQueries {
         |   OR s.o_totalprice    IS DISTINCT FROM t.o_totalprice
         |   OR s.o_orderdate     IS DISTINCT FROM t.o_orderdate
         |   OR s.o_orderpriority IS DISTINCT FROM t.o_orderpriority
-        |ORDER BY o_orderkey""".stripMargin),
-      bench = true),
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // K3 stage 2 — recheck: keep only mismatches stable at the cutoff
     "k3_recheck" -> QueryDef(
@@ -358,8 +356,7 @@ object CdcQueries {
         |  QUALIFY row_number() OVER (PARTITION BY tbl, pk ORDER BY batch DESC) = 1)
         |SELECT tbl, pk, r_id, r_k, r_v, last_seq FROM resolved
         |WHERE net_op <> 'delete'
-        |ORDER BY tbl, pk""".stripMargin),
-      bench = true),
+        |ORDER BY tbl, pk""".stripMargin)),
 
     // Time-travel read of the delta store: after landing 4 batches,
     // resolve the state AS OF batch 2 — exactly what a reader saw after
@@ -607,8 +604,7 @@ object CdcQueries {
           .select("tbl", "pk", "r_id", "r_k", "r_v", "last_seq")
           .orderBy("tbl", "pk")
       },
-      Some(streamedStateOracle),
-      bench = true),
+      Some(streamedStateOracle)),
 
     // The MAINTENANCE lifecycle on top of stream_sync's: drain the same
     // 4-slice stream into the delta store, then run the config-driven
@@ -640,8 +636,7 @@ object CdcQueries {
           Registry.rmTree(tmp.toFile)
         }
       },
-      Some(streamedStateOracle),
-      bench = true)) ++ moreDefs
+      Some(streamedStateOracle))) ++ moreDefs
 
   /** Oracle for the streamed delta-store state — shared by stream_sync
     * AND delta_snapshot (a snapshot must be invisible to readers):

@@ -133,8 +133,7 @@ object DedupQueries {
         |  CAST(SUM(CASE WHEN crossdup THEN 1 ELSE 0 END) AS BIGINT) AS cross_dup_chunks,
         |  CAST(SUM(CASE WHEN kept THEN 0 ELSE 1 END) AS DOUBLE) / COUNT(*) AS dup_frac,
         |  md5(coalesce(string_agg(chunk, ' ' ORDER BY pos) FILTER (WHERE kept), '')) AS kept_md5
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-      bench = true),
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // Span dedup with CONTENT-DEFINED boundaries: a chunk ends after
     // every token whose md5 starts with nibble 0 or 1 (mean length 8
@@ -344,8 +343,7 @@ object DedupQueries {
         |  FROM cand JOIN s sa ON sa.doc_id = a_id JOIN s sb ON sb.doc_id = b_id)
         |SELECT a_id, b_id, inter, uni FROM v
         |WHERE inter * 1.0 / uni >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin),
-      bench = true),
+        |ORDER BY a_id, b_id""".stripMargin)),
 
     // Incremental admission — the production dedup shape: docs with
     // doc_id >= 400 play an arriving crawl increment, the rest the

@@ -116,8 +116,7 @@ object RelationalQueries {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-01'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
-      bench = true),
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // TPC-H Q3-style: fact-fact join + broadcast dim, top-k revenue.
     "q3_join" -> QueryDef(
@@ -142,8 +141,7 @@ object RelationalQueries {
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |  AND l_shipdate > TIMESTAMP '1998-01-01'
         |GROUP BY l_orderkey, odate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
-      bench = true),
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
 
     // TPC-H Q5-style: 5-way join through the dimension snowflake.
     // nation/region/supplier are broadcast — no shuffle on the dim side.
@@ -175,8 +173,7 @@ object RelationalQueries {
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin),
-      bench = true),
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
 
     // Window functions: per-customer order sequence + running spend.
     "w1_window" -> QueryDef(
@@ -198,8 +195,7 @@ object RelationalQueries {
         |  FROM orders
         |  WINDOW win AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey))
         |SELECT o_custkey, o_orderkey, rn, running FROM w
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
-      bench = true),
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
 
     // Semi/anti joins — the declarative form of K2's inDB existence
     // probe (batchmessage.go:33): which customers have/lack urgent orders.
@@ -353,8 +349,7 @@ object RelationalQueries {
         |s AS (SELECT event_id AS signup_id, user_id, ns FROM e WHERE event_type = 'signup')
         |SELECT p.event_id AS event_id, p.user_id AS user_id, s.signup_id AS signup_id
         |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ns >= s.ns
-        |ORDER BY event_id""".stripMargin),
-      bench = true),
+        |ORDER BY event_id""".stripMargin)),
 
     // Sessionization: 30-minute-gap sessions per user (batch form of the
     // streaming session_window; gap logic on exact nanosecond longs).
@@ -567,10 +562,8 @@ object RelationalQueries {
             .agg(count(lit(1)).as("n_active"))
             .orderBy("cohort", "offset")
           // freeze distributed before the drain dir is removed
-          val keep = java.nio.file.Files.createTempDirectory("graft-reten-res")
+          val keep = Registry.spoolDir("graft-reten-res")
           cells.write.mode("overwrite").parquet(s"$keep/final")
-          Runtime.getRuntime.addShutdownHook(
-            new Thread(() => Registry.rmTree(keep.toFile)))
           s.read.parquet(s"$keep/final").orderBy("cohort", "offset")
         } finally {
           Registry.rmTree(tmp.toFile)
@@ -849,8 +842,7 @@ object RelationalQueries {
       Some("""SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS wstart, event_type,
         |  COUNT(*) AS cnt,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-      bench = true)
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
   )
 
   /** Shared by events_funnel and its config-assembled twin
@@ -941,10 +933,8 @@ object RelationalQueries {
       // a driver collect here becomes driver-resident at 100x users
       // (r16 watch item) — spool to a sibling temp table instead and
       // hand back a reader over it (swept on JVM exit)
-      val keep = java.nio.file.Files.createTempDirectory("graft-funnel-res")
+      val keep = Registry.spoolDir("graft-funnel-res")
       res.write.mode("overwrite").parquet(s"$keep/final")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => Registry.rmTree(keep.toFile)))
       s.read.parquet(s"$keep/final").orderBy("user_id")
     } finally {
       Registry.rmTree(tmp.toFile)

@@ -134,8 +134,7 @@ object TextQueries {
         |SELECT doc_id, n_chars, n_tokens, stop_cnt, sum_len,
         |       stop_cnt / n_tokens AS stop_ratio,
         |       sum_len / n_tokens AS avg_tok_len
-        |FROM c ORDER BY doc_id""".stripMargin),
-      bench = true),
+        |FROM c ORDER BY doc_id""".stripMargin)),
 
     // Intra-doc repetition (duplicate n-gram fractions) — the
     // boilerplate/degeneration filter signal that complements the
@@ -241,8 +240,7 @@ object TextQueries {
         |         md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
         |  FROM c WHERE n_tokens >= 12 AND stop_cnt / n_tokens <= 0.5)
         |SELECT MIN(doc_id) AS keep_id, COUNT(*) AS grp
-        |FROM f GROUP BY fp ORDER BY keep_id""".stripMargin),
-      bench = true),
+        |FROM f GROUP BY fp ORDER BY keep_id""".stripMargin)),
 
     // The SAME clean chain assembled from JSON through the config
     // front-end's quality_filter + exact_dedup stages — crawl-side

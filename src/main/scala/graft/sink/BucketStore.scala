@@ -59,10 +59,12 @@ object BucketStore {
     * `maxBuckets` cores keeps one task per bucket; a smaller one stops
     * paying task scheduling per bucket (on 4 local cores, 64 tasks
     * writing 64 small bucket files took 1.2–1.8 s, the same files from
-    * 4 tasks 0.63 s). Per-file costs remain: on the local FS without
-    * libhadoop, Hadoop forks `chmod` twice per created file, 128 forks
-    * for a 64-bucket generation — only fewer files per generation (a
-    * layout change) would cut that.
+    * 4 tasks 0.63 s). On the local FS without libhadoop, Hadoop's stock
+    * filesystem forked `chmod` about three times per bucket (its dir,
+    * its file, the file's `.crc`); sessions built by [[graft.Sessions]]
+    * set those modes through [[NioLocalFileSystem]] and fork none. What
+    * remains per file is the parquet writer's open/close and the
+    * committer's renames.
     *
     * Completion is checked by the `_SUCCESS` marker the committer writes
     * last; a partial write fails here, before any manifest flip. */

@@ -17,21 +17,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The production session recipe; the one test override is a temp
+    * warehouse dir, passed as the system property `SparkConf` reads. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // keep the test tail readable: the per-round checkpoint unpersists
-    // of the iterative ops otherwise emit thousands of WARN lines that
-    // drown any real failure (the r21 `sbt test` post-mortem)
-    Sessions.muteCheckpointUnpersistWarn()
-    s
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    Sessions.local("4", appName = "graft-test")
   }
 }
