@@ -33,11 +33,11 @@ object Sessions {
       // shuffle constant instead of the input-sized partitioning AQE
       // would pick — the same §2 scale-adaptivity the uncached plans
       // already get. Values are unaffected (partitioning only).
-      // SPARK_GRAFT_CACHED_REPART=0 is the A/B attribution knob: a
-      // paired bench with it toggled prices this flag alone (it was a
-      // bench-only config in r21, confounding the round's deltas).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (sys.env.getOrElse("SPARK_GRAFT_CACHED_REPART", "1") != "0").toString)
+      // Spark's default is false. Priced on a 4-core box, flag off
+      // against on, `corpus_release`, 10 paired seeds: no end-to-end
+      // metric moved outside the on-side's quartiles (rows/s medians
+      // 721 on, 687 off), so it stays on.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // list input paths on the driver, never in a Spark job: a store
       // read hands the scan one path per live chain segment (512 for a
       // 64-bucket delta store at 8 generations), far above the default
@@ -54,6 +54,15 @@ object Sessions {
       // this one sets the same umasked modes through java.nio
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.sink.NioLocalFileSystem].getName)
+      // the same for the `FileContext` API, which every streaming
+      // checkpoint (offsets, commits, source logs) and the state store's
+      // delta files write through: each atomic create+rename otherwise
+      // forks 2 `chmod` and 8 `readlink`, 80–130 ms of each `cdc_sync`
+      // micro-batch on a 4-core box. Chosen over the `FileSystem`-based
+      // checkpoint manager, whose exists-then-rename is not atomic and
+      // so would lose the metadata log's detection of concurrent writers.
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sink.NioLocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     muteCheckpointUnpersistWarn()

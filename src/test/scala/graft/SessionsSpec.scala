@@ -3,24 +3,30 @@ package graft
 import java.net.URI
 import java.nio.file.{Files, Paths, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import java.io.FileNotFoundException
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
+import org.apache.hadoop.util.NativeCodeLoader
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import scala.util.{Failure, Success, Try}
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.logging.log4j.core.filter.CompositeFilter
 import scala.jdk.CollectionConverters._
-import graft.sink.{DeltaStore, NioLocalFileSystem}
+import graft.sink.{DeltaStore, NioLocalFileSystem, NioLocalFs}
 
 /** Pins the session recipe's log muting (Spark's per-unpersist
   * "locally checkpointed … cannot be recomputed" WARN is dropped, and
   * nothing else the `org.apache.spark.rdd` loggers say at WARN is) and
-  * its `file:` filesystem (local writes start no `chmod` process and
-  * leave the same modes and `.crc` sidecars as Hadoop's stock one). */
+  * its `file:` filesystems, for both Hadoop APIs (local writes and the
+  * streaming checkpoint's atomic create+rename start no `chmod` or
+  * `readlink` process, and leave the same modes, `.crc` sidecars and
+  * link status as Hadoop's stock ones). */
 class SessionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,22 +37,6 @@ class SessionsSpec extends SparkSpec {
     val fs = new LocalFileSystem()
     fs.initialize(URI.create("file:///"), hconf)
     fs
-  }
-
-  /** The `chmod` process starts (JFR `jdk.ProcessStart` commands) that
-    * `body` caused. */
-  private def chmodsDuring(body: => Unit): Seq[String] = {
-    val rec = new Recording()
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      try body finally rec.stop()
-      val out = Files.createTempFile("graft-proc", ".jfr")
-      rec.dump(out)
-      try RecordingFile.readAllEvents(out).asScala.toSeq
-        .map(_.getString("command")).filter(_.startsWith("chmod"))
-      finally Files.delete(out)
-    } finally rec.close()
   }
 
   private def mode(p: JPath): Int =
@@ -73,13 +63,13 @@ class SessionsSpec extends SparkSpec {
     val net = (0 until 400).map(i =>
       (s"sbtest${i % 10}", i.toLong, "insert", i.toLong, i, i * 0.5))
       .toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v")
-    val chmods = chmodsDuring {
+    val chmods = Forks.during {
       DeltaStore.append(net, target, Seq("tbl", "pk"), nBuckets = 16,
         batchId = 0)
       // control: the stock filesystem's forks for the same 16 dirs+files
       val stock = stockFs()
       (0 until 16).foreach(b => touchTree(stock, s"$stockRoot/bucket=$b"))
-    }
+    }.filter(_.startsWith("chmod"))
     val buckets = Option(new java.io.File(s"$target/gen-0").list())
       .getOrElse(Array.empty).count(_.startsWith("bucket="))
     assert(buckets === 16)
@@ -132,6 +122,89 @@ class SessionsSpec extends SparkSpec {
       }
     assert(modes.head === modes.last)
     assert(modes.head === Integer.parseInt("1755", 8))
+  }
+
+  /** The session's Hadoop conf with the stock `file:` `FileContext`. */
+  private def stockFcConf(): Configuration = {
+    val c = new Configuration(hconf)
+    c.set("fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
+    c
+  }
+
+  /** One checkpoint write as Spark's metadata logs make it: an atomic
+    * create (temp file, then rename) of `dir/0`. */
+  private def checkpointWrite(conf: Configuration, dir: String): Unit = {
+    val out = CheckpointFileManager.create(new Path(dir), conf)
+      .createAtomic(new Path(s"$dir/0"), false)
+    try out.write("v1\n{}\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  test("the session's file: FileContext is NioLocalFs") {
+    assert(FileContext.getFileContext(new URI("file:///"), hconf)
+      .getDefaultFileSystem.isInstanceOf[NioLocalFs])
+  }
+
+  test("a checkpoint's atomic write starts no readlink or chmod process") {
+    val dir = Files.createTempDirectory("graft-ckpt-nio").toString
+    val stockDir = Files.createTempDirectory("graft-ckpt-stock").toString
+    val stockConf = stockFcConf()
+    assert(FileContext.getFileContext(new URI("file:///"), stockConf)
+      .getDefaultFileSystem.isInstanceOf[LocalFs])
+    val forks = Forks.during {
+      checkpointWrite(hconf, dir)
+      // control: the stock FileContext's forks for the same write
+      checkpointWrite(stockConf, stockDir)
+    }
+    assert(Files.exists(Paths.get(dir, "0")) && Files.exists(Paths.get(dir, ".0.crc")))
+    val ours = Forks.linkOrChmod(forks, dir)
+    assert(ours.isEmpty, s"${ours.size} forks, e.g. ${ours.take(3)}")
+    if (!NativeCodeLoader.isNativeCodeLoaded) {
+      val stock = Forks.linkOrChmod(forks, stockDir)
+      assert(stock.size >= 8, s"the stock FileContext should fork: $stock")
+    }
+  }
+
+  test("getFileLinkStatus gives the stock answers for files, dirs and links") {
+    val root = Files.createTempDirectory("graft-links")
+    val file = Files.write(root.resolve("f"), "abc".getBytes("UTF-8"))
+    val dir = Files.createDirectory(root.resolve("d"))
+    val link = Files.createSymbolicLink(root.resolve("l"), file)
+    val dangling = Files.createSymbolicLink(root.resolve("x"), root.resolve("gone"))
+    val missing = root.resolve("missing")
+    val nio = new NioLocalFileSystem.Raw
+    val stock = new RawLocalFileSystem
+    Seq(nio, stock).foreach(_.initialize(URI.create("file:///"), hconf))
+    def answer(fs: RawLocalFileSystem, p: Path) = Try(fs.getFileLinkStatus(p)).map(st =>
+      (st.isSymlink, if (st.isSymlink) Some(st.getSymlink) else None, st.getLen,
+        st.isDirectory))
+    for (j <- Seq(file, dir, link, dangling, missing);
+         p <- Seq(new Path(j.toString), new Path(j.toUri))) {
+      (answer(nio, p), answer(stock, p)) match {
+        case (Success(a), Success(b)) => assert(a === b, p)
+        case (Failure(a), Failure(b)) =>
+          assert(a.isInstanceOf[FileNotFoundException], p)
+          assert(b.isInstanceOf[FileNotFoundException], p)
+        case (a, b) => fail(s"$p: $a vs the stock $b")
+      }
+    }
+    // the cases above do reach every branch: a link, a dangling link,
+    // and a missing path
+    assert(nio.getFileLinkStatus(new Path(link.toString)).getSymlink ===
+      new Path(file.toUri))
+    assert(nio.getFileLinkStatus(new Path(dangling.toString)).isSymlink)
+    assert(Try(nio.getFileLinkStatus(new Path(missing.toString))).isFailure)
+  }
+
+  test("a checkpoint file's mode equals the stock FileContext's under umask 022") {
+    assert(FsPermission.getUMask(hconf).toShort === Integer.parseInt("022", 8))
+    val dir = Files.createTempDirectory("graft-ckpt-mode").toString
+    val stockDir = Files.createTempDirectory("graft-ckpt-mode-stock").toString
+    checkpointWrite(hconf, dir)
+    checkpointWrite(stockFcConf(), stockDir)
+    Seq("0", ".0.crc").foreach { rel =>
+      assert(mode(Paths.get(dir, rel)) === mode(Paths.get(stockDir, rel)), rel)
+    }
+    assert(rwx(Paths.get(dir, "0")) === "rw-r--r--")
   }
 
   test("the checkpoint-unpersist filter drops only its one message") {

@@ -296,6 +296,33 @@ class StreamingSpec extends SparkSpec {
     assert(state == Map(1L -> 11, 2L -> 20))
   }
 
+  test("a 3-slice parquet_delta drain starts no readlink or chmod process") {
+    // every batch commits offsets, a commit and a source-log entry
+    // through the checkpoint's FileContext, and writes its generation
+    // through the FileSystem API: none of it may fork (graft.sink.NioLocalFs)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-drain-forks")
+    val cfg = s"""{
+      "source": {"type": "events_stream", "dir": "$sf", "slices": 3},
+      "processors": [],
+      "sink": {"type": "parquet_delta", "path": "$tmp/state",
+               "checkpoint": "$tmp/ckpt", "pk": ["tbl", "pk"], "buckets": 8}
+    }"""
+    val forks = Forks.during { graft.pipeline.Pipeline.runStream(spark, cfg) }
+    val ours = Forks.linkOrChmod(forks, tmp.toString)
+    assert(ours.isEmpty, s"${ours.size} forks, e.g. ${ours.take(3)}")
+    val commits = Option(new java.io.File(s"$tmp/ckpt/commits").list())
+      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
+    assert(commits.sorted.toSeq == Seq("0", "1", "2"))
+    val got = graft.sink.DeltaStore.read(spark, s"$tmp/state").get
+      .select("tbl", "pk", "r_k").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> Option(r.get(2))).toMap
+    val want = graft.op.Compactor.compact(graft.source.Changelog.fromEvents(spark, sf))
+      .filter(col("net_op") =!= "delete")
+      .select("tbl", "pk", "r_k").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> Option(r.get(2))).toMap
+    assert(got == want && got.nonEmpty)
+  }
+
   test("streaming dedup admission: arriving docs vs static corpus bands") {
     // the incremental dedup path in its production shape: the corpus's
     // banded signatures are a STATIC table (checkpointed in production),
