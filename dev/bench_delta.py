@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Cross-round bench regression gate (dev tool): diff two BENCH artifacts'
-anchor-normalized per-query series and separate signal from noise — a
+basket-normalized per-query series and separate signal from noise — a
 delta only counts as a regression when it exceeds the query's own
 measured rep spread (plus a floor), otherwise it's ambient load (the r16
 driver-vs-self normalized totals disagreed 1.7x on identical code).
@@ -16,17 +16,19 @@ untouched code). With --new2, every non-noise row is stamped
 
 --isolate[=K] closes the loop the r18 verdict ran BY HAND: every
 credible regression (reproduced + exceeds calibration) is re-measured
-K (default 3) times back-to-back, BENCH_ONLY-isolated with the anchor
-forced on, on the CURRENT build. If the isolated min-norm reaches back
-to the old reading (within the noise floor), the mover is same-code
-wander, not a code regression — stamped per row as `isolated_norms` /
-`isolation_verdict`, and the artifact gains `confirmed_regressions`.
-Requires sbt + the fixture (--isolate-sf, default /root/testdata/sf0.1);
-do NOT run while another sbt is in flight (shared target lock).
+K (default 3) times back-to-back, BENCH_ONLY-isolated with the basket
+forced on (SPARK_GRAFT_BENCH_ANCHOR=1), on the CURRENT build. If the
+isolated min-norm reaches back to the old reading (within the noise
+floor), the mover is same-code wander, not a code regression — stamped
+per row as `isolated_norms` / `isolation_verdict`, and the artifact
+gains `confirmed_regressions`. Requires sbt + the fixture
+(--isolate-sf=DIR, default: the sf0.1 fixture); do NOT run while
+another sbt is in flight (shared target lock).
 
-Accepts the driver wrapper ({"parsed": {...}}), the raw one-line Bench
-stdout, or the r18+ two/three-line stdout (headline first and last,
-full detail line in between — the line carrying queries_norm wins).
+Accepts the harness wrapper ({"parsed": {...}, "tail": ...}), raw Bench
+stdout, or the bench_headline.json sidecar (contract line, then detail
+line). Every JSON object line in the file is merged into one record, so
+the sidecar's rep spreads join its contract line.
 
 Writes a JSON artifact (default BENCH_DELTA.json next to the newer file)
 with per-query norm ratios, spread context, and a `regressions` list,
@@ -38,42 +40,44 @@ FLOOR = 0.15  # ignore <15% moves outright: below rep-to-rep noise floor
 
 
 def norms_of(d):
-    """The per-query normalized series of a bench dict: the r20+ BASKET
-    normalization when stamped (median of five heterogeneous probe
-    ratios — robust to a wandering element), else the legacy single-
-    query anchor norm (r19 watched that anchor drift 2.2x across runs
-    and invert the suite story)."""
-    return d.get("queries_basket") or d.get("queries_norm")
+    """The per-query normalized series of a bench record: queries_min /
+    basket_scale (median of five heterogeneous probe ratios, robust to
+    one wandering element). None for an uncalibrated run."""
+    mins, scale = d.get("queries_min"), d.get("basket_scale")
+    if not mins or not scale or scale <= 0:
+        return None
+    return {q: v / scale for q, v in mins.items()}
 
 
-def parse_bench_stdout(txt):
-    """normalized-series-carrying dict from raw Bench stdout (any line
-    shape). sbt wraps forked stdout as "[info] {...}" — strip the logger
-    prefix (the r19 --isolate runs all parsed as empty without this)."""
-    best = None
+def json_objects(txt):
+    """Every JSON object that sits on a line of its own in `txt`."""
     for line in txt.splitlines():
         line = line.strip()
-        if line.startswith("[info] "):
-            line = line[len("[info] "):]
         if not line.startswith("{"):
             continue
         try:
             d = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if isinstance(d, dict) and norms_of(d):
-            best = d
-    return best
+        if isinstance(d, dict):
+            yield d
+
+
+def merged(dicts):
+    out = {}
+    for d in dicts:
+        out.update(d)
+    return out
 
 
 def isolate(queries, sf, k):
     """Re-measure `queries` K times back-to-back, BENCH_ONLY-isolated
-    with the anchor forced on; return {query: [norm, ...]}."""
+    with the basket forced on; return {query: [norm, ...]}."""
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sf,
                SPARK_GRAFT_BENCH_ONLY=",".join(queries),
                SPARK_GRAFT_BENCH_ANCHOR="1")
-    norms = {q: [] for q in queries}  # (normalizer kind, value) per rep
+    norms = {q: [] for q in queries}
     for i in range(k):
         print(f"  isolation run {i + 1}/{k} ({','.join(queries)}) ...",
               flush=True)
@@ -81,96 +85,51 @@ def isolate(queries, sf, k):
                            capture_output=True, text=True, env=env,
                            cwd=os.path.dirname(os.path.dirname(
                                os.path.abspath(__file__))))
-        d = parse_bench_stdout(r.stdout)
-        if d is None:
-            print(f"  isolation run {i + 1} produced no parseable "
-                  f"queries_norm line (rc={r.returncode}) — skipped",
+        n = norms_of(merged(json_objects(r.stdout)))
+        if n is None:
+            print(f"  isolation run {i + 1} produced no calibrated "
+                  f"contract line (rc={r.returncode}) — skipped",
                   file=sys.stderr)
             continue
-        # tag each rep with the series it supplied: a rep whose basket
-        # failed soft (bScale <= 0) falls back to the anchor series,
-        # whose unit is ~4x different — mixing it into basket reps
-        # would skew the median/min verdict (mirror classify()'s
-        # both-sides-basket guard by keeping units per rep explicit)
-        kind = "basket" if d.get("queries_basket") else "anchor"
         for q in queries:
-            v = (norms_of(d) or {}).get(q)
-            if v is not None:
-                norms[q].append((kind, v))
-    # keep only reps using the majority normalizer per query; return the
-    # kept kind alongside so the caller can refuse a cross-normalizer
-    # comparison (ADVICE r21: anchor-kind reps vs a basket old_norm is a
-    # ~4x unit mismatch — the verdict would be meaningless)
-    out = {}
-    for q, reps in norms.items():
-        if not reps:
-            out[q] = (None, [])
-            continue
-        kinds = [kd for kd, _ in reps]
-        maj = max(set(kinds), key=kinds.count)
-        dropped = len(reps) - kinds.count(maj)
-        if dropped:
-            print(f"  {q}: dropped {dropped} isolation rep(s) on the "
-                  f"minority normalizer (kept {maj})", file=sys.stderr)
-        out[q] = (maj, [v for kd, v in reps if kd == maj])
-    return out
+            if q in n:
+                norms[q].append(n[q])
+    return norms
 
 
 def load(p):
-    """Return the bench dict that carries queries_norm, from any of the
-    artifact shapes: driver wrapper ({"parsed": ..., "tail": ...}),
-    raw one-line stdout, or the r18+ two-line stdout. The dict with
-    queries_norm always wins — a wrapper whose `parsed` is the short
-    headline line must not shadow a detail line still recoverable from
-    its `tail` capture."""
+    """One bench record from any artifact shape (see the module doc):
+    the wrapper's own keys, its `parsed` dict, then every JSON object
+    line of the file or of the wrapper's `tail` capture, merged."""
     txt = open(p).read()
-    cands, line_sources = [], [txt]
+    dicts, line_sources = [], [txt]
     try:
         d = json.loads(txt)
         if isinstance(d, dict):
+            dicts.append(d)
             if isinstance(d.get("parsed"), dict):
-                cands.append(d["parsed"])
-            cands.append(d)
+                dicts.append(d["parsed"])
             if isinstance(d.get("tail"), str):
                 line_sources.append(d["tail"])
     except json.JSONDecodeError:
         pass
     for src in line_sources:
-        for line in src.splitlines():
-            line = line.strip()
-            if not line.startswith("{"):
-                continue
-            try:
-                d = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if isinstance(d, dict):
-                cands.append(d)
-    for d in cands:
-        if norms_of(d):
-            return d
-    if not cands:
+        dicts.extend(json_objects(src))
+    if not dicts:
         sys.exit(f"{p}: no parseable bench JSON found")
-    return cands[0]
+    return merged(dicts)
 
 
 def classify(old, new):
-    """Median-centered, spread-arbitrated per-query verdicts. Prefers
-    the basket series when BOTH sides carry it; a basket-vs-anchor mix
-    falls back to the anchor series each side is guaranteed to have
-    (the median-centering cancels any uniform normalizer difference,
-    but mixing normalizers WITHIN one comparison would not)."""
-    if old.get("queries_basket") and new.get("queries_basket"):
-        on, nn = old["queries_basket"], new["queries_basket"]
-    else:
-        on, nn = old.get("queries_norm"), new.get("queries_norm")
+    """Median-centered, spread-arbitrated per-query verdicts."""
+    on, nn = norms_of(old), norms_of(new)
     if not on or not nn:
-        sys.exit("both artifacts need queries_basket/queries_norm "
-                 "(calibrated full-suite runs)")
+        sys.exit("both artifacts need queries_min and basket_scale "
+                 "(basket-calibrated runs)")
     spread = new.get("queries_spread", {})
     shared = [q for q in sorted(set(on) & set(nn)) if on[q] > 0]
     raw = {q: nn[q] / on[q] for q in shared}
-    # median-center: when the WHOLE suite moved together, that's anchor
+    # median-center: when the WHOLE suite moved together, that's basket
     # miscalibration / ambient load, not code (two same-code r16
     # self-runs showed a uniform 10-15% shift that classified 98 queries
     # as "improved"). A code change moves ITS queries against the
@@ -244,10 +203,7 @@ def main():
     imps = [r for r in rows if r["verdict"] == "improvement"]
     art = {"old": os.path.basename(old_p), "new": os.path.basename(new_p),
            "old_commit": old.get("commit"), "new_commit": new.get("commit"),
-           "anchor_old": old.get("anchor_min"), "anchor_new": new.get("anchor_min"),
            "basket_old": old.get("basket_scale"), "basket_new": new.get("basket_scale"),
-           "normalizer": ("basket" if old.get("queries_basket")
-                          and new.get("queries_basket") else "anchor"),
            "median_raw_ratio": round(med, 3),
            "n_compared": len(rows), "n_regressions": len(regs),
            "n_improvements": len(imps), "rows": rows,
@@ -275,25 +231,18 @@ def main():
         by_q = {r["query"]: r for r in rows}
         confirmed = []
         for q in creds:
-            kind, ns = iso.get(q, (None, []))
+            ns = iso.get(q, [])
             r = by_q[q]
             r["isolated_norms"] = [round(n, 3) for n in ns]
             if not ns:
                 r["isolation_verdict"] = "no-data"
                 confirmed.append(q)  # fail loud: unmeasured stays accused
-            elif kind != art["normalizer"]:
-                # old_norm came from the other normalizer series (~4x
-                # different unit): comparing across normalizers would be
-                # meaningless — stamp it and keep the query accused
-                r["isolation_verdict"] = f"unit-mismatch({kind} vs " \
-                                         f"{art['normalizer']})"
-                confirmed.append(q)
             elif min(ns) <= r["old_norm"] * (1 + FLOOR):
                 r["isolation_verdict"] = "same-code-wander"
             else:
                 r["isolation_verdict"] = "confirmed"
                 confirmed.append(q)
-        art["isolated"] = {q: [round(n, 3) for n in iso.get(q, (None, []))[1]]
+        art["isolated"] = {q: [round(n, 3) for n in iso.get(q, [])]
                            for q in creds}
         art["confirmed_regressions"] = confirmed
     elif iso_k:

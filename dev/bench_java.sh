@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# No-sbt bench/probe launcher over the compiled classpath — the A/B
+# No-sbt launcher for the mains over the compiled classpath — the A/B
 # methodology's fast path (sbt adds ~25 s JVM+build overhead per leg and
 # its logger used to swallow the headline; see bench-ab memo). Replicates
 # build.sbt's fork options (add-opens list, UTC, UI off, heap).

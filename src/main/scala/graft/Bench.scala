@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
+import scala.collection.immutable.ListMap
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR,
   * materializing results through the noop sink (full evaluation — the
@@ -21,47 +22,23 @@ import graft.queries.Registry
 object Bench {
   // shared engine session recipe (Sessions.local): r21 carried the
   // cached-plan-repartitioning flag here only; it now lives in the one
-  // place every entrypoint (Run/Verify/probes) builds its session from,
+  // place every entrypoint (Run/Verify/Bench) builds its session from,
   // so the bench measures exactly the session production runs.
   private def newSession(cpus: String): SparkSession =
     Sessions.local(cpus, appName = "graft-bench")
 
-  /** Calibration anchor: a fixed, data-independent workload (codegen'd
-    * hash agg over a 40M-row range, one 9973-key shuffle) timed in its
-    * own session. Query timings can only be compared ACROSS bench runs
-    * if the machine was equally loaded in both; round 10 saw 2x min
-    * drift on three untouched queries that the within-run median/min
-    * guard cannot flag (ambient load inflates every rep alike). The
-    * anchor's min is that cross-run control: if it drifts, the run's
-    * absolute numbers are inflated by the environment, not the code.
-    * KEPT for artifact continuity, but the headline normalizer is the
-    * BASKET below — r19 watched this single number wander 0.239→0.521
-    * across runs (+20% within ONE run), turning a 12%-faster suite into
-    * a phantom 57% driver-facing regression. One probe point cannot
-    * calibrate a 150-query suite. */
-  private def anchorMin(cpus: String): Double = {
-    val spark = newSession(cpus)
-    import org.apache.spark.sql.functions._
-    def runOne(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 40000000L, 1, 32)
-        .select((col("id") % 9973).as("k"), col("id").as("v"))
-        .groupBy("k").agg(sum("v"))
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    runOne() // JIT/codegen warmup, unmeasured
-    val m = (1 to 3).map(_ => runOne()).min
-    spark.stop()
-    m
-  }
-
-  /** Calibration BASKET (r19 verdict): five heterogeneous cheap probes
+  /** Calibration BASKET, the bench's one cross-run normalizer: query
+    * timings can only be compared ACROSS runs if the machine was equally
+    * loaded in both (round 10 saw 2x min drift on three untouched
+    * queries that the within-run median/min guard cannot flag). Five
+    * heterogeneous cheap probes
     * — codegen scan+filter, hash-agg shuffle, sort-merge join, window,
     * and a real parquet scan of the fixture — each normalized by a
     * PINNED per-element reference time and reduced by the MEDIAN of
     * the five ratios. The median of five near-1 ratios tolerates two
-    * ambient outliers; the single anchor tolerated none. Measured at
+    * ambient outliers; a single-workload anchor tolerated none (r19
+    * watched one wander 0.239→0.521 across runs and turn a 12%-faster
+    * suite into a phantom 57% regression). Measured at
     * START / MIDDLE / END of the suite (per-element min across the
     * three checkpoints = this run's machine floor), so a load burst in
     * one phase of the run cannot poison the whole normalization. */
@@ -201,15 +178,15 @@ object Bench {
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val phases = scala.collection.mutable.Map.empty[String, Map[String, Double]]
     // cross-run calibration only matters for full-suite comparisons:
-    // filtered iteration runs (BENCH_ONLY) skip it unless forced on
-    val anchor = sys.env.get("SPARK_GRAFT_BENCH_ANCHOR")
+    // filtered iteration runs (BENCH_ONLY) skip the basket unless
+    // SPARK_GRAFT_BENCH_ANCHOR=1 forces it on
+    val basket = sys.env.get("SPARK_GRAFT_BENCH_ANCHOR")
       .map(_ == "1").getOrElse(only.isEmpty)
-    val anchorStart = if (anchor) anchorMin(cpus) else -1.0
     val basketPoints = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    if (anchor) basketPoints += basketPoint(cpus, sfDir)
+    if (basket) basketPoints += basketPoint(cpus, sfDir)
     val middleAt = ordered.size / 2
     val results = ordered.zipWithIndex.flatMap { case ((name, d), qi) =>
-      if (anchor && qi == middleAt && qi > 0)
+      if (basket && qi == middleAt && qi > 0)
         basketPoints += basketPoint(cpus, sfDir)
       val spark = newSession(cpus)
       // A query that THROWS must not record its fast error path as a
@@ -291,114 +268,65 @@ object Bench {
       System.err.println(f"[bench] NOISY $n: median $med%.2fs > 1.5x min $mn%.2fs" +
         " — trust the min; not a regression signal")
     }
-    val qs = results.map { case (k, (med, _, _)) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val qsMin = results.map { case (k, (_, mn, _)) => "\"" + k + "\":" + mn }
-      .mkString("{", ",", "}")
-    val qsSpread = results.map { case (k, (_, _, sp)) =>
-      "\"" + k + "\":" + f"$sp%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
     val totalMin = results.map(_._2._2).sum
-    val anchorEnd = if (anchor) anchorMin(cpus) else -1.0
-    if (anchor) basketPoints += basketPoint(cpus, sfDir)
+    if (basket) basketPoints += basketPoint(cpus, sfDir)
     val bScale = basketScale(basketPoints.toSeq)
+    def rounded(x: Double, places: Int): Double =
+      BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def perQuery(f: ((Double, Double, Double)) => Double) =
+      ListMap(results.map { case (k, v) => k -> f(v) }: _*)
+    // BASKET normalization (see basketRefs): total_min / basket_scale is
+    // the run's machine-speed-independent work unit; per-query
+    // queries_min / basket_scale is what dev/bench_delta.py compares.
+    val basketKeys =
+      if (bScale > 0) ListMap("basket_scale" -> rounded(bScale, 4),
+        "total_min_basket" -> rounded(totalMin / bScale, 2))
+      else ListMap.empty[String, Any]
     // The one baseline-transferable number (BASELINE.md): the reference's
     // batch apply sustains ~130K events/s; compare p8_compact's min-rep
     // throughput at this SF. baseline_ratio = our_time / baseline_time —
     // ≤1.0 beats the reference, the round gate is ≤2.0.
-    val baselineJson = results.toMap.get("p8_compact").map { case (_, mn, _) =>
+    val baselineKeys = results.toMap.get("p8_compact").map { case (_, mn, _) =>
       // row count straight from the parquet footers — no SparkSession
       // spin-up just to count (and no hardcoded core count to get wrong)
       val nEvents = parquetRowCount(s"$sfDir/events.parquet")
-      val eps = nEvents / math.max(mn, 1e-9)
-      f""""p8_events":$nEvents,"p8_events_per_sec":${eps}%.1f,""" +
-        f""""baseline_ratio":${mn * 130000.0 / nEvents}%.3f,"""
-    }.getOrElse("")
-    // Anchor-normalized ratios: query_min / anchor_min is a machine-speed-
-    // independent work unit, so ROUND-OVER-ROUND comparisons read these,
-    // not raw seconds — r15's headline moved −9.3% while the anchor
-    // itself drifted +28%, and nothing in the artifact said which effect
-    // was code. The smaller of the two anchor runs is the run's best
-    // estimate of the machine's floor (ambient load only ever inflates).
-    val anchorRef =
-      if (anchorStart > 0 && anchorEnd > 0) math.min(anchorStart, anchorEnd)
-      else -1.0
-    val normJson = if (anchorRef > 0) {
-      val qn = results.map { case (k, (_, mn, _)) =>
-        "\"" + k + "\":" + f"${mn / anchorRef}%.3f" }.mkString("{", ",", "}")
-      s""""anchor_min":$anchorRef,"queries_norm":$qn,""" +
-        f""""total_min_norm":${totalMin / anchorRef}%.2f,"""
-    } else ""
-    // BASKET normalization (the r20 headline normalizer — see
-    // basketRefs): per-query min / basket_scale, plus the raw per-
-    // checkpoint element times so a wandering element is attributable
-    // from the artifact alone (the r19 anchor's failure mode).
-    val basketJson = if (bScale > 0) {
-      val qb = results.map { case (k, (_, mn, _)) =>
-        "\"" + k + "\":" + f"${mn / bScale}%.3f" }.mkString("{", ",", "}")
-      val pts = basketPoints.zipWithIndex.map { case (p, i) =>
-        val label = if (i == 0) "start"
-          else if (i == basketPoints.length - 1) "end" else s"mid$i"
-        "\"" + label + "\":" + p.toSeq.sortBy(_._1).map { case (e, v) =>
-          "\"" + e + "\":" + f"$v%.4f" }.mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
-      f""""basket_scale":$bScale%.4f,"queries_basket":$qb,""" +
-        f""""total_min_basket":${totalMin / bScale}%.2f,""" +
-        s""""basket_points":$pts,"""
-    } else ""
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val noisyJson = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val phasesJson = phases.toSeq.sortBy(_._1).map { case (q, ps) =>
-      "\"" + q + "\":" + ps.toSeq.sortBy(_._1)
-        .map { case (p, v) => "\"" + p + "\":" + v }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // Output order: short headline FIRST (totals up front for a human
-    // reading the log top-down), full detail second, and the driver-
-    // contract line LAST (the driver parses the FINAL stdout line and
-    // keeps only a 2000-char tail of the capture; see `contract` above).
-    // dev/bench_delta.py accepts any of the shapes.
-    val normHead = if (anchorRef > 0)
-      f""""total_min_norm":${totalMin / anchorRef}%.2f,""" else ""
-    val basketHead = if (bScale > 0)
-      f""""basket_scale":$bScale%.4f,"total_min_basket":${totalMin / bScale}%.2f,"""
-      else ""
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""total_min":$totalMin,"n_queries":${results.size},""" +
-      s""""anchor_min":$anchorRef,"commit":"$commitSha",""" +
-      normHead + basketHead + baselineJson +
-      s""""failed":$failedJson,"sf":"$sfDir"}"""
-    // Driver-contract line (printed LAST): the driver parses the final
-    // stdout line and expects the per-query map IN it —
-    // {"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}. The
-    // short headline above never carried "queries" (it lived only in the
-    // detail line), so even a clean last line would have left PERF's
-    // per_query empty. queries = per-query MEDIAN seconds (the timing
-    // the "value" total sums); queries_min rides along because min-of-
-    // reps is the noise-robust number every cross-round analysis uses.
-    val contract = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$qs,"queries_min":$qsMin,""" +
-      s""""total_min":$totalMin,"n_queries":${results.size},""" +
-      s""""anchor_min":$anchorRef,"commit":"$commitSha",""" +
-      normHead + basketHead + baselineJson +
-      s""""failed":$failedJson,"sf":"$sfDir"}"""
-    val detail =
-      s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""queries_min":$qsMin,"queries_spread":$qsSpread,""" +
-      s""""total_min":$totalMin,"noisy":$noisyJson,""" +
-      s""""phases":$phasesJson,"anchor_min_start":$anchorStart,""" +
-      s""""anchor_min_end":$anchorEnd,"commit":"$commitSha",""" +
-      normJson + basketJson + baselineJson +
-      s""""failed":$failedJson,"sf":"$sfDir"}"""
-    println(headline)
-    println(detail)
+      ListMap("p8_events" -> nEvents,
+        "p8_events_per_sec" -> rounded(nEvents / math.max(mn, 1e-9), 1),
+        "baseline_ratio" -> rounded(mn * 130000.0 / nEvents, 3))
+    }.getOrElse(ListMap.empty[String, Any])
+    // Contract line, the LAST stdout line (a bench run's consumer
+    // parses the final stdout line). queries = per-query MEDIAN seconds
+    // (the timing the "value" total sums); queries_min rides along
+    // because min-of-reps is the noise-robust number every cross-round
+    // analysis uses.
+    val contract = Json.write(ListMap[String, Any](
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> perQuery(_._1), "queries_min" -> perQuery(_._2),
+      "total_min" -> totalMin, "n_queries" -> results.size,
+      "commit" -> commitSha) ++ basketKeys ++ baselineKeys ++ ListMap(
+      "failed" -> failed.toList, "sf" -> sfDir))
+    // Detail for attribution, in the sidecar only: rep spreads, the
+    // NOISY names, lifecycle phase splits, and the raw per-checkpoint
+    // basket element times (a wandering element is attributable from
+    // the artifact alone).
+    val points = ListMap(basketPoints.zipWithIndex.map { case (p, i) =>
+      val label = if (i == 0) "start"
+        else if (i == basketPoints.length - 1) "end" else s"mid$i"
+      label -> ListMap(p.toSeq.sortBy(_._1).map { case (e, v) => e -> rounded(v, 4) }: _*)
+    }.toSeq: _*)
+    val detail = Json.write(ListMap(
+      "metric" -> "total_detail",
+      "queries_spread" -> perQuery(v => rounded(v._3, 3)),
+      "noisy" -> noisy,
+      "phases" -> ListMap(phases.toSeq.sortBy(_._1).map { case (q, ps) =>
+        q -> ListMap(ps.toSeq.sortBy(_._1): _*) }: _*),
+      "basket_points" -> points))
     println(contract)
-    // Sidecar artifact (r19 verdict): belt-and-braces against any stdout
-    // capture/truncation trouble — the file is unambiguous: contract
-    // line first, full detail second. (The stdout contract itself is
-    // restored in build.sbt: run/outputStrategy := StdoutOutput passes
-    // the forked JVM's output through raw and Global/showSuccess drops
-    // sbt's "[success] Total time …" trailer, so the contract line above
-    // IS the last stdout line of `sbt "runMain graft.Bench"`.)
+    // Sidecar: contract line first, detail second (dev/bench_delta.py
+    // reads both). On stdout the contract line stays last: build.sbt
+    // passes the forked JVM's stdout through raw (run/outputStrategy)
+    // and drops sbt's "[success] Total time" trailer (showSuccess).
     try {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_headline.json"),

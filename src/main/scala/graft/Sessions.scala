@@ -7,7 +7,7 @@ import org.apache.logging.log4j.core.filter.{AbstractFilter, CompositeFilter}
 import org.apache.spark.sql.SparkSession
 
 /** ONE local-session recipe shared by every entrypoint (Run, Verify,
-  * Bench, StreamBench, the probes): the bench must measure the same
+  * Bench, Explain, EntrySmoke): the bench must measure the same
   * session production runs — r21 carried
   * `canChangeCachedPlanOutputPartitioning` in Bench only, so the bench
   * timed plans Run/Verify would never produce (and the r20→r21 deltas

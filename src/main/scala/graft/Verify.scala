@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,29 +37,19 @@ object Verify {
       spark.catalog.clearCache()
       graft.ops.GraphBlocks.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes every control char: a tab or CR in an oracle's SQL
+    // must not make the comparer's json.load fail and silently drop
+    // every correctness check
+    val json = Json.write(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // declared == checked gate: a query that errors must be LOUD. A
     // two-round blind spot (r12-r13) happened because errored queries
     // simply vanished from the correctness denominator — stamp the split
     // into the artifact dir and fail the run so nothing downstream can
     // mistake "fewer rows checked" for "all green".
-    val status = s"""{"declared": ${selected.size}, """ +
-      s""""checked": ${selected.size - failed.size}, """ +
-      s""""failed": ${failed.toList.sorted.map(q).mkString("[", ",", "]")}}"""
+    val status = Json.write(ListMap("declared" -> selected.size,
+      "checked" -> (selected.size - failed.size),
+      "failed" -> failed.toList.sorted))
     Files.writeString(Paths.get(s"$outDir/verify_status.json"), status)
     spark.stop()
     if (failed.nonEmpty) {

@@ -349,38 +349,18 @@ object Dedup {
     * A dup chunk shorter than `minRemoveTokens` is kept (the CDC
     * short-segment guard; 1 = remove any dup).
     *
-    * `hotMin > 0` switches on the manual hot-digest split for the flag
-    * join: digests with ≥ hotMin occurrences (boilerplate chunks — at
-    * most |chunks|/hotMin of them, so the set broadcasts at any corpus
-    * size) take a BROADCAST keeper join, the rest shuffle with no hot
-    * key left in the exchange. 0 = single shuffle join (AQE's skew
-    * split is the safety net); the SkewProbe prices the two against
-    * each other (`skew_spans_hotchunk` split fields). */
+    * The flag join is one shuffle join; a hot (boilerplate) digest is
+    * left to AQE's skew split. A manual broadcast hot/cold split was
+    * slower with 30% hot chunks (`split_gain` 0.97 in
+    * `skew_spans_hotchunk` k=50, `SCALEPROBE_r17.jsonl`). */
   private def dedupChunkFrame(chunks: DataFrame, idCol: String,
-      minRemoveTokens: Int = 1, hotMin: Long = 0L): DataFrame = {
+      minRemoveTokens: Int = 1): DataFrame = {
     val docBase = col("_enc") - col("pos") // = id << posBits, sign-safe
     val shortGuard =
       if (minRemoveTokens <= 1) lit(false)
       else size(split(col("chunk"), " ")) < minRemoveTokens
-    val flagged =
-      if (hotMin <= 0L) {
-        val keepers = chunks.groupBy("_h").agg(min(col("_enc")).as("_first"))
-        chunks.join(keepers, "_h")
-      } else {
-        val keepers = chunks.groupBy("_h")
-          .agg(min(col("_enc")).as("_first"), count(lit(1)).as("_n"))
-        val hotK = keepers.filter(col("_n") >= hotMin).drop("_n")
-        val coldK = keepers.filter(col("_n") < hotMin).drop("_n")
-        // hot leg: map-only broadcast join; cold leg: the hot digests
-        // are carved OUT by a broadcast anti-join first, so its shuffle
-        // has no hot key for AQE to rescue
-        val hotLeg = chunks.join(broadcast(hotK), "_h")
-        val coldLeg = chunks
-          .join(broadcast(hotK.select(col("_h"))), Seq("_h"), "left_anti")
-          .join(coldK, "_h")
-        hotLeg.unionByName(coldLeg)
-      }
-    val out = flagged
+    val keepers = chunks.groupBy("_h").agg(min(col("_enc")).as("_first"))
+    val out = chunks.join(keepers, "_h")
       .withColumn("_kept", col("_enc") === col("_first") || shortGuard)
       // _cross only on REMOVED chunks: with the guard off this is
       // unchanged (a kept first occurrence is never cross), with the
@@ -390,15 +370,6 @@ object Dedup {
         (col("_first") < docBase || col("_first") >= docBase + (1L << chunkPosBits)))
     perDocRebuild(out, idCol)
   }
-
-  /** [[chunkDedup]] with the manual hot-digest split (see
-    * [[dedupChunkFrame]]); identical output, different physical plan —
-    * exists to be PRICED against the AQE-split default under the
-    * hot-chunk skew probe. */
-  def chunkDedupHotSplit(df: DataFrame, idCol: String, textCol: String,
-      chunkTokens: Int = 8, hotMin: Long = 1000L): DataFrame =
-    dedupChunkFrame(chunkFrame(df, idCol, textCol, chunkTokens), idCol,
-      hotMin = hotMin)
 
   private[ops] val chunkPosBits = 20
 
@@ -480,11 +451,12 @@ object Dedup {
     * a 1-2-token segment that recurs anywhere ("of the", a lone
     * stopword between two cut tokens) is removed even though it sits in
     * no ≥L-token duplicated span — measured against
-    * [[exactSpanCover]] on the sf fixture, 62% of the default chunker's
-    * removed tokens are such sub-span fragments (graft.SpanPrecision).
-    * With the guard at 4, over-removal drops to 0.4% at a recall cost
-    * of 0.92 → 0.77. Default 1 keeps the historical behavior (and the
-    * oracle-pinned gate semantics). */
+    * [[exactSpanCover]] on the sf0.01 fixture, 64% of the default
+    * chunker's removed tokens are such sub-span fragments. With the
+    * guard at 4, over-removal drops to 0% at a recall cost of
+    * 0.91 → 0.77 (`cdc01` vs `cdc01_min4`, `SPANPRECISION_r16.jsonl`).
+    * Default 1 keeps the historical behavior (and the oracle-pinned
+    * gate semantics). */
   def chunkDedupCDC(df: DataFrame, idCol: String, textCol: String,
       cutNibbles: String = "01", minRemoveTokens: Int = 1): DataFrame =
     // lazy and uncached for the same reasons as [[chunkDedup]]
@@ -562,9 +534,10 @@ object Dedup {
     *
     * Cost vs the chunkers: L× the gram rows (stride 1 vs stride L) and
     * one per-doc window — the known price of exactness; fixed/CDC
-    * chunking are the cheap approximations and
-    * `graft.SpanPrecision` measures their recall/over-removal against
-    * this operator.
+    * chunking are the cheap approximations. Scored against this
+    * operator on the sf0.01 fixture, fixed 8-token chunks recall 0.92
+    * of the covered tokens at 2.8% over-removal
+    * (`SPANPRECISION_r16.jsonl`).
     *
     * Output per doc: `n_toks`, `dup_cover` (tokens covered), `dup_frac`,
     * `kept_md5` (md5 of the surviving tokens space-joined in order —
@@ -586,10 +559,8 @@ object Dedup {
 
   /** The per-token form [[exactSpanCover]] aggregates: one row per
     * (doc, token position) with `_covered` = the token sits inside a
-    * ≥L-token window seen earlier in corpus order. `graft.SpanPrecision`
-    * reads this as the ground-truth removal set when scoring the
-    * chunkers' recall/over-removal. */
-  private[graft] def exactTokenCover(df: DataFrame, idCol: String,
+    * ≥L-token window seen earlier in corpus order. */
+  private def exactTokenCover(df: DataFrame, idCol: String,
       textCol: String, minTokens: Int): DataFrame = {
     require(minTokens >= 1, s"minTokens must be positive, got $minTokens")
     val L = minTokens
@@ -625,45 +596,6 @@ object Dedup {
       .withColumn("_covered",
         col("_runstart").isNotNull && col("_runstart") + L > col("_p"))
       .select(col(idCol), col("_p"), col("tok"), col("_covered"))
-  }
-
-  /** Token positions the FIXED chunker removes: every token of every
-    * non-first-occurrence chunk. (id, _p) rows — the comparison frame
-    * `graft.SpanPrecision` scores against [[exactTokenCover]]. */
-  private[graft] def chunkTokenRemoved(df: DataFrame, idCol: String,
-      textCol: String, chunkTokens: Int): DataFrame = {
-    val chunks = chunkFrame(df, idCol, textCol, chunkTokens)
-    val keepers = chunks.groupBy("_h").agg(min(col("_enc")).as("_first"))
-    chunks.join(keepers, "_h")
-      .filter(col("_enc") =!= col("_first"))
-      .select(col(idCol), col("pos"),
-        posexplode(split(col("chunk"), " ")).as(Seq("_i", "_t")))
-      .select(col(idCol),
-        (col("pos") * chunkTokens + col("_i")).cast("long").as("_p"))
-  }
-
-  /** Token positions the CDC chunker removes — segment token offsets
-    * derived from a running sum of segment sizes in segment order.
-    * `minRemoveTokens` > 1 applies the short-segment guard of
-    * [[chunkDedupCDC]]'s `minRemoveTokens` knob: dup segments shorter
-    * than the bound are kept. */
-  private[graft] def cdcTokenRemoved(df: DataFrame, idCol: String,
-      textCol: String, cutNibbles: String,
-      minRemoveTokens: Int = 1): DataFrame = {
-    val chunks = cdcChunkFrame(df, idCol, textCol, cutNibbles)
-      .withColumn("_sz", size(split(col("chunk"), " ")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy("pos")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val withStart = chunks
-      .withColumn("_startoff", coalesce(sum(col("_sz")).over(w), lit(0L)))
-    val keepers = withStart.groupBy("_h").agg(min(col("_enc")).as("_first"))
-    withStart.join(keepers, "_h")
-      .filter(col("_enc") =!= col("_first") &&
-        col("_sz") >= minRemoveTokens)
-      .select(col(idCol), col("_startoff"),
-        posexplode(split(col("chunk"), " ")).as(Seq("_i", "_t")))
-      .select(col(idCol), (col("_startoff") + col("_i")).cast("long").as("_p"))
   }
 
   /** Group-level MinHash union sketches + pairwise estimated Jaccard —

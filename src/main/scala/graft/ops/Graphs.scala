@@ -282,7 +282,7 @@ object Graphs {
 
   /** The canonical undirected simple graph under (srcCol, dstCol):
     * direction, duplicate edges, and self-loops collapse away. */
-  private[graft] def simpleUndirected(edges: DataFrame, srcCol: String,
+  private def simpleUndirected(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
     edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
@@ -292,7 +292,7 @@ object Graphs {
       .distinct()
 
   /** (n, degree) over the simple graph. */
-  private[graft] def degreesOf(und: DataFrame): DataFrame =
+  private def degreesOf(und: DataFrame): DataFrame =
     und.select(col("u").as("n"))
       .unionByName(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("degree"))
@@ -302,7 +302,7 @@ object Graphs {
     * so the wedge self-join can compare orientation order without a
     * third join. Per-source out-degree under this orientation is
     * O(√|E|) for ANY graph — the hub-wedge bound. */
-  private[graft] def orientEdges(und: DataFrame, deg: DataFrame): DataFrame =
+  private def orientEdges(und: DataFrame, deg: DataFrame): DataFrame =
     und
       .join(deg.select(col("n").as("u"), col("degree").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("degree").as("dv")), "v")
@@ -440,19 +440,8 @@ object Graphs {
     * rounds is Σ|frontier_i| = |reached| rows. Same per-round
     * lineage-cut discipline as [[pageRank]]. */
   def bfsLevels(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame =
-    bfsLevelsImpl(edges, srcCol, dstCol, seeds, seedCol, maxDepth,
-      bfsRoundFrame)
-
-  /** [[bfsLevels]] with a pluggable round body — the SkewProbe seam
-    * for pricing alternative round plans (salted distinct, forced
-    * join strategies) against the default without forking the loop. */
-  private[graft] def bfsLevelsImpl(edges: DataFrame, srcCol: String,
-      dstCol: String, seeds: DataFrame, seedCol: String, maxDepth: Int,
-      round: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)
-      : DataFrame = {
+      seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"bfsLevels needs maxDepth >= 0 (got $maxDepth)")
-    val spark = edges.sparkSession
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -480,7 +469,7 @@ object Graphs {
     while (i <= maxDepth && frontierN > 0) { // empty frontier: done
       graft.PhaseClock.count("bfs.rounds")
       val (next, r, n) = graft.PhaseClock.time("bfs.round") {
-        Lineage.cut(round(frontier, e, dist, i))
+        Lineage.cut(bfsRoundFrame(frontier, e, dist, i))
       }
       pinned ++= r
       frontier = next

@@ -358,7 +358,8 @@ object Mixing {
     * a survivor — MixingPropSpec pins equality with the naive window
     * for every `hotKeys` choice.
     *
-    * `hotKeys` is the measured refinement (SkewProbe `skew_cap`):
+    * `hotKeys` is the measured refinement (`skew_cap`,
+    * `SCALEPROBE_r16.jsonl`):
     * salting EVERY key keeps phase 1 from pruning the long tail (a
     * key with ~n rows per salt passes everything through), so the
     * blanket form pays a near-full second pass — measured ~1.8× the

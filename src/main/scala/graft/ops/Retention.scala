@@ -53,24 +53,4 @@ object Retention {
       .groupBy(col("cohort"), (col("_p") - col("cohort")).as("offset"))
       .agg(count(lit(1)).as("n_active"))
   }
-
-  /** The r17 distinct→min-agg→join shape, kept as the A/B comparison
-    * leg for the `retention_agg` scale probe (and as the fallback if a
-    * future Spark regresses collect_set's partial aggregation).
-    * Identical cells to [[cohorts]] by construction. */
-  def cohortsJoin(events: DataFrame, entityCol: String, tsNsCol: String,
-      periodNs: Long): DataFrame = {
-    require(periodNs > 0, s"periodNs must be positive (got $periodNs)")
-    val act = events
-      .select(col(entityCol).as("_ent"),
-        col(tsNsCol).cast("long").as("_t"))
-      .withColumn("_p", expr(s"_t div ${periodNs}L"))
-      .select(col("_ent"), col("_p"))
-      .filter(col("_ent").isNotNull && col("_p").isNotNull)
-      .distinct() // activity is per-period: collapse BEFORE the join
-    val first = act.groupBy(col("_ent")).agg(min(col("_p")).as("cohort"))
-    act.join(first, "_ent")
-      .groupBy(col("cohort"), (col("_p") - col("cohort")).as("offset"))
-      .agg(count(lit(1)).as("n_active"))
-  }
 }

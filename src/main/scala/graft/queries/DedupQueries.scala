@@ -180,8 +180,8 @@ object DedupQueries {
     // stride-1 gram dataflow): a token dies iff it sits inside some
     // ≥8-token window whose content appeared earlier in corpus order,
     // with NO boundary quantization. Coverage, counts, and the rebuilt
-    // surviving text are all value-checked; graft.SpanPrecision
-    // measures fixed/CDC recall and over-removal against this.
+    // surviving text are all value-checked. Fixed/CDC recall and
+    // over-removal against this are in SPANPRECISION_r16.jsonl.
     "dedup_span_exact" -> QueryDef(
       (s, dir) => {
         Dedup.exactSpanCover(table(s, dir, "documents"), "doc_id", "text",

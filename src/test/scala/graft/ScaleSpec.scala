@@ -111,13 +111,14 @@ class ScaleSpec extends SparkSpec {
       val plan = qe.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not split the skewed partition:\n$plan")
-      // THE TRAP (found by SkewProbe): a dim DERIVED in-plan from the
-      // fact (distinct on the join key) arrives at the join already
-      // partitioned — its agg exchange satisfies the join requirement,
-      // and OptimizeSkewedJoin only applies when both children are raw
-      // shuffle reads it can split/replicate. Same data, same skew,
+      // THE TRAP (found measuring `skew_join_aqe`, SCALEPROBE_r16.jsonl):
+      // a dim DERIVED in-plan from the fact (distinct on the join key)
+      // arrives at the join already partitioned — its agg exchange
+      // satisfies the join requirement, and OptimizeSkewedJoin only
+      // applies when both children are raw shuffle reads it can
+      // split/replicate. Same data, same skew,
       // mitigation silently OFF. At scale: stage skew-facing dims to
-      // storage first (the probe materializes its dim to parquet).
+      // storage first (the measurement materialized its dim to parquet).
       val derivedDim = left.select("k").distinct()
         .withColumn("w", org.apache.spark.sql.functions.lit(1L))
       val j2 = left.join(derivedDim, "k")
@@ -125,7 +126,7 @@ class ScaleSpec extends SparkSpec {
       assert(qe2.executedPlan.execute().count() == 200000L)
       assert(!qe2.executedPlan.toString.contains("skew=true"),
         "in-plan dim unexpectedly allowed a skew split — revisit the " +
-          "SkewProbe materialization note if Spark lifted this limitation")
+          "materialization note above if Spark lifted this limitation")
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -109,7 +109,20 @@ class StreamingSpec extends SparkSpec {
       assert(rows.map(r => (r.pk, r.net_op)).toSeq == Seq(
         (1L, "insert"), (2L, "insert"), (2L, "update"),
         (1L, "insert")), rows.mkString(", "))
-    } finally q.stop()
+    } finally {
+      // the pending timer keeps a no-data batch running every 200 ms;
+      // stop in the gap right after one ends, so no batch is still
+      // committing state into the temporary checkpoint stop() deletes
+      // (CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT)
+      def awaitTrigger(active: Boolean): Unit = {
+        val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+        while (q.isActive && q.status.isTriggerActive != active &&
+            System.nanoTime() < deadline) Thread.sleep(2)
+      }
+      awaitTrigger(active = true)
+      awaitTrigger(active = false)
+      q.stop()
+    }
   }
 
   test("stateful compaction emits incremental net ops across batches") {
