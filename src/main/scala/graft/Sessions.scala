@@ -39,11 +39,12 @@ object Sessions {
       // 721 on, 687 off), so it stays on.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // list input paths on the driver, never in a Spark job: a store
-      // read hands the scan one path per live chain segment (512 for a
-      // 64-bucket delta store at 8 generations), far above the default
-      // threshold of 32, and the "parallel" listing job then runs on the
-      // same local cores at ~5 ms of scheduling per path-task — seconds
-      // per read for what a driver-side listStatus does in milliseconds.
+      // read hands the scan one path per live generation (up to 64, a
+      // delta store's default `maxLiveGens`), and an IVF index read one
+      // per probed cell and generation, above the default threshold of
+      // 32; the "parallel" listing job then runs on the same local cores
+      // at ~5 ms of scheduling per path-task — seconds per read for what
+      // a driver-side listStatus does in milliseconds.
       // A cluster session, whose listing tasks run on other machines,
       // is not built here.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",

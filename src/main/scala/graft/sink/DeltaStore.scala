@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * bucket the batch touches (the semantics of the reference's executing
   * batch apply, `pkg/output/mysql/batch/tableprocessor.go:198-257`).
   * That is O(touched state) per batch: a workload whose keys spray
-  * across buckets rewrites nearly the whole store every batch. Here a
+  * across buckets rewrites nearly the whole store every batch (and its
+  * read of the touched buckets opens every file of their generations). Here a
   * batch instead APPENDS its compacted net changes as a new delta
   * generation — O(|batch|) write, no read of existing state — and the
   * merge is deferred:
@@ -31,14 +32,15 @@ import scala.jdk.CollectionConverters._
   *
   * Write path: a batch that can fold nothing (no chain at `maxChain`,
   * live generation dirs below `maxLiveGens`) is written verbatim by ONE
-  * query — no cache, no bucket-id collect — and the buckets it
-  * appends to are read back from the `bucket=` dirs it produced. Only a
+  * query — no cache, no bucket-id collect, no shuffle of its own — and
+  * the buckets it appends to are observed on that same write. Only a
   * batch that can fold first collects its bucket ids, to pick the fold
   * set (touched buckets at the cap); so the `delta.net` PhaseClock
-  * sub-phase appears only on such batches. Every generation write, here
-  * and in [[BucketStore]], runs `min(buckets, defaultParallelism)` tasks
-  * with one file per `bucket=` dir; [[BucketStore.writeBuckets]] states
-  * the rule and the per-file floor that remains.
+  * sub-phase appears only on such batches. Every generation of a
+  * pk-hash store, here and in [[BucketStore]], is a flat file set sorted
+  * by `bucket` ([[BucketStore.writeBuckets]]); a store bucketed by a
+  * semantic key (`bucketExpr`, stamped `BUCKETBY`) keeps one dir per
+  * bucket ([[BucketStore.writeCells]]) so its reads can prune files.
   *
   * Crash contract is [[BucketStore]]'s, unchanged: generation dirs are
   * keyed by batch id and written mode=overwrite (replay self-heals its
@@ -48,7 +50,7 @@ import scala.jdk.CollectionConverters._
   * Replay detection is by the `#applied` MANIFEST header (the highest
   * flipped batch id — batch ids are monotone under the streaming
   * checkpoint contract), not by chain membership alone: a flipped batch
-  * whose generation wrote no bucket dirs (every folded bucket netted to
+  * whose generation holds no bucket's rows (every folded bucket netted to
   * empty) appears in no chain but must still not re-apply. `flip` also
   * sweeps EVERY on-disk `gen-*` dir that no chain references — safe
   * because the writer is single (the streaming sink serializes batches),
@@ -62,8 +64,17 @@ import scala.jdk.CollectionConverters._
   *                               "<bucket>\t<gen>,<gen>,..." — the bucket's
   *                               chain, oldest → newest (= batch-id order)
   *     gen-<batchId>/_SUCCESS
-  *     gen-<batchId>/bucket=<b>/part-....parquet   rows carry `net_op`
+  *     gen-<batchId>/part-....parquet            rows carry `net_op` and
+  *                                               `bucket`, sorted by `bucket`
+  *     gen-<batchId>/bucket=<b>/part-....parquet the same, for a store
+  *                                               stamped `BUCKETBY`
   * }}}
+  *
+  * A flat generation holds every bucket its batch wrote and stays live
+  * while any of their chains still names it; a chain-cap fold or a
+  * snapshot can meanwhile supersede some of those buckets. Every read
+  * therefore keeps a row of bucket `b` from generation `g` only when `g`
+  * is in `b`'s chain ([[BucketStore.scanGens]]).
   */
 object DeltaStore {
 
@@ -128,29 +139,33 @@ object DeltaStore {
       .select(pkCols.map(col) ++ valueCols.map(col): _*)
   }
 
-  /** ONE multi-path scan over every chain segment, each row's batch-id
-    * `_seq` parsed from its file path (`.../gen-<id>/bucket=<b>/part-*`).
-    * Chain order equals batch-id order by construction (appends only ever
-    * extend the tail; compaction resets to the new generation), so a
-    * global per-generation seq is a valid LWW order — a pk lives in
-    * exactly one bucket. A single scan node keeps the read plan flat
-    * regardless of chain state (the per-generation union it replaced grew
-    * one scan per live generation, up to `maxLiveGens` of them). */
+  /** ONE multi-path scan over the live rows of `chains`, each row's
+    * batch-id `_seq` parsed from its file path. Chain order equals
+    * batch-id order by construction (appends only ever extend the tail;
+    * compaction resets to the new generation), so a global
+    * per-generation seq is a valid LWW order — a pk lives in exactly one
+    * bucket. A single scan node keeps the read plan flat regardless of
+    * chain state (the per-generation union it replaced grew one scan per
+    * live generation, up to `maxLiveGens` of them).
+    *
+    * The store's `BUCKETBY` stamp picks the layout: a pk-hash store is
+    * read by [[BucketStore.scanGens]], a store bucketed by a semantic key
+    * by [[BucketStore.scanCells]]. Both merge footers, so a
+    * schema-ADDITIVE stream (a later batch's net carrying a new column —
+    * the CDC analog of ADD COLUMN) resolves with nulls for pre-evolution
+    * rows. Rows keep `bucket`; [[chainFrames]] drops it. */
+  private def liveRows(spark: SparkSession, target: String,
+      chains: Map[Int, Seq[String]],
+      buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    if (Files.exists(bucketByPath(target))) BucketStore.scanCells(spark, target, chains, buckets)
+    else BucketStore.scanGens(spark, target, chains, buckets)
+
+  /** [[liveRows]] without the `bucket` column: the state columns,
+    * `net_op` and `_seq`. */
   private def chainFrames(spark: SparkSession, target: String,
-      chains: Map[Int, Seq[String]]): Option[DataFrame] = {
-    val paths = chains.toSeq
-      .flatMap { case (b, gens) => gens.map(g => s"$target/$g/bucket=$b") }
-    if (paths.isEmpty) None
-    // mergeSchema: a schema-ADDITIVE stream (a later batch's net carrying
-    // a new column — the CDC analog of ADD COLUMN) must resolve with
-    // nulls for pre-evolution rows; without it the read takes the first
-    // listed file's schema and silently DROPS the new column depending
-    // on path order. Bounded cost: one footer per live chain segment.
-    else Some(spark.read.option("mergeSchema", "true").parquet(paths.distinct: _*)
-      .withColumn("_seq", regexp_extract(
-        element_at(split(input_file_name(), "/"), -3),
-        "^(?:gen|snap)-(\\d+)$", 1).cast("long")))
-  }
+      chains: Map[Int, Seq[String]],
+      buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    liveRows(spark, target, chains, buckets).map(_.drop("bucket"))
 
   /** Resolved current state (None when the store is empty). Same output
     * schema as [[BucketStore.read]]: pk cols + value cols, no `net_op`. */
@@ -202,9 +217,14 @@ object DeltaStore {
     *   - The manifest prunes the scan to buckets whose chain holds a
     *     generation in `(fromBatch, toBatch]`. A bucket without one is
     *     bit-identical at both cuts (appends are the only mutation inside
-    *     an accepted window — see the floor guard), so feed cost follows
-    *     the CHANGED key footprint, not store size: touched buckets ×
-    *     chain depth, file-level pruning like the IVF probed-cell read.
+    *     an accepted window — see the floor guard). The scan opens every
+    *     file of the generations in the touched buckets' chains; only
+    *     Parquet row-group statistics on `bucket` skip the rows of other
+    *     buckets ([[BucketStore.scanGens]]). So feed cost follows the
+    *     generations the changed buckets live in, not the changed keys:
+    *     a chain that reaches back to a store-wide fold or snapshot reads
+    *     that generation's files too. Only a store bucketed by a semantic
+    *     key (the IVF cells, one dir per bucket) prunes whole files.
     *   - Within touched buckets, ONE scan + ONE hash aggregation computes
     *     both images per pk: each leg is [[resolve]]'s per-column argmax
     *     with the `_seq` ordering null-masked above its cut (`max_by`
@@ -232,17 +252,16 @@ object DeltaStore {
         s"collapsed history up to batch $floor (pre-images below the fold " +
         "horizon are unrecoverable, as after any LSM compaction)")
     val chains = readManifest(target)
-    def segId(g: String): Long = g.dropWhile(!_.isDigit).toLong
     val touched = chains.view.filter { case (_, gens) =>
-      gens.exists { g => val id = segId(g); id > fromBatch && id <= toBatch }
-    }.toMap
+      gens.exists { g => val id = BucketStore.genId(g); id > fromBatch && id <= toBatch }
+    }.keySet.toSet
     // An idle window (store exists, no bucket holds a generation in
     // (from, to]) is the COMMON case for a polling CDC-out consumer —
     // it must yield an EMPTY feed with the feed schema, not None (None
     // means "no store"). limit(0) keeps it schema-only: the scan reads
     // parquet footers, never data.
     val source =
-      if (touched.nonEmpty) chainFrames(spark, target, touched)
+      if (touched.nonEmpty) chainFrames(spark, target, chains, Some(touched))
       else chainFrames(spark, target, chains).map(_.limit(0))
     source.map { all0 =>
       val pkCols = inferPkCols(target)
@@ -315,23 +334,13 @@ object DeltaStore {
     * post-scan filter: an nprobe-cell top-k read touches nprobe/nBuckets
     * of the corpus on disk. */
   def readAppendOnly(spark: SparkSession, target: String,
-      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
-    val chains0 = readManifest(target)
-    val chains = buckets match {
-      case Some(bs) => chains0.view.filterKeys(bs).toMap
-      case None => chains0
-    }
-    val paths = chains.toSeq
-      .flatMap { case (b, gens) => gens.map(g => s"$target/$g/bucket=$b") }
-    if (paths.isEmpty) None
-    else {
-      val df = spark.read.option("mergeSchema", "true").parquet(paths.distinct: _*)
+      buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    chainFrames(spark, target, readManifest(target), buckets).map { rows =>
+      val df = rows.drop("_seq")
       if (df.columns.contains("net_op"))
-        Some(df.filter(col("net_op").isNull || col("net_op") =!= "delete")
-          .drop("net_op"))
-      else Some(df)
+        df.filter(col("net_op").isNull || col("net_op") =!= "delete").drop("net_op")
+      else df
     }
-  }
 
   private def pkColsPath(target: String): Path = Paths.get(target, "PKCOLS")
 
@@ -349,6 +358,16 @@ object DeltaStore {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
   }
+
+  /** Write a generation in the store's layout, picked by its `BUCKETBY`
+    * stamp: one dir per bucket for a semantic key
+    * ([[BucketStore.writeCells]], at most `maxBuckets` of them), flat
+    * files sorted by `bucket` for the pk hash
+    * ([[BucketStore.writeBuckets]]). Returns the buckets written. */
+  private def writeGeneration(df: DataFrame, target: String, genDir: String,
+      maxBuckets: Int): Set[Int] =
+    if (Files.exists(bucketByPath(target))) BucketStore.writeCells(df, genDir, maxBuckets)
+    else BucketStore.writeBuckets(df, genDir)
 
   /** The resolution key is part of the store's identity; persist it at
     * first append so readers need no out-of-band schema knowledge. */
@@ -396,7 +415,7 @@ object DeltaStore {
       // commit): rewriting the generation would destroy rows the chains
       // now depend on — return the manifest unchanged. The `#applied`
       // check catches the chain-membership blind spot: a flipped batch
-      // whose generation wrote no bucket dirs is in no chain.
+      // whose generation holds no bucket's rows is in no chain.
       return manifest0
     }
     writePkCols(target, pkCols)
@@ -417,12 +436,11 @@ object DeltaStore {
     if (!canFold) {
       // no chain can fold: the generation is the batch's rows verbatim,
       // written by ONE query — no cache, no bucket-id collect. The buckets
-      // it appends to are the bucket dirs the write produced; an empty
-      // batch produces none, flips the manifest unchanged, and its
-      // _SUCCESS-only dir is swept by that flip like any unreferenced
-      // generation.
+      // it appends to are the ones the write saw; an empty batch sees
+      // none, flips the manifest unchanged, and its row-less dir is swept
+      // by that flip like any unreferenced generation.
       val present = graft.PhaseClock.time("delta.write") {
-        BucketStore.writeBuckets(net.withColumn("bucket", bucketOf), genDir, nBuckets)
+        writeGeneration(net.withColumn("bucket", bucketOf), target, genDir, nBuckets)
       }
       return manifest0 ++
         present.map(b => b -> (manifest0.getOrElse(b, Seq.empty) :+ genName))
@@ -446,8 +464,7 @@ object DeltaStore {
       val foldedPart: Option[DataFrame] =
         if (foldBuckets.isEmpty) None
         else {
-          val chains = manifest0.view.filterKeys(foldBuckets).toMap
-          val base = chainFrames(spark, target, chains)
+          val base = chainFrames(spark, target, manifest0, Some(foldBuckets))
           val newDeltas = bucketed.filter(col("bucket").isin(foldBuckets.toSeq: _*))
             .drop("bucket").withColumn("_seq", lit(batchId))
           val all = base.map(_.unionByName(newDeltas)).getOrElse(newDeltas)
@@ -464,10 +481,10 @@ object DeltaStore {
       val out = foldedPart
         .map(f => deltaPart.unionByName(f, allowMissingColumns = false))
         .getOrElse(deltaPart)
-      // a folded bucket can net to empty (all rows deleted): no bucket dir
-      // is written and its chain must be dropped, not reset
+      // a folded bucket can net to empty (all rows deleted): the write
+      // holds no row of it, and its chain must be dropped, not reset
       val present = graft.PhaseClock.time("delta.write") {
-        BucketStore.writeBuckets(out, genDir,
+        writeGeneration(out, target, genDir,
           math.min(nBuckets, appendBuckets.size + foldBuckets.size))
       }
       val kept = manifest0.view
@@ -526,12 +543,11 @@ object DeltaStore {
     val genDir = s"$target/$genName"
     val pkCols = inferPkCols(target)
     val all = chainFrames(spark, target, chains).get
-    // every key resolved away (all tombstoned) writes no bucket dir: the
-    // manifest legitimately flips to empty and the GC sweeps everything
+    // every key resolved away (all tombstoned) writes no bucket's rows:
+    // the manifest legitimately flips to empty and the GC sweeps everything
     val present = BucketStore.writeBuckets(resolve(all, pkCols)
       .withColumn("net_op", lit("insert"))
-      .withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)),
-      genDir, nBuckets)
+      .withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), genDir)
     raiseHistoryFloor(target, applied)
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied)
   }
@@ -543,10 +559,12 @@ object DeltaStore {
     * long-lived index's serve path degrades into thousands of small
     * files — THE practical failure mode of incremental indexes at scale.
     * This merges each bucket's whole chain into one `snap-<applied>`
-    * generation, rows copied VERBATIM: no resolve, and the bucket id is
-    * taken from each row's file path, so semantically-bucketed stores
-    * (the IVF cell layout that [[snapshot]] must refuse) keep their
-    * bucket↔cell mapping and bucket-pruned reads exactly.
+    * generation, rows copied VERBATIM: no resolve, and each row keeps
+    * the bucket it was read as (its `bucket` column, or its `bucket=`
+    * dir), so semantically-bucketed stores (the IVF cell layout that
+    * [[snapshot]] must refuse) keep their bucket↔cell mapping and
+    * bucket-pruned reads exactly. Only live rows are merged: rows a fold
+    * superseded in a still-live generation are dropped with it.
     *
     * Crash contract and sequencing are [[snapshot]]'s: complete
     * generation write (`_SUCCESS`) before the atomic flip, `#applied`
@@ -560,13 +578,7 @@ object DeltaStore {
     val genName = s"snap-$applied"
     if (chains.isEmpty || chains.values.exists(_.contains(genName))) return
     val genDir = s"$target/$genName"
-    val paths = chains.toSeq
-      .flatMap { case (b, gens) => gens.map(g => s"$target/$g/bucket=$b") }
-    val merged = spark.read.option("mergeSchema", "true")
-      .parquet(paths.distinct: _*)
-      .withColumn("bucket", regexp_extract(
-        element_at(split(input_file_name(), "/"), -2),
-        "^bucket=(\\d+)$", 1).cast("int"))
+    val merged = liveRows(spark, target, chains).get.drop("_seq")
     // Refuse an LWW store: verbatim merge collapses every generation's
     // rows under ONE snap id, so resolve()'s _seq order — which decides
     // which version of a key wins — is destroyed, silently serving stale
@@ -602,7 +614,7 @@ object DeltaStore {
           "would collapse the versions under one id; use snapshot " +
           "(maintenance type \"snapshot\") instead")
     }
-    val present = BucketStore.writeBuckets(merged, genDir, chains.size)
+    val present = writeGeneration(merged, target, genDir, chains.size)
     raiseHistoryFloor(target, applied)
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied, fs)
   }
@@ -644,8 +656,8 @@ object DeltaStore {
     if (manifest0.values.exists(_.contains(genName)) ||
         batchId <= readApplied(target)) return
     writePkCols(target, pkCols)
-    val present = BucketStore.writeBuckets(
-      net.withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), genDir, nBuckets)
+    val present = writeGeneration(
+      net.withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), target, genDir, nBuckets)
     raiseHistoryFloor(target, batchId)
     flip(target, present.map(b => b -> Seq(genName)).toMap, batchId, fs)
   }

@@ -12,8 +12,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * sets permissions and reads link status in-process. Without
   * libhadoop, the stock `RawLocalFileSystem` forks `chmod` from
   * `setPermission` for every directory and file it creates, `.crc`
-  * sidecars included — about three forks per `bucket=` dir of a
-  * generation write — and `readlink` from `getFileLinkStatus`, which
+  * sidecars included — a generation write forked for its dir, each
+  * part file and each file's `.crc` — and `readlink` from
+  * `getFileLinkStatus`, which
   * `FileContext.rename` calls four times per rename (source, target and
   * both `.crc` files). Hadoop applies the umask before calling
   * `setPermission`, so modes, files and layout are the same as the

@@ -113,11 +113,17 @@ class DeltaLatticeSpec extends SparkSpec {
             // collapse them). A snapshot rewrites history as unique
             // inserts, after which the merge is safe — expectation
             // derived from the data, exactly like the guard itself.
-            val livePaths = DeltaStore.readManifest(target).toSeq
-              .flatMap { case (b, gens) => gens.map(g => s"$target/$g/bucket=$b") }
-            val liveLww = livePaths.nonEmpty && {
+            // the raw live rows: every live generation dir, keeping a row
+            // of bucket b from generation g only when g is in b's chain
+            // (a generation still live for some buckets can hold rows of
+            // others that a later fold superseded)
+            val chains = DeltaStore.readManifest(target)
+            val liveLww = chains.nonEmpty && {
+              val members = chains.toSeq.flatMap { case (b, gens) => gens.map(g => s"$g:$b") }
               val raw = spark.read.option("mergeSchema", "true")
-                .parquet(livePaths.distinct: _*)
+                .parquet(chains.values.flatten.toSeq.distinct.map(g => s"$target/$g"): _*)
+                .filter(concat(regexp_extract(input_file_name(), "/((?:gen|snap)-\\d+)/[^/]+$", 1),
+                  lit(":"), col("bucket")).isin(members: _*))
               (raw.columns.contains("net_op") &&
                 raw.filter(col("net_op").isNotNull && col("net_op") =!= "insert")
                   .head(1).nonEmpty) ||

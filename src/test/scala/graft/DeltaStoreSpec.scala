@@ -226,7 +226,7 @@ class DeltaStoreSpec extends SparkSpec {
   }
 
   test("an append that can fold nothing writes in one cores-sized job: " +
-      "no collect, one file per bucket dir") {
+      "no collect, flat files sorted by bucket") {
     val target = tmp("graft-delta-onejob")
     val nBuckets = 64
     val cap = math.min(nBuckets, spark.sparkContext.defaultParallelism)
@@ -240,14 +240,18 @@ class DeltaStoreSpec extends SparkSpec {
       s"a no-fold append must run only its generation write: $writes")
     assert(tasks.nonEmpty && tasks.max <= cap,
       s"stage task counts $tasks exceed min(nBuckets, defaultParallelism) = $cap")
-    val dirs = new java.io.File(s"$target/gen-0").listFiles()
-      .filter(_.getName.startsWith("bucket="))
-    assert(dirs.length > cap, "the batch must span more buckets than write tasks")
-    dirs.foreach { d =>
-      assert(d.list().count(_.endsWith(".parquet")) == 1, s"${d.getName}: ${d.list().toSeq}")
-    }
-    assert(DeltaStore.readManifest(target) ==
-      dirs.map(d => d.getName.stripPrefix("bucket=").toInt -> Seq("gen-0")).toMap)
+    val gen = new java.io.File(s"$target/gen-0")
+    assert(!gen.list().exists(_.startsWith("bucket=")), gen.list().toSeq)
+    val parts = gen.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.length <= cap,
+      s"${parts.length} parquet files under gen-0, cap $cap")
+    // one small file reads back as one partition, in file order
+    val perFile = parts.toSeq.map(f =>
+      spark.read.parquet(f.getPath).select("bucket").collect().map(_.getInt(0)).toSeq)
+    perFile.foreach(bs => assert(bs == bs.sorted, s"file not sorted by bucket: $bs"))
+    val buckets = perFile.flatten.toSet
+    assert(buckets.size > cap, "the batch must span more buckets than write tasks")
+    assert(DeltaStore.readManifest(target) == buckets.map(_ -> Seq("gen-0")).toMap)
     // every chain is now at maxChain = 1: the next append can fold, so it
     // collects its bucket ids first — the listener does see that job
     val (foldRuns, _) = observed {
@@ -328,11 +332,135 @@ class DeltaStoreSpec extends SparkSpec {
     DeltaStore.append(netOf(("t", 1L, "insert", 1L, 1, 1.0)),
       target, pkCols, nBuckets = 4, batchId = 0, maxChain = 1)
     // maxChain=1: this delete forces an immediate fold of the bucket;
-    // insert+delete resolve to nothing, so no bucket dir is written
+    // insert+delete resolve to nothing, so no row of the bucket is written
     DeltaStore.append(netOf(("t", 1L, "delete", 0L, 0, 0.0)),
       target, pkCols, nBuckets = 4, batchId = 1, maxChain = 1)
     assert(DeltaStore.readManifest(target).isEmpty)
     assert(state(target) == Map.empty)
+  }
+
+  /** `per` keys in each of `n` distinct buckets of an `nBuckets`-way pk
+    * hash, grouped by bucket, with the bucket ids. */
+  private def keysByBucket(nBuckets: Int, n: Int, per: Int): Seq[(Int, Seq[(String, Long)])] =
+    (0L until 200L).map(pk => ("t", pk)).toDF("tbl", "pk")
+      .withColumn("b", BucketStore.bucketCol(pkCols, nBuckets)).collect()
+      .map(r => r.getInt(2) -> (r.getString(0), r.getLong(1))).toSeq
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+      .collect { case (b, ks) if ks.size >= per => b -> ks.take(per) }.take(n)
+
+  /** The (tbl, pk) -> (r_id, r_k, r_v) rows stored in one generation dir. */
+  private def genRows(target: String, gen: String) =
+    spark.read.parquet(s"$target/$gen").collect().map { r =>
+      (r.getAs[String]("tbl"), r.getAs[Long]("pk")) ->
+        (r.getAs[Long]("r_id"), r.getAs[Int]("r_k"), r.getAs[Double]("r_v"))
+    }.toSeq
+
+  test("a generation live for other buckets never serves a superseded bucket's rows") {
+    val nBuckets = 4
+    // z is written once and never again: its generation stays live, and
+    // every read of x and y alone covers only some of the store's buckets
+    val Seq((bx, xs), (by, ys), (bz, zs)) = keysByBucket(nBuckets, 3, 3)
+    val (x1, x2, x3, y1, z1) = (xs(0), xs(1), xs(2), ys(0), zs(0))
+    type K = (String, Long)
+    type V = (Long, Int, Double)
+    def v(k: K, i: Int): V = (k._2, i, i.toDouble)
+    def net(ops: Seq[(K, String, Int)]) =
+      netOf(ops.map { case (k, op, i) => (k._1, k._2, op, k._2, i, i.toDouble) }: _*)
+    def applyTo(m: scala.collection.mutable.Map[K, V], ops: Seq[(K, String, Int)]): Unit =
+      ops.foreach { case (k, op, i) => if (op == "delete") m.remove(k) else m(k) = v(k, i) }
+    def onDisk(t: String) = new java.io.File(t).list().filter(_.startsWith("gen-")).toSet
+
+    // --- DeltaStore, maxChain = 2 ---
+    val target = tmp("graft-delta-members")
+    val model = scala.collection.mutable.Map[K, V]()
+    val snaps = scala.collection.mutable.Map[Long, Map[K, V]]()
+    def append(id: Long, ops: (K, String, Int)*): Unit = {
+      applyTo(model, ops)
+      snaps(id) = model.toMap
+      DeltaStore.append(net(ops), target, pkCols, nBuckets = nBuckets,
+        batchId = id, maxChain = 2)
+    }
+    def checkReads(id: Long): Unit = {
+      assert(state(target) == model.toMap, s"read after batch $id")
+      (DeltaStore.readHistoryFloor(target) max 0L).to(id).foreach { at =>
+        val got = DeltaStore.readAt(spark, target, at).get.collect().map { r =>
+          (r.getAs[String]("tbl"), r.getAs[Long]("pk")) ->
+            (r.getAs[Long]("r_id"), r.getAs[Int]("r_k"), r.getAs[Double]("r_v"))
+        }.toMap
+        assert(got == snaps(at), s"readAt($at) after batch $id")
+      }
+      assert(onDisk(target) == DeltaStore.readManifest(target).values.flatten.toSet)
+    }
+    append(0, (x1, "insert", 0), (x2, "insert", 0), (x3, "insert", 0), (y1, "insert", 0),
+      (z1, "insert", 0))
+    append(1, (x1, "update", 1), (x2, "delete", 0), (x3, "delete", 0))
+    // x's chain is at the cap: x folds into gen-2, and gen-0 stays live
+    // for y with x's batch-0 rows (x2 and x3 among them) still in its files
+    append(2, (x1, "update", 2))
+    assert(DeltaStore.readManifest(target) ==
+      Map(bx -> Seq("gen-2"), by -> Seq("gen-0"), bz -> Seq("gen-0")))
+    assert(genRows(target, "gen-0").map(_._1).toSet == Set(x1, x2, x3, y1, z1))
+    checkReads(2)
+    // x2 comes back: to the feed it is an insert, not an update of its
+    // stale batch-0 row; gen-0 is in the window's read (y's chain)
+    append(3, (x2, "insert", 3), (y1, "update", 3))
+    checkReads(3)
+    val feed = DeltaStore.changesBetween(spark, target, 2, 3).map(feedOf).get
+    assert(feed == modelDiff(snaps(2), snaps(3)))
+    assert(feed == Map(x2 -> ("insert", v(x2, 3)), y1 -> ("update", v(y1, 3))))
+    // both chains are at the cap: one fold reads gen-0, gen-2 and gen-3
+    // for x and y, and must not carry x3's stale row into gen-4
+    append(4, (x1, "update", 4), (y1, "update", 4))
+    assert(DeltaStore.readManifest(target) ==
+      Map(bx -> Seq("gen-4"), by -> Seq("gen-4"), bz -> Seq("gen-0")))
+    val folded = genRows(target, "gen-4")
+    assert(folded.size == model.size - 1 && folded.toMap == model.toMap - z1)
+    checkReads(4)
+    // an empty batch (no chain at the cap: the one-query path) observes
+    // no bucket: the manifest stays, #applied moves, its dir is swept
+    val m4 = DeltaStore.readManifest(target)
+    append(5)
+    assert(DeltaStore.readManifest(target) == m4 && DeltaStore.readApplied(target) == 5L)
+    append(6, (x1, "delete", 0), (x2, "delete", 0), (x3, "delete", 0))
+    // the same for an empty batch that could fold (x's chain is at the cap)
+    val m6 = DeltaStore.readManifest(target)
+    append(7)
+    assert(DeltaStore.readManifest(target) == m6 && DeltaStore.readApplied(target) == 7L)
+    // x folds down to nothing: the write holds none of its rows, so x
+    // leaves the manifest
+    append(8, (x1, "delete", 0))
+    assert(DeltaStore.readManifest(target) == Map(by -> Seq("gen-4"), bz -> Seq("gen-0")))
+    assert(DeltaStore.readApplied(target) == 8L)
+    checkReads(8)
+
+    // --- BucketStore: the touched bucket moves, the old generation stays ---
+    val bt = tmp("graft-bucket-members")
+    val bmodel = scala.collection.mutable.Map[K, V]()
+    def merge(id: Long, ops: (K, String, Int)*): Unit = {
+      applyTo(bmodel, ops)
+      BucketStore.merge(net(ops), bt, pkCols, nBuckets, id)
+    }
+    def bstate = BucketStore.read(spark, bt).map(_.collect().map { r =>
+      (r.getAs[String]("tbl"), r.getAs[Long]("pk")) ->
+        (r.getAs[Long]("r_id"), r.getAs[Int]("r_k"), r.getAs[Double]("r_v"))
+    }.toSeq).getOrElse(Seq.empty)
+    merge(0, (x1, "insert", 0), (x2, "insert", 0), (y1, "insert", 0), (z1, "insert", 0))
+    merge(1, (x1, "update", 1), (x2, "delete", 0))
+    assert(BucketStore.readManifest(bt) == Map(bx -> "gen-1", by -> "gen-0", bz -> "gen-0"))
+    assert(genRows(bt, "gen-0").map(_._1).toSet == Set(x1, x2, y1, z1))
+    assert(bstate.size == bmodel.size && bstate.toMap == bmodel.toMap)
+    // the merge's touched-bucket read spans gen-0 and gen-1
+    merge(2, (x1, "update", 2), (y1, "update", 2))
+    assert(BucketStore.readManifest(bt) == Map(bx -> "gen-2", by -> "gen-2", bz -> "gen-0"))
+    val merged = genRows(bt, "gen-2")
+    assert(merged.size == bmodel.size - 1 && merged.toMap == bmodel.toMap - z1)
+    assert(bstate.size == bmodel.size && bstate.toMap == bmodel.toMap)
+    // an all-deleted bucket leaves the manifest; an empty batch keeps it
+    merge(3, (x1, "delete", 0))
+    assert(BucketStore.readManifest(bt) == Map(by -> "gen-2", bz -> "gen-0"))
+    merge(4)
+    assert(BucketStore.readManifest(bt) == Map(by -> "gen-2", bz -> "gen-0"))
+    assert(bstate.toMap == bmodel.toMap && onDisk(bt) == Set("gen-0", "gen-2"))
   }
 
   test("crash between generation write and flip loses nothing; replay converges") {
@@ -702,19 +830,34 @@ class DeltaStoreSpec extends SparkSpec {
 
   test("changesBetween prunes the scan to buckets touched inside the window") {
     val target = tmp("graft-delta-feedprune")
+    val nBuckets = 8
+    def bucketOf(k: (String, Long)): Int = Seq(k).toDF("tbl", "pk")
+      .select(BucketStore.bucketCol(pkCols, nBuckets)).head().getInt(0)
+    def append(id: Long, rows: (String, Long, String, Long, Int, Double)*): Unit =
+      DeltaStore.append(netOf(rows: _*), target, pkCols,
+        nBuckets = nBuckets, batchId = id, maxChain = 100)
+    def gensRead(feed: org.apache.spark.sql.DataFrame): Set[String] =
+      feed.inputFiles.map(f => "/(gen-\\d+)/[^/]+$".r.findFirstMatchIn(f).get.group(1)).toSet
     // batch 0 spreads keys across (very likely) many buckets
-    DeltaStore.append(netOf((0 until 16).map(i =>
-      (s"t$i", i.toLong, "insert", i.toLong, i, i.toDouble)): _*),
-      target, pkCols, nBuckets = 8, batchId = 0, maxChain = 100)
+    append(0, (0 until 16).map(i => (s"t$i", i.toLong, "insert", i.toLong, i, i.toDouble)): _*)
     // batch 1 touches exactly one key — one bucket changed
-    DeltaStore.append(netOf(("t3", 3L, "update", 3L, 99, 9.9)),
-      target, pkCols, nBuckets = 8, batchId = 1, maxChain = 100)
-    val feed = DeltaStore.changesBetween(spark, target, 0, 1).get
-    // only the touched bucket's chain is read: its gen-0 + gen-1 files,
-    // never the other 7 buckets' gen-0 files
-    assert(feed.inputFiles.length <= 2,
-      s"expected <=2 files (one bucket's chain), read ${feed.inputFiles.length}")
-    assert(feedOf(feed) === Map(("t3", 3L) -> ("update", (3L, 99, 9.9))))
+    append(1, ("t3", 3L, "update", 3L, 99, 9.9))
+    val before = DeltaStore.changesBetween(spark, target, 0, 1).get
+    assert(gensRead(before) === Set("gen-0", "gen-1"))
+    val feed01 = feedOf(before)
+    assert(feed01 === Map(("t3", 3L) -> ("update", (3L, 99, 9.9))))
+    // batch 2 touches one key of another bucket: gen-2 joins that chain
+    // only, so a window whose touched chains do not hold it never scans it
+    val other = (0 until 16).map(i => (s"t$i", i.toLong))
+      .find(k => bucketOf(k) != bucketOf(("t3", 3L))).get
+    append(2, (other._1, other._2, "update", other._2, -1, -1.0))
+    val after = DeltaStore.changesBetween(spark, target, 0, 1).get
+    assert(gensRead(after) === Set("gen-0", "gen-1"), "gen-2 holds no touched bucket")
+    assert(feedOf(after) === feed01)
+    // and the window (1, 2] skips gen-1, which holds no bucket it touched
+    val late = DeltaStore.changesBetween(spark, target, 1, 2).get
+    assert(gensRead(late) === Set("gen-0", "gen-2"), "gen-1 holds no touched bucket")
+    assert(feedOf(late) === Map(other -> ("update", (other._2, -1, -1.0))))
   }
 
   test("changesBetween refuses a fromBatch below the fold horizon") {

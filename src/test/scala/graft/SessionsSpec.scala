@@ -70,9 +70,10 @@ class SessionsSpec extends SparkSpec {
       val stock = stockFs()
       (0 until 16).foreach(b => touchTree(stock, s"$stockRoot/bucket=$b"))
     }.filter(_.startsWith("chmod"))
-    val buckets = Option(new java.io.File(s"$target/gen-0").list())
-      .getOrElse(Array.empty).count(_.startsWith("bucket="))
-    assert(buckets === 16)
+    assert(DeltaStore.readManifest(target).size === 16)
+    val gen = Option(new java.io.File(s"$target/gen-0").list()).getOrElse(Array.empty)
+    assert(gen.exists(_.endsWith(".parquet")) && !gen.exists(_.startsWith("bucket=")),
+      gen.toSeq)
     val ours = chmods.filter(_.contains(target))
     assert(ours.isEmpty, s"${ours.size} chmod forks, e.g. ${ours.take(3)}")
     if (!NativeIO.isAvailable)
@@ -91,24 +92,19 @@ class SessionsSpec extends SparkSpec {
     }
     assert(rwx(Paths.get(nioRoot, "d/e")) === "rwxr-xr-x")
     assert(rwx(Paths.get(nioRoot, "d/e/f.bin")) === "rw-r--r--")
-    // a generation write: every bucket dir, part file and sidecar
+    // a generation write: the generation dir, every part file and sidecar
     val target = Files.createTempDirectory("graft-nio-gen").toString + "/state"
     DeltaStore.append(Seq(("t", 1L, "insert", 1L, 1, 1.0),
         ("t", 2L, "insert", 2L, 2, 2.0)).toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v"),
       target, Seq("tbl", "pk"), nBuckets = 4, batchId = 0)
     val gen = Paths.get(target, "gen-0")
-    val dirs = Files.list(gen).iterator.asScala.toSeq
-      .filter(_.getFileName.toString.startsWith("bucket="))
-    assert(dirs.nonEmpty)
-    dirs.foreach { d =>
-      assert(rwx(d) === "rwxr-xr-x", d)
-      val parts = Files.list(d).iterator.asScala.toSeq
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      assert(parts.nonEmpty, d)
-      parts.foreach { f =>
-        assert(rwx(d.resolve(f)) === "rw-r--r--", f)
-        assert(Files.exists(d.resolve(s".$f.crc")), s"no .crc for $f")
-      }
+    assert(rwx(gen) === "rwxr-xr-x", gen)
+    val parts = Files.list(gen).iterator.asScala.toSeq
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+    assert(parts.nonEmpty, gen)
+    parts.foreach { f =>
+      assert(rwx(gen.resolve(f)) === "rw-r--r--", f)
+      assert(Files.exists(gen.resolve(s".$f.crc")), s"no .crc for $f")
     }
   }
 
