@@ -24,8 +24,8 @@ object Bench {
   // cached-plan-repartitioning flag here only; it now lives in the one
   // place every entrypoint (Run/Verify/Bench) builds its session from,
   // so the bench measures exactly the session production runs.
-  private def newSession(cpus: String): SparkSession =
-    Sessions.local(cpus, appName = "graft-bench")
+  private def newSession(): SparkSession =
+    Sessions.local(Sessions.cpus, appName = "graft-bench")
 
   /** Calibration BASKET, the bench's one cross-run normalizer: query
     * timings can only be compared ACROSS runs if the machine was equally
@@ -84,8 +84,8 @@ object Bench {
 
   /** One basket checkpoint: each element warmed once, min of 3 timed
     * runs, all in ONE fresh session. ~15 s per checkpoint. */
-  private def basketPoint(cpus: String, sfDir: String): Map[String, Double] = {
-    val spark = newSession(cpus)
+  private def basketPoint(sfDir: String): Map[String, Double] = {
+    val spark = newSession()
     // fail-soft per element: a transient probe failure must cost ONE
     // basket ratio (basketScale tolerates missing elements), never the
     // suite run it calibrates
@@ -161,7 +161,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Per-query JIT/codegen warmup dominates cold runs (4.3s -> 0.5s
     // observed); one unmeasured pass first unless disabled.
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") == "1"
@@ -176,19 +175,18 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val phases = scala.collection.mutable.Map.empty[String, Map[String, Double]]
     // cross-run calibration only matters for full-suite comparisons:
     // filtered iteration runs (BENCH_ONLY) skip the basket unless
     // SPARK_GRAFT_BENCH_ANCHOR=1 forces it on
     val basket = sys.env.get("SPARK_GRAFT_BENCH_ANCHOR")
       .map(_ == "1").getOrElse(only.isEmpty)
     val basketPoints = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    if (basket) basketPoints += basketPoint(cpus, sfDir)
+    if (basket) basketPoints += basketPoint(sfDir)
     val middleAt = ordered.size / 2
     val results = ordered.zipWithIndex.flatMap { case ((name, d), qi) =>
       if (basket && qi == middleAt && qi > 0)
-        basketPoints += basketPoint(cpus, sfDir)
-      val spark = newSession(cpus)
+        basketPoints += basketPoint(sfDir)
+      val spark = newSession()
       // A query that THROWS must not record its fast error path as a
       // legitimate timing (a regression would read as a dramatic
       // improvement): failures are excluded from the per-query map and
@@ -203,11 +201,7 @@ object Bench {
       // Warm this session (parquet footer cache) outside the clock.
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       if (warmup) { runOne(); spark.catalog.clearCache() }
-      // Lifecycle queries record a PhaseClock split (stage/start/apply/
-      // drain); keep the split of the MIN rep — the number the driver
-      // trusts — so a slow run is attributable from the artifact alone
-      // (residual = total - stage - start - drain ≈ final store read).
-      def oneRep(): (Double, Map[String, Double]) = {
+      def oneRep(): Double = {
         spark.catalog.clearCache()
         // clearCache() drops catalog-cached relations but NOT RDD-level
         // persists — a prior rep's localCheckpoint blocks (the iterative
@@ -222,12 +216,11 @@ object Bench {
         // per iterative-op call) would otherwise accumulate across the
         // suite's hundreds of runs
         graft.ops.GraphBlocks.releaseAll()
-        PhaseClock.reset()
         val t0 = System.nanoTime()
         runOne()
-        ((System.nanoTime() - t0) / 1e9, PhaseClock.snapshot())
+        (System.nanoTime() - t0) / 1e9
       }
-      var timed = (1 to reps).map(_ => oneRep()).sortBy(_._1)
+      var times = (1 to reps).map(_ => oneRep()).sorted
       // Spread = (median − min)/min: the bar that arbitrates a
       // cross-round delta. bench_delta classifies on MIN-based norm
       // ratios, so the relevant noise is how tightly the lower reps
@@ -242,14 +235,12 @@ object Bench {
         if (ok && ts.head > 0) (ts(ts.length / 2) - ts.head) / ts.head
         else 0.0
       var extra = 0
-      while (ok && extra < 3 && spreadOf(timed.map(_._1)) > 0.35) {
-        timed = (timed :+ oneRep()).sortBy(_._1)
+      while (ok && extra < 3 && spreadOf(times) > 0.35) {
+        times = (times :+ oneRep()).sorted
         extra += 1
       }
       spark.stop()
-      val times = timed.map(_._1)
       if (ok) {
-        if (timed.head._2.nonEmpty) phases(name) = timed.head._2
         Some(name -> (times(times.length / 2), times.head, spreadOf(times)))
       } else { failed += name; None }
     }
@@ -270,7 +261,7 @@ object Bench {
     }
     val total = results.map(_._2._1).sum
     val totalMin = results.map(_._2._2).sum
-    if (basket) basketPoints += basketPoint(cpus, sfDir)
+    if (basket) basketPoints += basketPoint(sfDir)
     val bScale = basketScale(basketPoints.toSeq)
     def rounded(x: Double, places: Int): Double =
       BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -307,9 +298,8 @@ object Bench {
       "commit" -> commitSha) ++ basketKeys ++ baselineKeys ++ ListMap(
       "failed" -> failed.toList, "sf" -> sfDir))
     // Detail for attribution, in the sidecar only: rep spreads, the
-    // NOISY names, lifecycle phase splits, and the raw per-checkpoint
-    // basket element times (a wandering element is attributable from
-    // the artifact alone).
+    // NOISY names, and the raw per-checkpoint basket element times (a
+    // wandering element is attributable from the artifact alone).
     val points = ListMap(basketPoints.zipWithIndex.map { case (p, i) =>
       val label = if (i == 0) "start"
         else if (i == basketPoints.length - 1) "end" else s"mid$i"
@@ -319,8 +309,6 @@ object Bench {
       "metric" -> "total_detail",
       "queries_spread" -> perQuery(v => rounded(v._3, 3)),
       "noisy" -> noisy,
-      "phases" -> ListMap(phases.toSeq.sortBy(_._1).map { case (q, ps) =>
-        q -> ListMap(ps.toSeq.sortBy(_._1): _*) }: _*),
       "basket_points" -> points))
     println(contract)
     // Sidecar: contract line first, detail second (dev/bench_delta.py

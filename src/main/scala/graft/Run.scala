@@ -19,8 +19,7 @@ object Run {
     require(args.nonEmpty, "usage: graft.Run <config.json>")
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(args(0))), "UTF-8")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, appName = "graft-run")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-run")
     dispatch(spark, json)
     spark.stop()
   }

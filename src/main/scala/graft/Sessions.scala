@@ -14,10 +14,15 @@ import org.apache.spark.sql.SparkSession
   * on cache-heavy queries conflated the flag with the code changes). */
 object Sessions {
 
+  /** The entrypoints' local core count: `SPARK_GRAFT_CPUS` when the
+    * deployment sets it, else every core this JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Local session with the engine's shared config. `shufflePartitions`
     * defaults to the core count (the local-mode scale heuristic every
     * entrypoint used); pass it explicitly when a tool needs a different
-    * plan shape (Explain mirrors the 32-core bench session). */
+    * plan shape (Explain keeps a fixed 32-partition plan shape). */
   def local(cpus: String, shufflePartitions: String = null,
       appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()

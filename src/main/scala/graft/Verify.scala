@@ -10,8 +10,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration only — the driver always passes exactly two args)
     val only = args.drop(2).headOption.map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, appName = "graft-verify")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-verify")
     // cross-round input-drift tripwire (see graft.model.Footprint): any
     // name/type change in the harness tables vs the committed footprint
     // is shouted to stderr before a single query runs (path anchored to

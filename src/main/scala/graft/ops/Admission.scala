@@ -62,7 +62,7 @@ import graft.sink.DeltaStore
   */
 object Admission {
 
-  /** @param target     BucketStore directory for the signature store
+  /** @param target     DeltaStore directory for the signature store
     * @param checkpoint streaming checkpoint dir
     * @param threshold  Jaccard rejection threshold on trigram shingles
     * @param perms      MinHash permutations (bands*rows must equal it)
@@ -194,7 +194,6 @@ object Admission {
     * directly for batch pipelines; [[admissionStream]] drives it per
     * micro-batch. */
   def admitBatch(batch: DataFrame, cfg: Config, batchId: Long): Long = {
-    import graft.PhaseClock.{time => phase}
     val spark = batch.sparkSession
     checkOrNoteParams(cfg) // refuse a config mismatched with the store
     // stamp BEFORE the batch runs (same fix as SpanStore's SPANPARAMS):
@@ -207,10 +206,6 @@ object Admission {
     val sig = signatures(batch, cfg.perms, cfg.portableHash).cache()
     var repSigRef: DataFrame = null // for the failure-path unpersist
     try {
-      // attribution seam: the sig cache would otherwise fill lazily inside
-      // whichever downstream phase touches it first, mis-charging the
-      // (expensive, portable-family) hash pass to that phase
-      phase("admit.sig") { sig.count() }
       // EXACT-clique contraction — the hot-band skew guard. Docs with an
       // IDENTICAL shingle set are pairwise Jaccard-1: under the edge
       // keep-first policy every non-min id dies whatever else happens,
@@ -229,15 +224,13 @@ object Admission {
         .select("doc_id")
       val repSig = sig.join(repIds, Seq("doc_id"), "left_semi").cache()
       repSigRef = repSig
-      // materialize the contraction as its own phase, then DROP the sig
-      // cache: every later consumer (bands, verify's shingle lookups,
-      // the admitted anti-join) reads repSig, so keeping both pinned
-      // would hold two near-identical copies of the batch's largest
-      // column for the call's lifetime — and an unseamed lazy fill
-      // would mis-charge the contraction's md5-over-shingles pass to
-      // admit.verify. The count feeds the admit.rejected attribution
-      // below (|rejected| = |repSig| − |admitted| exactly).
-      val nRep = phase("admit.contract") { repSig.count() }
+      // materialize the contraction (filling the sig cache on the way),
+      // then DROP the sig cache: every later consumer (bands, verify's
+      // shingle lookups, the admitted anti-join) reads repSig, so keeping
+      // both pinned would hold two near-identical copies of the batch's
+      // largest column for the call's lifetime. The count must run before
+      // the unpersist: a lazily filled repSig would recompute sig.
+      repSig.count()
       sig.unpersist()
       val bands = Dedup.lshBands(repSig, "sig", cfg.bands, cfg.rows, "doc_id")
 
@@ -280,16 +273,10 @@ object Admission {
               .select(col("new_id").as("doc_id"), col("corpus_id").as("other_id"),
                 lit("corpus").as("src")))
       }
-      // NOT materialized as its own job (r22, guide §1.2): `rejected`
-      // is consumed exactly once — by the admitted anti-join below —
-      // so the old rejected.cache() + count() paid one extra full pass
-      // over the candidate-verify pipeline per micro-batch purely for
-      // the admit.verify phase split. The verify join now executes once,
-      // inside the admitted aggregate (admit.merge covers candidate
-      // verification + merge in ONE job per batch); the rejected-row
-      // count the triage leaned on is recovered arithmetically below
-      // (every rejected id is a repSig id, and admitted is the exact
-      // anti-join, so |rejected| = |repSig| − |admitted|).
+      // NOT materialized as its own job: `rejected` is consumed exactly
+      // once, by the admitted anti-join below, so the verify join runs
+      // inside the admitted aggregate (candidate verification + merge in
+      // ONE job per batch).
       val rejected = rejectedIds(cand, repSig,
         storeOpt.map(_.select("doc_id", "sh")), cfg.threshold)
 
@@ -307,22 +294,19 @@ object Admission {
         .withColumn("bands", Dedup.lshBandArray(col("sig"), cfg.bands, cfg.rows))
         .cache()
       try {
-        val n = phase("admit.merge") { admitted.count() } // materialize before the flip GCs old gens
-        graft.PhaseClock.count("admit.rejected", nRep - n)
+        val n = admitted.count() // materialize before the flip GCs old gens
         repSig.unpersist()
-        phase("admit.write") {
-          if (legacy) {
-            val upgraded =
-              if (legacyBands) storeOpt.get
-                .withColumn("bands", Dedup.lshBandArray(col("sig"), cfg.bands, cfg.rows))
-              else storeOpt.get
-            DeltaStore.rewrite(
-              upgraded.unionByName(admitted).withColumn("net_op", lit("insert")),
-              cfg.target, Seq("doc_id"), cfg.nBuckets, batchId)
-          } else
-            DeltaStore.append(admitted.withColumn("net_op", lit("insert")),
-              cfg.target, Seq("doc_id"), cfg.nBuckets, batchId, cfg.maxChain)
-        }
+        if (legacy) {
+          val upgraded =
+            if (legacyBands) storeOpt.get
+              .withColumn("bands", Dedup.lshBandArray(col("sig"), cfg.bands, cfg.rows))
+            else storeOpt.get
+          DeltaStore.rewrite(
+            upgraded.unionByName(admitted).withColumn("net_op", lit("insert")),
+            cfg.target, Seq("doc_id"), cfg.nBuckets, batchId)
+        } else
+          DeltaStore.append(admitted.withColumn("net_op", lit("insert")),
+            cfg.target, Seq("doc_id"), cfg.nBuckets, batchId, cfg.maxChain)
         // the legacy layout's sibling band dir is orphaned once the store
         // carries packed bands; the existence check (not `legacy`) also
         // covers a replay after a crash between the upgrade flip and this
@@ -352,8 +336,7 @@ object Admission {
       .option("checkpointLocation", cfg.checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.PhaseClock.count("batches")
-        graft.PhaseClock.time("apply") { admitBatch(batch, cfg, id) }
+        admitBatch(batch, cfg, id)
         ()
       }
       .start()

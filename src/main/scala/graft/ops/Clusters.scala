@@ -95,12 +95,9 @@ object Clusters {
   def components(nodes: DataFrame, idCol: String, edges: DataFrame,
       aId: String, bId: String, maxIters: Int = 25): DataFrame = {
     val sym = symmetricEdges(edges, aId, bId).cache()
-    // fill the edge cache eagerly as its own phase: edge DERIVATION
-    // (the caller's pair-gen plan — e.g. a hamming ball-probe join) is
-    // usually the single most expensive step of a components call, and
-    // letting it fill lazily inside round 1 both mis-charges it to the
-    // propagation loop and makes round-1 timing non-reproducible
-    val nEdges = graft.PhaseClock.time("cc.edges") { sym.count() }
+    // the edge count decides the no-edge shortcut below (and fills the
+    // edge cache every round reads)
+    val nEdges = sym.count()
     var labels = nodes
       .select(col(idCol).cast("long").as("v"), col(idCol).cast("long").as("comp"))
     // no edge: the identity labels are the fixpoint (distinct, as a
@@ -126,15 +123,11 @@ object Clusters {
           .join(labels.select(col("v").as("comp"), col("comp").as("jcomp")), "comp")
           .select(col("v"), col("jcomp").as("comp")))
       val folded = candidates.groupBy("v").agg(min("comp").as("comp"))
-      graft.PhaseClock.count("cc.rounds")
-      // cc.round: the whole round's cost. Under AQE the cut itself
-      // executes the plan's shuffle stages (join + jump + min-fold) to
-      // pick the final plan; the potential job then runs the final
-      // stage and persists the blocks.
-      val (next, rdds, nextPot) = graft.PhaseClock.time("cc.round") {
-        val (n, r) = Lineage.cutLazy(folded)
-        (n, r, potential(r.head))
-      }
+      // Under AQE the cut itself executes the plan's shuffle stages
+      // (join + jump + min-fold) to pick the final plan; the potential
+      // job then runs the final stage and persists the blocks.
+      val (next, rdds) = Lineage.cutLazy(folded)
+      val nextPot = potential(rdds.head)
       liveRdds.foreach(_.unpersist(blocking = false))
       liveRdds = rdds
       converged = pot.contains(nextPot)

@@ -178,16 +178,15 @@ object Graphs {
     // re-shuffle |E| every round); the decimal validation above proves
     // every per-src long sum fits before the guard job runs
     val eod = e.join(wsums, "src").cache()
-    val (nNodes, wMax) = graft.PhaseClock.time("pr.edges") {
-      val wm = wMaxF() // weighted: fills the ed/ws caches via the guard agg
-      eod.count()
-      val n = nodes.count()
-      // eod/nodes now hold the operands — release the prep caches
-      // (e itself in the unweighted form; ed/ws in the weighted one,
-      // where e is only a projection over ed)
-      prepCaches.foreach(_.unpersist(blocking = false))
-      (n, wm)
-    }
+    // the overflow guards below read wMax and |V|; eod and nodes must be
+    // materialized before the prep caches they were built from go
+    val wMax = wMaxF() // weighted: fills the ed/ws caches via the guard agg
+    eod.count()
+    val nNodes = nodes.count()
+    // eod/nodes now hold the operands — release the prep caches
+    // (e itself in the unweighted form; ed/ws in the weighted one,
+    // where e is only a projection over ed)
+    prepCaches.foreach(_.unpersist(blocking = false))
     // total mass never exceeds |V|·scale (contributions are floors of a
     // conserved quantity), so the damping multiply is the overflow edge
     require(nNodes <= Long.MaxValue / dampNum / scale,
@@ -206,12 +205,9 @@ object Graphs {
     var liveRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     (1 to iterations).foreach { _ =>
       val next = roundFrame(eod, ranks, nodes, seedBase, dampNum, dampDen)
-      graft.PhaseClock.count("pr.rounds")
       // internal-row lineage cut (Lineage.cut): materialize this round,
       // then drop the previous round's blocks
-      val (cut, rdds, _) = graft.PhaseClock.time("pr.round") {
-        Lineage.cut(next)
-      }
+      val (cut, rdds, _) = Lineage.cut(next)
       ranks = cut
       liveRdds.foreach(_.unpersist(blocking = false))
       liveRdds = rdds
@@ -264,17 +260,15 @@ object Graphs {
     val und = simpleUndirected(edges, srcCol, dstCol).cache()
     val deg = degreesOf(und).cache()
     val oriented = orientEdges(und, deg).cache()
-    graft.PhaseClock.time("tri.orient") {
-      oriented.count() // materialize: read twice by wedges + closing join
-    }
+    // materialize before und goes: oriented is read twice (wedges +
+    // closing join)
+    oriented.count()
     und.unpersist(blocking = false)
     val out = triangleFrame(oriented, deg, scale)
     // materialize before releasing the operand caches (the caller's
     // frame must not silently rebuild the wedge join per action) —
     // internal-row cut, see Lineage.cut
-    val (res, rdds, _) = graft.PhaseClock.time("tri.count") {
-      Lineage.cut(out)
-    }
+    val (res, rdds, _) = Lineage.cut(out)
     oriented.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     GraphBlocks.register(res, rdds)
@@ -387,17 +381,17 @@ object Graphs {
     val adj = und.select(col("u").as("n"), col("v").as("nb"))
       .unionByName(und.select(col("v").as("n"), col("u").as("nb")))
       .cache()
-    graft.PhaseClock.time("lpa.adj") { adj.count() }
+    // fill the cache before round 1 is planned: over an unfilled cache
+    // AQE broadcasts the whole adjacency into round 1's join instead of
+    // a sort-merge join (graph_lpa at sf0.1, 4 cores: min 3.4 → 4.2 s)
+    adj.count()
     var labels = adj.select(col("n")).distinct()
       .select(col("n"), col("n").as("label"))
     var liveRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     (1 to iterations).foreach { _ =>
       val next = lpaRoundFrame(adj, labels)
-      graft.PhaseClock.count("lpa.rounds")
       // internal-row lineage cut (Lineage.cut)
-      val (cut, rdds, _) = graft.PhaseClock.time("lpa.round") {
-        Lineage.cut(next)
-      }
+      val (cut, rdds, _) = Lineage.cut(next)
       labels = cut
       liveRdds.foreach(_.unpersist(blocking = false))
       liveRdds = rdds
@@ -455,7 +449,6 @@ object Graphs {
       seeds.select(col(seedCol).cast("long").as("n"))
         .filter(col("n").isNotNull).distinct(), "n")
       .select(col("n"), lit(0L).as("dist"))
-    graft.PhaseClock.time("bfs.edges") { e.count() }
     // rounds' blocks all stay pinned: every one is part of the result
     // union, so none can be dropped early — collected so
     // GraphBlocks.release can free them all at once
@@ -467,10 +460,7 @@ object Graphs {
     var frontierN = n0
     var i = 1
     while (i <= maxDepth && frontierN > 0) { // empty frontier: done
-      graft.PhaseClock.count("bfs.rounds")
-      val (next, r, n) = graft.PhaseClock.time("bfs.round") {
-        Lineage.cut(bfsRoundFrame(frontier, e, dist, i))
-      }
+      val (next, r, n) = Lineage.cut(bfsRoundFrame(frontier, e, dist, i))
       pinned ++= r
       frontier = next
       frontierN = n
@@ -515,7 +505,6 @@ object Graphs {
       landmarks.select(col(lmCol).cast("long").as("n"))
         .filter(col("n").isNotNull).distinct(), "n")
       .select(col("n").as("lm"), col("n"), lit(0L).as("dist"))
-    graft.PhaseClock.time("lmbfs.edges") { e.count() }
     val pinned = Seq.newBuilder[org.apache.spark.rdd.RDD[_]]
     val (d0, r0, n0) = Lineage.cut(s0)
     pinned ++= r0
@@ -524,14 +513,11 @@ object Graphs {
     var frontierN = n0
     var i = 1
     while (i <= maxDepth && frontierN > 0) {
-      graft.PhaseClock.count("lmbfs.rounds")
-      val (next, r, n) = graft.PhaseClock.time("lmbfs.round") {
-        Lineage.cut(frontier
-          .join(e.select(col("src").as("n"), col("dst")), "n")
-          .select(col("lm"), col("dst").as("n")).distinct()
-          .withColumn("dist", lit(i).cast("long"))
-          .join(dist, Seq("lm", "n"), "left_anti"))
-      }
+      val (next, r, n) = Lineage.cut(frontier
+        .join(e.select(col("src").as("n"), col("dst")), "n")
+        .select(col("lm"), col("dst").as("n")).distinct()
+        .withColumn("dist", lit(i).cast("long"))
+        .join(dist, Seq("lm", "n"), "left_anti"))
       pinned ++= r
       frontier = next
       frontierN = n
@@ -588,16 +574,13 @@ object Graphs {
     var round = 1
     var converged = false
     while (round <= rounds && !converged) {
-      graft.PhaseClock.count("kcore.rounds")
       // keep is lazy — the whole round (degree agg + semi-joins)
-      // executes at the cut below, so one phase covers it honestly
+      // executes at the cut below
       val keep = degreesOf(e).filter(col("degree") >= k).select(col("n"))
-      val (e2, r2, n2) = graft.PhaseClock.time("kcore.peel") {
-        Lineage.cut(e
-          .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-          .select(col("u"), col("v")))
-      }
+      val (e2, r2, n2) = Lineage.cut(e
+        .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+        .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
+        .select(col("u"), col("v")))
       eRdds.foreach(_.unpersist(blocking = false))
       // nothing peeled: every node already has degree >= k, so all
       // remaining rounds are no-ops — identical result, skip them

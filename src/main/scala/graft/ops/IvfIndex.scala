@@ -151,7 +151,6 @@ object IvfIndex {
     * the same reason as [[Admission.admitBatch]]: the flip GCs superseded
     * generations a lazy plan could still reference. */
   def indexBatch(batch: DataFrame, cfg: Config, batchId: Long): Long = {
-    import graft.PhaseClock.{time => phase}
     val spark = batch.sparkSession
     val cent = readCentroids(spark, cfg.target).getOrElse {
       // first batch bootstraps the quantizer: hash-ranked sample of ITS
@@ -159,11 +158,9 @@ object IvfIndex {
       // corpus, increments quantized against it). Freeze BEFORE any
       // generation flips so a crash-replay of this batch reloads the
       // identical quantizer instead of re-seeding over different data.
-      val seeded = phase("ivf.seed") {
-        Similarity.seedCentroids(batch, cfg.cells,
+      val seeded = Similarity.seedCentroids(batch, cfg.cells,
           Similarity.seedHashFor("vec_id", cfg.portableSeeding), "vec_id", "v")
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      }
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
       writeCentroids(cfg.target, seeded)
       readCentroids(spark, cfg.target).get
     }
@@ -195,12 +192,10 @@ object IvfIndex {
       val (codebook, m, k) = readPqCodebook(spark, cfg.target).getOrElse {
         // first PQ batch freezes the codebook — trained on ITS vectors,
         // the same bootstrap contract as the coarse quantizer above
-        val trained = phase("ivf.pqtrain") {
-          Similarity.pqTrain(batch, cfg.pqM, cfg.pqK, cfg.pqIters,
+        val trained = Similarity.pqTrain(batch, cfg.pqM, cfg.pqK, cfg.pqIters,
             "vec_id", "v", cfg.portableSeeding, cfg.trainSample)
-            .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
-            .toSeq
-        }
+          .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
+          .toSeq
         writePqCodebook(cfg.target, cfg.pqM, cfg.pqK, trained)
         readPqCodebook(spark, cfg.target).get
       }
@@ -211,12 +206,10 @@ object IvfIndex {
       .withColumn("net_op", lit("insert"))
       .cache()
     try {
-      val n = phase("ivf.assign") { postings.count() }
-      phase("ivf.write") {
-        DeltaStore.append(postings, cfg.target, Seq("vec_id"), cfg.cells,
-          batchId, cfg.maxChain,
-          bucketExpr = Some(col("cell").cast("int")))
-      }
+      val n = postings.count() // materialize before the flip GCs old gens
+      DeltaStore.append(postings, cfg.target, Seq("vec_id"), cfg.cells,
+        batchId, cfg.maxChain,
+        bucketExpr = Some(col("cell").cast("int")))
       n
     } finally postings.unpersist()
   }
@@ -228,8 +221,7 @@ object IvfIndex {
       .option("checkpointLocation", cfg.checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.PhaseClock.count("batches")
-        graft.PhaseClock.time("apply") { indexBatch(batch, cfg, id) }
+        indexBatch(batch, cfg, id)
         ()
       }
       .start()

@@ -134,7 +134,6 @@ object SpanStore {
     * streaming driver's form (stats are an audit output; the stream
     * needs only the append). Returns the novel-digest count. */
   def admitOnly(batch: DataFrame, cfg: Config, batchId: Long): Long = {
-    import graft.PhaseClock.{time => phase}
     val spark = batch.sparkSession
     checkOrNoteParams(cfg)
     stampParams(cfg)
@@ -144,13 +143,11 @@ object SpanStore {
       val novel = Dedup.chunkFlagsAgainst(chunks, corpus, "doc_id")
         .filter(col("_kept")).select(col("_h")).distinct().cache()
       try {
-        // materialize before the flip GCs old gens; this is also the
-        // store-probe phase (chunking + digest join run here)
-        val n = phase("span.probe") { novel.count() }
-        phase("span.append") {
-          DeltaStore.append(novel.withColumn("net_op", lit("insert")),
-            cfg.target, Seq("_h"), cfg.nBuckets, batchId, cfg.maxChain)
-        }
+        // materialize before the flip GCs old gens (chunking + the
+        // digest join run here)
+        val n = novel.count()
+        DeltaStore.append(novel.withColumn("net_op", lit("insert")),
+          cfg.target, Seq("_h"), cfg.nBuckets, batchId, cfg.maxChain)
         n
       } finally { novel.unpersist(); () }
     } finally { chunks.unpersist(); () }
@@ -165,8 +162,7 @@ object SpanStore {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.PhaseClock.count("batches")
-        graft.PhaseClock.time("apply") { admitOnly(batch, cfg, id) }
+        admitOnly(batch, cfg, id)
         ()
       }
       .start()

@@ -608,8 +608,8 @@ object Pipeline {
   /** Shared update-mode upsert feed: per batch, stamp the batch id as
     * `_b` and append to a parquet feed (a reader resolves the latest
     * `_b` per key). The sink half of funnel_upsert and
-    * retention_upsert — one definition, so PhaseClock accounting and
-    * the resolution column can't drift between them. */
+    * retention_upsert — one definition, so the resolution column
+    * can't drift between them. */
   private def upsertFeed[T](ds: org.apache.spark.sql.Dataset[T],
       path: String, ckpt: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -618,13 +618,9 @@ object Pipeline {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.Dataset[T], id: Long) =>
-        graft.PhaseClock.count("batches")
-        graft.PhaseClock.time("apply") {
-          b.withColumn("_b",
-            org.apache.spark.sql.functions.lit(id)).write
-            .mode("append").parquet(path)
-        }
-        ()
+        b.withColumn("_b",
+          org.apache.spark.sql.functions.lit(id)).write
+          .mode("append").parquet(path)
       }
       .start()
 
@@ -736,11 +732,7 @@ object Pipeline {
     // thread or leave the listeners registered on the shared session
     try {
     poller.start()
-    // PhaseClock seams ("start" = query construction + .start(); "drain" =
-    // awaitTermination, which CONTAINS the foreachBatch "apply" time —
-    // drain minus apply is trigger/checkpoint-commit overhead): Bench
-    // publishes this split so lifecycle cost is attributable per phase.
-    val q = graft.PhaseClock.time("start") { snk.get("type").asText() match {
+    val q = snk.get("type").asText() match {
       case "parquet_merge" =>
         val target = snk.get("path").asText()
         val pkCols = strs(snk.get("pk"))
@@ -749,9 +741,7 @@ object Pipeline {
         // buckets it touches and flips the store's MANIFEST atomically —
         // O(touched) per batch, crash-safe (see graft.sink.BucketStore)
         graft.streaming.ChangeStream.compactedApply(transformed, ckpt) { (net, id) =>
-          graft.PhaseClock.time("apply") {
-            graft.sink.BucketStore.merge(net, target, pkCols, nBuckets, id)
-          }
+          graft.sink.BucketStore.merge(net, target, pkCols, nBuckets, id)
         }
       case "parquet_delta" =>
         val target = snk.get("path").asText()
@@ -771,14 +761,11 @@ object Pipeline {
         // generation — O(|batch|) per batch, merge deferred to read,
         // chain-capped compaction — crash-safe (see graft.sink.DeltaStore)
         graft.streaming.ChangeStream.compactedApply(transformed, ckpt) { (net, id) =>
-          graft.PhaseClock.time("apply") {
-            graft.sink.DeltaStore.append(net, target, pkCols, nBuckets, id,
-              maxChain, maxLiveGens)
-          }
-          if (autoSnap > 0) graft.PhaseClock.time("maintain") {
+          graft.sink.DeltaStore.append(net, target, pkCols, nBuckets, id,
+            maxChain, maxLiveGens)
+          if (autoSnap > 0)
             graft.sink.DeltaStore.maybeSnapshot(net.sparkSession, target,
               nBuckets, autoSnap)
-          }
         }
       case "corpus_admit" =>
         // streaming corpus admission (the training-data flagship in task
@@ -882,22 +869,18 @@ object Pipeline {
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.PhaseClock.count("batches")
-            graft.PhaseClock.time("apply") {
-              import org.apache.spark.sql.functions.{col, lit}
-              // replay-idempotent: each batch lands in its own _b=<id>
-              // partition under DYNAMIC overwrite, so an at-least-once
-              // redelivery after a mid-drain crash replaces its own
-              // partial output instead of double-appending admitted
-              // rows (a plain append broke the "admitted set == batch
-              // scoring" contract on replay)
-              scorer(b).filter(col("score") >= minScore)
-                .withColumn("_b", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_b").parquet(target)
-            }
-            ()
+            import org.apache.spark.sql.functions.{col, lit}
+            // replay-idempotent: each batch lands in its own _b=<id>
+            // partition under DYNAMIC overwrite, so an at-least-once
+            // redelivery after a mid-drain crash replaces its own
+            // partial output instead of double-appending admitted
+            // rows (a plain append broke the "admitted set == batch
+            // scoring" contract on replay)
+            scorer(b).filter(col("score") >= minScore)
+              .withColumn("_b", lit(id))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("_b").parquet(target)
           }
           .start()
       case "jdbc_apply" =>
@@ -915,18 +898,18 @@ object Pipeline {
             Some(graft.sink.SqlDialect.byName(snk.get("dialect").asText()))
           else None)
         graft.streaming.ChangeStream.compactedApply(transformed, ckpt) { (net, _) =>
-          graft.PhaseClock.time("apply") { graft.sink.JdbcApply(net, jc) }
+          graft.sink.JdbcApply(net, jc)
         }
       case other => throw new IllegalArgumentException(
         "streaming pipeline needs a parquet_merge, parquet_delta, " +
           s"jdbc_apply, corpus_admit, span_admit, ivf_append, dsir_admit, " +
           s"funnel_upsert or retention_upsert sink, got $other")
-    } }
+    }
     // listeners are session-global: scope the alarm to THIS pipeline's
     // query so a shared session's other streams never trip it
     watchdog.restrictTo(q.id)
     qid = Some(q.id)
-    graft.PhaseClock.time("drain") { q.awaitTermination() }
+    q.awaitTermination()
     // the gauge read below races async listener delivery — wait for
     // THIS query's termination event (FIFO bus ⇒ all its progress
     // events are in) before reading; see PipelineMetrics.sawTermination

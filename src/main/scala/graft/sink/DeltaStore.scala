@@ -34,13 +34,13 @@ import scala.jdk.CollectionConverters._
   * live generation dirs below `maxLiveGens`) is written verbatim by ONE
   * query — no cache, no bucket-id collect, no shuffle of its own — and
   * the buckets it appends to are observed on that same write. Only a
-  * batch that can fold first collects its bucket ids, to pick the fold
-  * set (touched buckets at the cap); so the `delta.net` PhaseClock
-  * sub-phase appears only on such batches. Every generation of a
-  * pk-hash store, here and in [[BucketStore]], is a flat file set sorted
-  * by `bucket` ([[BucketStore.writeBuckets]]); a store bucketed by a
-  * semantic key (`bucketExpr`, stamped `BUCKETBY`) keeps one dir per
-  * bucket ([[BucketStore.writeCells]]) so its reads can prune files.
+  * batch that can fold first caches the net batch and collects its
+  * bucket ids, to pick the fold set (touched buckets at the cap). Every
+  * generation of a pk-hash store, here and in [[BucketStore]], is a
+  * flat file set sorted by `bucket` ([[BucketStore.writeBuckets]]); a
+  * store bucketed by a semantic key (`bucketExpr`, stamped `BUCKETBY`)
+  * keeps one dir per bucket ([[BucketStore.writeCells]]) so its reads
+  * can prune files.
   *
   * Crash contract is [[BucketStore]]'s, unchanged: generation dirs are
   * keyed by batch id and written mode=overwrite (replay self-heals its
@@ -426,31 +426,21 @@ object DeltaStore {
     // a batch can fold only if some chain (or, with maxChain < 1, even a
     // fresh one) is at its cap, or the store-wide fold is due
     val canFold = globalFold || maxChain < 1 || manifest0.keys.exists(foldsOnAppend)
-    // delta.* are attribution sub-phases of the enclosing sink "apply"
-    // ([[graft.PhaseClock]]): delta.net = computing+caching the net batch
-    // and collecting its bucket ids (only on batches that can fold),
-    // delta.write = the generation write INCLUDING any chain-fold reads,
-    // delta.flip = manifest flip + GC sweep. delta.folds counts
-    // chain-capped bucket folds, so the artifact shows how often the LSM
-    // fold cost is actually paid.
     if (!canFold) {
       // no chain can fold: the generation is the batch's rows verbatim,
       // written by ONE query — no cache, no bucket-id collect. The buckets
       // it appends to are the ones the write saw; an empty batch sees
       // none, flips the manifest unchanged, and its row-less dir is swept
       // by that flip like any unreferenced generation.
-      val present = graft.PhaseClock.time("delta.write") {
+      val present =
         writeGeneration(net.withColumn("bucket", bucketOf), target, genDir, nBuckets)
-      }
       return manifest0 ++
         present.map(b => b -> (manifest0.getOrElse(b, Seq.empty) :+ genName))
     }
     val bucketed = net.withColumn("bucket", bucketOf).cache()
     try {
-      val touched = graft.PhaseClock.time("delta.net") {
-        bucketed.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSet // bucket ids only — bounded metadata
-      }
+      val touched = bucketed.select("bucket").distinct()
+        .collect().map(_.getInt(0)).toSet // bucket ids only — bounded metadata
       if (touched.isEmpty && !globalFold) {
         // empty micro-batch: nothing to write — a gen dir holding only
         // _SUCCESS would be referenced by no chain
@@ -473,7 +463,6 @@ object DeltaStore {
             .withColumn("bucket", bucketOf))
         }
       if (foldBuckets.nonEmpty) {
-        graft.PhaseClock.count("delta.folds", foldBuckets.size)
         // folded rows re-assert under THIS batch's id — states older than
         // it stop being reconstructable; record that before the flip
         raiseHistoryFloor(target, batchId)
@@ -483,10 +472,8 @@ object DeltaStore {
         .getOrElse(deltaPart)
       // a folded bucket can net to empty (all rows deleted): the write
       // holds no row of it, and its chain must be dropped, not reset
-      val present = graft.PhaseClock.time("delta.write") {
-        writeGeneration(out, target, genDir,
-          math.min(nBuckets, appendBuckets.size + foldBuckets.size))
-      }
+      val present = writeGeneration(out, target, genDir,
+        math.min(nBuckets, appendBuckets.size + foldBuckets.size))
       val kept = manifest0.view
         .filterKeys(b => !foldBuckets(b) && !appendBuckets(b)).toMap
       kept ++
@@ -504,12 +491,11 @@ object DeltaStore {
     * flip time. */
   def flip(target: String, newManifest: Map[Int, Seq[String]],
       appliedBatchId: Long,
-      fs: ManifestStore = ManifestStore.LocalFs): Unit =
-    graft.PhaseClock.time("delta.flip") {
-      writeManifest(target, newManifest,
-        math.max(readApplied(target), appliedBatchId), fs)
-      fs.sweep(target, Seq("gen-", "snap-"), newManifest.values.flatten.toSet)
-    }
+      fs: ManifestStore = ManifestStore.LocalFs): Unit = {
+    writeManifest(target, newManifest,
+      math.max(readApplied(target), appliedBatchId), fs)
+    fs.sweep(target, Seq("gen-", "snap-"), newManifest.values.flatten.toSet)
+  }
 
   /** Offline compaction — the maintenance entry point for read-heavy
     * targets: materialize the resolved state as ONE folded generation

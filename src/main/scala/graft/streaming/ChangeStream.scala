@@ -169,10 +169,6 @@ object ChangeStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.PhaseClock.count("batches")
-        // the "apply" phase span lives in each sink's lambda, NOT here:
-        // a sink that also runs maintenance (auto-snapshot) times it as
-        // "maintain" OUTSIDE apply, so the two phases never double-count
         applyBatch(Compactor.compact(batch.toDF()), id)
       }
       .start()

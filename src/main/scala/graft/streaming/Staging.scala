@@ -59,13 +59,12 @@ object Staging {
         java.nio.charset.StandardCharsets.UTF_8) == srcSig
     if (fresh) {
       // staged and current — nothing to do
-    } else graft.PhaseClock.time("stage") {
+    } else if (slices <= 1 && java.nio.file.Files.isRegularFile(src)) {
       // the fast single-slice copy only works for a FILE source; a
       // Spark-written source is a DIRECTORY (Files.copy would stage an
       // empty dir named slice-0.parquet and every drain would silently
       // stream zero rows) — directories take the spark.read path below,
       // which handles slices = 1 fine (one range covering everything)
-      if (slices <= 1 && java.nio.file.Files.isRegularFile(src)) {
       java.nio.file.Files.copy(src, drop.resolve("slice-0.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       writeMarker(marker, srcSig)
@@ -96,7 +95,7 @@ object Staging {
           java.nio.file.attribute.FileTime.fromMillis(1_600_000_000_000L + i * 1000L))
       }
       writeMarker(marker, srcSig)
-    } }
+    }
     drop.toString
   }
 

@@ -22,9 +22,7 @@ import org.apache.spark.sql.SparkSession
   * [1, session shuffle partitions]: it never RAISES parallelism above
   * the session's configured ceiling (a deployment sizes that for its
   * cluster), it only refuses to spread a small drain across hundreds
-  * of near-empty state stores. `spark.graft.stream.partitions`
-  * overrides the derivation outright (a deployment whose key
-  * cardinality, not input bytes, drives state sizing sets this).
+  * of near-empty state stores.
   */
 object StreamTuning {
 
@@ -69,49 +67,25 @@ object StreamTuning {
     (out += paths.substring(from)).result()
   }
 
-  private def bytesConf(spark: SparkSession, key: String,
-      dflt: Long): Long =
-    spark.conf.getOption(key).map { v =>
-      val t = v.trim.toLowerCase
-      def num(s: String) = s.trim.toDouble
-      if (t.endsWith("g") || t.endsWith("gb"))
-        (num(t.stripSuffix("gb").stripSuffix("g")) * (1L << 30)).toLong
-      else if (t.endsWith("m") || t.endsWith("mb"))
-        (num(t.stripSuffix("mb").stripSuffix("m")) * (1L << 20)).toLong
-      else if (t.endsWith("k") || t.endsWith("kb"))
-        (num(t.stripSuffix("kb").stripSuffix("k")) * (1L << 10)).toLong
-      else if (t.endsWith("b")) num(t.stripSuffix("b")).toLong
-      else num(t).toLong
-    }.getOrElse(dflt)
-
   /** Partition count for a drain over the staged input at `paths`
     * (files or directories, summed): ceil(bytes / advisory), clamped
     * to [1, spark.sql.shuffle.partitions]. */
   def drainPartitions(spark: SparkSession, paths: Seq[String]): Int = {
     val cur = spark.conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(200)
-    // override: clamp to >= 1 and ignore unparseable values (ADVICE r21:
-    // a raw "0"/"-4"/"abc" here otherwise propagates into
-    // spark.sql.shuffle.partitions and fails the drain obscurely)
-    spark.conf.getOption("spark.graft.stream.partitions")
-      .flatMap { v =>
-        val n = scala.util.Try(v.trim.toInt).toOption
-        if (n.isEmpty) System.err.println(
-          s"[stream-tuning] ignoring unparseable spark.graft.stream.partitions='$v'")
-        n.map(math.max(1, _))
-      }
-      .getOrElse {
-        val advisory = bytesConf(spark,
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", 64L << 20)
-        val bytes = paths.map(sizeOf(spark, _)).sum
-        // unknown input (no paths, or nothing staged yet): keep the
-        // session's own setting rather than inventing a tiny drain
-        if (bytes <= 0L) cur
-        else {
-          val n = math.ceil(bytes.toDouble / math.max(advisory, 1L)).toLong
-          math.max(1L, math.min(cur.toLong, n)).toInt
-        }
-      }
+    // Spark's own parser for byte-size confs ("64kb", "64m", plain bytes)
+    val advisory = spark.conf
+      .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(64L << 20)
+    val bytes = paths.map(sizeOf(spark, _)).sum
+    // unknown input (no paths, or nothing staged yet): keep the
+    // session's own setting rather than inventing a tiny drain
+    if (bytes <= 0L) cur
+    else {
+      val n = math.ceil(bytes.toDouble / math.max(advisory, 1L)).toLong
+      math.max(1L, math.min(cur.toLong, n)).toInt
+    }
   }
 
   // one drain at a time per session: the save/set/restore below mutates

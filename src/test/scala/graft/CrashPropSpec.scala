@@ -119,9 +119,14 @@ class CrashPropSpec extends SparkSpec {
               }
               deliver()
             case Torn =>
-              val genDir = Paths.get(target, s"gen-$b", "bucket=0")
-              Files.createDirectories(genDir)
-              Files.write(genDir.resolve("torn.parquet"), Array[Byte](1, 2, 3))
+              // a half-written generation in both layouts: a flat part
+              // file directly under the dir, and a `bucket=` dir
+              val genDir = Paths.get(target, s"gen-$b")
+              Files.createDirectories(genDir.resolve("bucket=0"))
+              Files.write(genDir.resolve("part-00000-torn.parquet"),
+                Array[Byte](1, 2, 3))
+              Files.write(genDir.resolve("bucket=0").resolve("torn.parquet"),
+                Array[Byte](1, 2, 3))
               assert(manifestComplete(target))
               deliver() // overwrite-mode write replaces the torn dir
             case Redeliver =>

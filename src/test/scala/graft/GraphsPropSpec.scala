@@ -346,16 +346,21 @@ class GraphsPropSpec extends SparkSpec {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  /** Labels and round count of one `Clusters.components` call. */
+  /** Labels and round count of one `Clusters.components` call. A round
+    * is one lineage cut (a `localCheckpoint` execution) plus one job
+    * outside SQL (its potential); both counts must agree. */
   private def components(nodes: Seq[Long], edges: Seq[(Long, Long)])
       : (Map[Long, Long], Long) = {
-    def rounds = PhaseClock.snapshot().getOrElse("cc.rounds", 0.0).toLong
-    val before = rounds
-    val got = graft.ops.Clusters.components(nodes.toDF("id"), "id",
+    var labeled: org.apache.spark.sql.DataFrame = null
+    val Observed(runs, _, bareJobs) = Observed(spark) {
+      labeled = graft.ops.Clusters.components(nodes.toDF("id"), "id",
         edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect()
+    }
+    val rounds = runs.count(_._1.takeWhile(_ != ' ') == "localCheckpoint")
+    assert(bareJobs == rounds, s"$bareJobs jobs outside SQL for $rounds rounds")
+    val got = labeled.as[(Long, Long)].collect()
     assert(got.length == nodes.size, s"one label per node: ${got.toSeq}")
-    (got.toMap, rounds - before)
+    (got.toMap, rounds.toLong)
   }
 
   test("components equals a sequential union-find; rounds 0 without " +

@@ -41,11 +41,7 @@ class StreamTuningSpec extends SparkSpec {
     }
   }
 
-  test("explicit override wins; empty/unknown input keeps the session value") {
-    val f = tmpFile(1024)
-    spark.conf.set("spark.graft.stream.partitions", "7")
-    try assert(StreamTuning.drainPartitions(spark, Seq(f)) == 7)
-    finally spark.conf.unset("spark.graft.stream.partitions")
+  test("empty/unknown input keeps the session value") {
     // no paths / missing path: never invent a tiny drain
     val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(StreamTuning.drainPartitions(spark, Nil) == cur)
@@ -83,20 +79,6 @@ class StreamTuningSpec extends SparkSpec {
     }
     assert(StreamTuning.sizeOf(spark, s"$dir/{a,b}/*.bin") == 123L)
     assert(StreamTuning.sizeOf(spark, s"$dir/{a,b}/*.bin,$dir/c/x.bin") == 130L)
-  }
-
-  test("unparseable or non-positive partition overrides never poison " +
-      "the drain") {
-    val f = tmpFile(1024)
-    for (bad <- Seq("0", "-4")) {
-      spark.conf.set("spark.graft.stream.partitions", bad)
-      try assert(StreamTuning.drainPartitions(spark, Seq(f)) == 1)
-      finally spark.conf.unset("spark.graft.stream.partitions")
-    }
-    spark.conf.set("spark.graft.stream.partitions", "abc")
-    // unparseable: ignored, derivation proceeds (small input -> 1)
-    try assert(StreamTuning.drainPartitions(spark, Seq(f)) == 1)
-    finally spark.conf.unset("spark.graft.stream.partitions")
   }
 
   test("withDrainPartitions pins for the body and restores the session " +
