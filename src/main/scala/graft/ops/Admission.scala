@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sink.DeltaStore
+import graft.sink.{DeltaStore, ManifestStore}
 
 /** Streaming corpus admission — incremental dedup in its full
   * production shape. Each arriving micro-batch of documents is:
@@ -50,15 +50,6 @@ import graft.sink.DeltaStore
   * and replay safety is the generation-key + `#applied` contract (an
   * already-flipped batch is detected and skipped; an unflipped one
   * recomputes deterministically against the pre-batch store).
-  *
-  * Pre-delta layouts migrate in one pass on their first post-upgrade
-  * batch: a store written by the read-modify-write era (no `#applied`
-  * manifest header), or by the still-earlier two-store layout (no
-  * packed `bands` column, sibling `<target>.bands` dir), has its whole
-  * corpus re-asserted — bands derived from stored signatures where
-  * missing — as THIS batch's single generation ([[DeltaStore.rewrite]]:
-  * chains reset atomically, superseded generations swept after the
-  * flip, orphaned sibling dir removed).
   */
 object Admission {
 
@@ -78,10 +69,6 @@ object Admission {
       nBuckets: Int = 16, portableHash: Boolean = false,
       maxChain: Int = DeltaStore.defaultMaxChain) {
     require(bands * rows == perms, "bands*rows must equal perms")
-    /** The LEGACY two-store layout's sibling band dir — only ever read to
-      * detect and clean up after the one-pass upgrade to the single-store
-      * packed-band layout. */
-    def bandTarget: String = s"$target.bands"
   }
 
   /** (doc_id, sh, sig) for a (doc_id, text) frame — the store's schema.
@@ -112,10 +99,7 @@ object Admission {
 
   /** Current signature-store contents (None when absent). The admission
     * store is append-only, so this is [[DeltaStore.readAppendOnly]]'s
-    * plain chain-union scan — and it also reads stores written by the
-    * pre-delta BucketStore layout unchanged (same gen/bucket file
-    * layout; the manifest's bucket→gen lines parse as one-element
-    * chains). */
+    * plain chain-union scan. */
   def readStore(spark: SparkSession, target: String): Option[DataFrame] =
     DeltaStore.readAppendOnly(spark, target)
 
@@ -148,18 +132,9 @@ object Admission {
     }
   }
 
-  private def stampParams(cfg: Config): Unit = {
-    val p = paramsPath(cfg.target)
-    if (!java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(s"LSHPARAMS.tmp-${java.util.UUID.randomUUID}")
-      java.nio.file.Files.write(tmp,
-        paramsLine(cfg).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def stampParams(cfg: Config): Unit =
+    if (!java.nio.file.Files.exists(paramsPath(cfg.target)))
+      ManifestStore.LocalFs.publish(cfg.target, "LSHPARAMS", paramsLine(cfg))
 
   /** Rejected batch ids from a unified candidate frame
     * `(doc_id, other_id, src)` — `doc_id` is the batch doc that dies if
@@ -248,15 +223,8 @@ object Admission {
       // pipeline ([[rejectedIds]]): one distinct over rejected ids, one
       // count, one tiny cached id set feeding the anti-join — the
       // earlier per-branch pipelines paid the batch-side shingle join,
-      // the verify filter and the distinct shuffle twice. Pre-delta
-      // layouts are detected for the one-pass migration below: no
-      // `#applied` manifest header = the read-modify-write era; no
-      // `bands` column = the still-earlier two-store era (bands derived
-      // from stored signatures one last time).
+      // the verify filter and the distinct shuffle twice.
       val storeOpt = readStore(spark, cfg.target)
-      val legacyBands = storeOpt.exists(s => !s.columns.contains("bands"))
-      val legacy = legacyBands ||
-        (storeOpt.isDefined && DeltaStore.readApplied(cfg.target) == -1L)
       // b_id = higher id (lshCandidates: a < b) — the rejected side
       val selfCand = Dedup.lshCandidates(bands, "doc_id")
         .select(col("b_id").as("doc_id"), col("a_id").as("other_id"),
@@ -264,10 +232,8 @@ object Admission {
       val cand = storeOpt match {
         case None => selfCand
         case Some(store) =>
-          val corpBands =
-            if (legacyBands) Dedup.lshBands(store, "sig", cfg.bands, cfg.rows, "doc_id")
-            else store.select(col("doc_id"), explode(col("bands")).as("bk"))
-              .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+          val corpBands = store.select(col("doc_id"), explode(col("bands")).as("bk"))
+            .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
           selfCand.unionByName(
             Dedup.lshCandidatesAgainst(bands, corpBands, "doc_id")
               .select(col("new_id").as("doc_id"), col("corpus_id").as("other_id"),
@@ -283,12 +249,10 @@ object Admission {
       // 3. append survivors — signature AND packed bands in the same
       // row — to the store: ONE generation, ONE flip, O(|admitted|)
       // written (replay-safe by the generation key / #applied header).
-      // On a legacy store this batch instead RESET-writes the WHOLE
-      // corpus re-asserted with the packed column as its single
-      // generation (the one-pass migration). Survivors come from the
-      // contracted rep set — contracted-away clique members are
-      // rejected by construction (identical sh ⟹ a verified pair with
-      // their lower-id rep), so they never reach the store.
+      // Survivors come from the contracted rep set — contracted-away
+      // clique members are rejected by construction (identical sh ⟹ a
+      // verified pair with their lower-id rep), so they never reach the
+      // store.
       val admitted = repSig
         .join(rejected, Seq("doc_id"), "left_anti")
         .withColumn("bands", Dedup.lshBandArray(col("sig"), cfg.bands, cfg.rows))
@@ -296,28 +260,8 @@ object Admission {
       try {
         val n = admitted.count() // materialize before the flip GCs old gens
         repSig.unpersist()
-        if (legacy) {
-          val upgraded =
-            if (legacyBands) storeOpt.get
-              .withColumn("bands", Dedup.lshBandArray(col("sig"), cfg.bands, cfg.rows))
-            else storeOpt.get
-          DeltaStore.rewrite(
-            upgraded.unionByName(admitted).withColumn("net_op", lit("insert")),
-            cfg.target, Seq("doc_id"), cfg.nBuckets, batchId)
-        } else
-          DeltaStore.append(admitted.withColumn("net_op", lit("insert")),
-            cfg.target, Seq("doc_id"), cfg.nBuckets, batchId, cfg.maxChain)
-        // the legacy layout's sibling band dir is orphaned once the store
-        // carries packed bands; the existence check (not `legacy`) also
-        // covers a replay after a crash between the upgrade flip and this
-        // cleanup, where the replayed batch no longer reads as legacy
-        val sibling = new java.io.File(cfg.bandTarget)
-        if (sibling.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(sibling)
-        }
+        DeltaStore.append(admitted.withColumn("net_op", lit("insert")),
+          cfg.target, Seq("doc_id"), cfg.nBuckets, batchId, cfg.maxChain)
         n
       } finally admitted.unpersist()
     } finally {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sink.DeltaStore
+import graft.sink.{DeltaStore, ManifestStore}
 
 /** Persisted, incrementally-maintained IVF index — similarity search in
   * its production shape. The `ann_ivf*` queries rebuild the coarse
@@ -66,18 +66,9 @@ object IvfIndex {
   /** Frozen centroids as `cell\tv1,v2,...` lines (bounded: ≤cells rows);
     * written once, atomically, before the first generation flips. */
   private def writeCentroids(target: String, cents: Seq[(Long, Seq[Double])]): Unit = {
-    val p = centroidsPath(target)
-    if (!java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.createDirectories(p.getParent)
-      val body = cents.sortBy(_._1)
-        .map { case (c, v) => s"$c\t${v.mkString(",")}" }.mkString("\n")
-      val tmp = p.resolveSibling(s"CENTROIDS.tmp-${java.util.UUID.randomUUID}")
-      java.nio.file.Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!java.nio.file.Files.exists(centroidsPath(target)))
+      ManifestStore.LocalFs.publish(target, "CENTROIDS", cents.sortBy(_._1)
+        .map { case (c, v) => s"$c\t${v.mkString(",")}" }.mkString("\n"))
   }
 
   /** The frozen coarse quantizer (None before the first batch seeded
@@ -110,18 +101,10 @@ object IvfIndex {
     * codebook must not drift once any generation flipped. */
   private def writePqCodebook(target: String, m: Int, k: Int,
       rows: Seq[(Int, Long, Seq[Double])]): Unit = {
-    val p = pqCodebookPath(target)
-    if (!java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.createDirectories(p.getParent)
-      val body = (s"#pq $m $k" +: rows.sortBy(r => (r._1, r._2))
-        .map { case (s, c, v) => s"$s\t$c\t${v.mkString(",")}" }).mkString("\n")
-      val tmp = p.resolveSibling(s"PQCODEBOOK.tmp-${java.util.UUID.randomUUID}")
-      java.nio.file.Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!java.nio.file.Files.exists(pqCodebookPath(target)))
+      ManifestStore.LocalFs.publish(target, "PQCODEBOOK",
+        (s"#pq $m $k" +: rows.sortBy(r => (r._1, r._2))
+          .map { case (s, c, v) => s"$s\t$c\t${v.mkString(",")}" }).mkString("\n"))
   }
 
   /** The frozen PQ codebook + its (m, k) (None before the first

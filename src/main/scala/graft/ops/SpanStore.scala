@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sink.DeltaStore
+import graft.sink.{DeltaStore, ManifestStore}
 
 /** Incremental sub-document span dedup against a persisted chunk-digest
   * store — the admission form of [[Dedup.chunkDedup]] for a recurring
@@ -75,18 +75,9 @@ object SpanStore {
     }
   }
 
-  private def stampParams(cfg: Config): Unit = {
-    val p = paramsPath(cfg.target)
-    if (!java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(s"SPANPARAMS.tmp-${java.util.UUID.randomUUID}")
-      java.nio.file.Files.write(tmp,
-        paramsLine(cfg).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def stampParams(cfg: Config): Unit =
+    if (!java.nio.file.Files.exists(paramsPath(cfg.target)))
+      ManifestStore.LocalFs.publish(cfg.target, "SPANPARAMS", paramsLine(cfg))
 
   private def chunksOf(batch: DataFrame, cfg: Config): DataFrame =
     if (cfg.cdcCutNibbles.nonEmpty)

@@ -594,17 +594,6 @@ object Pipeline {
     }
   }
 
-  /** Streaming pipeline: `events_stream` source → stateless processors →
-    * per-micro-batch compact + apply (the config-driven form of the
-    * reference's flagship db_*_sync tasks; recovery = the checkpoint,
-    * idempotency = the apply). Sinks: `parquet_merge` (bucketed store) or
-    * `jdbc_apply` (executing statements against a SQL target). Blocks
-    * until the bounded source drains (Trigger.AvailableNow).
-    *
-    * Returns the last progress snapshot from the attached
-    * [[graft.streaming.PipelineMetrics]] listener — the task_qps/delay
-    * gauges the reference publishes while syncing (`metrics.go:16-23`);
-    * None when no batch carried rows (e.g. a restart with nothing new). */
   /** Shared update-mode upsert feed: per batch, stamp the batch id as
     * `_b` and append to a parquet feed (a reader resolves the latest
     * `_b` per key). The sink half of funnel_upsert and
@@ -624,6 +613,21 @@ object Pipeline {
       }
       .start()
 
+  /** Streaming pipeline: a streaming source (`events_stream`,
+    * `events_raw_stream`, `events_dsv2`, `documents_stream`,
+    * `embeddings_stream`) → stateless processors → a per-micro-batch
+    * sink (the config-driven form of the reference's flagship db_*_sync
+    * tasks; recovery = the checkpoint, idempotency = the apply). Sinks:
+    * `parquet_delta` (the pk-bucketed [[graft.sink.DeltaStore]]),
+    * `jdbc_apply` (executing statements against a SQL target),
+    * `corpus_admit`, `span_admit`, `ivf_append`, `dsir_admit`,
+    * `funnel_upsert` and `retention_upsert`. Blocks until the bounded
+    * source drains (Trigger.AvailableNow).
+    *
+    * Returns the last progress snapshot from the attached
+    * [[graft.streaming.PipelineMetrics]] listener — the task_qps/delay
+    * gauges the reference publishes while syncing (`metrics.go:16-23`);
+    * None when no batch carried rows (e.g. a restart with nothing new). */
   def runStream(spark: SparkSession, json: String): Option[graft.streaming.PipelineMetrics#Snapshot] = {
     val cfg = new ObjectMapper().readTree(json)
     val src = cfg.get("source")
@@ -733,16 +737,6 @@ object Pipeline {
     try {
     poller.start()
     val q = snk.get("type").asText() match {
-      case "parquet_merge" =>
-        val target = snk.get("path").asText()
-        val pkCols = strs(snk.get("pk"))
-        val nBuckets = if (snk.has("buckets")) snk.get("buckets").asInt() else 64
-        // pk-bucketed incremental apply: each batch rewrites only the
-        // buckets it touches and flips the store's MANIFEST atomically —
-        // O(touched) per batch, crash-safe (see graft.sink.BucketStore)
-        graft.streaming.ChangeStream.compactedApply(transformed, ckpt) { (net, id) =>
-          graft.sink.BucketStore.merge(net, target, pkCols, nBuckets, id)
-        }
       case "parquet_delta" =>
         val target = snk.get("path").asText()
         val pkCols = strs(snk.get("pk"))
@@ -901,7 +895,7 @@ object Pipeline {
           graft.sink.JdbcApply(net, jc)
         }
       case other => throw new IllegalArgumentException(
-        "streaming pipeline needs a parquet_merge, parquet_delta, " +
+        "streaming pipeline needs a parquet_delta, " +
           s"jdbc_apply, corpus_admit, span_admit, ivf_append, dsir_admit, " +
           s"funnel_upsert or retention_upsert sink, got $other")
     }

@@ -1,21 +1,20 @@
 package graft.sink
 
+import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** MERGE-shaped incremental target: an append-only delta log over
-  * pk-hash buckets — the LSM/Delta-log counterpart of [[BucketStore]].
+  * pk-hash buckets — the engine's one pk-bucketed store, and the apply
+  * side of the reference's batched delivery
+  * (`pkg/output/mysql/batch/tableprocessor.go:198-257`).
   *
-  * [[BucketStore]] applies a micro-batch by READ-MODIFY-WRITING every
-  * bucket the batch touches (the semantics of the reference's executing
-  * batch apply, `pkg/output/mysql/batch/tableprocessor.go:198-257`).
-  * That is O(touched state) per batch: a workload whose keys spray
-  * across buckets rewrites nearly the whole store every batch (and its
-  * read of the touched buckets opens every file of their generations). Here a
-  * batch instead APPENDS its compacted net changes as a new delta
+  * A batch APPENDS its compacted net changes as a new delta
   * generation — O(|batch|) write, no read of existing state — and the
   * merge is deferred:
   *
@@ -27,7 +26,9 @@ import scala.jdk.CollectionConverters._
   *   - COMPACTION: when a bucket's chain would exceed `maxChain`, that
   *     bucket (and only that bucket) is folded into the new generation —
   *     amortized O(bucket/maxChain) per batch, the classic LSM trade.
-  *     A store-wide fold triggers when live generation DIRS exceed
+  *     `maxChain = 1` folds every touched bucket on every batch: the
+  *     read-modify-write policy, O(touched state) per batch. A
+  *     store-wide fold triggers when live generation DIRS exceed
   *     `maxLiveGens`, bounding file counts on long streams.
   *
   * Write path: a batch that can fold nothing (no chain at `maxChain`,
@@ -36,17 +37,20 @@ import scala.jdk.CollectionConverters._
   * the buckets it appends to are observed on that same write. Only a
   * batch that can fold first caches the net batch and collects its
   * bucket ids, to pick the fold set (touched buckets at the cap). Every
-  * generation of a pk-hash store, here and in [[BucketStore]], is a
-  * flat file set sorted by `bucket` ([[BucketStore.writeBuckets]]); a
-  * store bucketed by a semantic key (`bucketExpr`, stamped `BUCKETBY`)
-  * keeps one dir per bucket ([[BucketStore.writeCells]]) so its reads
-  * can prune files.
+  * generation of a pk-hash store is a flat file set sorted by `bucket`
+  * ([[writeBuckets]]); a store bucketed by a semantic key (`bucketExpr`,
+  * stamped `BUCKETBY`) keeps one dir per bucket ([[writeCells]]) so its
+  * reads can prune files.
   *
-  * Crash contract is [[BucketStore]]'s, unchanged: generation dirs are
-  * keyed by batch id and written mode=overwrite (replay self-heals its
-  * own partial output), MANIFEST is flipped by atomic rename only after
-  * the generation's `_SUCCESS` exists, and a replay of an
-  * already-flipped batch is detected and returns the manifest unchanged.
+  * Schema evolution is additive: a net may add a column or omit one, and
+  * every read and every fold resolves by name, so a column a generation
+  * lacks reads as null.
+  *
+  * Crash contract: generation dirs are keyed by batch id and written
+  * mode=overwrite (replay self-heals its own partial output), MANIFEST
+  * is flipped by atomic rename only after the generation's `_SUCCESS`
+  * exists, and a replay of an already-flipped batch is detected and
+  * returns the manifest unchanged.
   * Replay detection is by the `#applied` MANIFEST header (the highest
   * flipped batch id — batch ids are monotone under the streaming
   * checkpoint contract), not by chain membership alone: a flipped batch
@@ -74,7 +78,7 @@ import scala.jdk.CollectionConverters._
   * while any of their chains still names it; a chain-cap fold or a
   * snapshot can meanwhile supersede some of those buckets. Every read
   * therefore keeps a row of bucket `b` from generation `g` only when `g`
-  * is in `b`'s chain ([[BucketStore.scanGens]]).
+  * is in `b`'s chain ([[scanGens]]).
   */
 object DeltaStore {
 
@@ -82,8 +86,7 @@ object DeltaStore {
   val defaultMaxChain = 8
 
   /** Live generation-dir bound: at/above this, the next append folds the
-    * WHOLE store into one generation (file-count backstop, mirrors
-    * [[BucketStore.defaultMaxLiveGens]]). */
+    * WHOLE store into one generation (file-count backstop). */
   val defaultMaxLiveGens = 64
 
   private def manifestPath(target: String): Path = Paths.get(target, "MANIFEST")
@@ -139,6 +142,137 @@ object DeltaStore {
       .select(pkCols.map(col) ++ valueCols.map(col): _*)
   }
 
+  /** Deterministic bucket assignment from the PK columns. */
+  private[graft] def bucketCol(pkCols: Seq[String], nBuckets: Int): Column =
+    pmod(xxhash64(pkCols.map(col): _*), lit(nBuckets.toLong)).cast("int")
+
+  /** Write `df` (rows carrying an int `bucket` column) as the flat
+    * generation `genDir` and return the bucket ids it holds rows for — a
+    * bucket whose rows all netted away is not among them. This is the
+    * layout of every pk-hash store.
+    *
+    * Files are `genDir/part-*.parquet` with `bucket` kept as a column and
+    * rows sorted by it inside each file, so Parquet row-group statistics
+    * on `bucket` can skip other buckets once files hold several row
+    * groups. In `LAYOUTPROBE_flatgen.jsonl` (one 2M-row, 64-bucket
+    * generation in 144 row groups of 1 MB) a read of 4 buckets scanned
+    * 326K rows in 203–232 ms sorted against all 2M rows in 333–516 ms
+    * unsorted, and the sort added 2–17% to the 1.3–1.6 s write. The write adds
+    * no shuffle: it runs at the partitioning `df` already has — for a
+    * compacted batch, the AQE-sized output of the compaction, which is
+    * one file per generation at small scale and more files as data
+    * grows. The bucket set comes from an `observe` on the same action:
+    * no collect, no second job, no directory listing; waiting for its
+    * result took 0.2 ms (p50) after a 20-row write. On 4 local cores
+    * one 2.5K-row, 64-bucket generation (p50 of 12 writes) took 177 ms as
+    * 64 `bucket=` dirs (`repartition(4, bucket)` + `partitionBy`), 108 ms
+    * as 4 flat files sorted by `bucket`, and 52 ms to the `noop` sink.
+    *
+    * Completion is checked by the `_SUCCESS` marker the committer writes
+    * last; a partial write fails here, before any manifest flip. */
+  private def writeBuckets(df: DataFrame, genDir: String): Set[Int] = {
+    val written = Observation()
+    df.observe(written, collect_set(col("bucket")).as("buckets"))
+      .sortWithinPartitions("bucket")
+      .write.mode("overwrite").parquet(genDir)
+    requireComplete(genDir)
+    Await.result(written.future, 1.minute).getAs[Seq[Int]]("buckets").toSet
+  }
+
+  /** Write `df` as the generation `genDir` with one `bucket=<b>` dir per
+    * bucket — the layout of a store bucketed by a semantic key (its
+    * `BUCKETBY` stamp; the IVF index's cells), whose bucket dirs are
+    * the inverted lists a probed read prunes its files to. Returns the
+    * bucket ids whose dirs the write produced.
+    *
+    * Write-task rule: `min(maxBuckets, defaultParallelism)` tasks, where
+    * `maxBuckets` bounds the distinct buckets `df` can carry. The hash
+    * partitioner on `bucket` keeps each bucket's rows in ONE task and
+    * `partitionBy("bucket")` splits a task's rows into one file per
+    * bucket dir, so the on-disk layout — one file per `bucket=` dir —
+    * does not depend on the task count. */
+  private def writeCells(df: DataFrame, genDir: String,
+      maxBuckets: Int): Set[Int] = {
+    val tasks = math.max(1,
+      math.min(maxBuckets, df.sparkSession.sparkContext.defaultParallelism))
+    df.repartition(tasks, col("bucket"))
+      .write.partitionBy("bucket").mode("overwrite").parquet(genDir)
+    requireComplete(genDir)
+    Option(new File(genDir).list()).getOrElse(Array.empty)
+      .collect { case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt }
+      .toSet
+  }
+
+  private def requireComplete(genDir: String): Unit =
+    require(Files.exists(Paths.get(genDir, "_SUCCESS")),
+      s"generation write did not complete: $genDir")
+
+  /** Batch id of a `gen-<id>` or `snap-<id>` generation dir name. */
+  private def genId(gen: String): Long = gen.dropWhile(!_.isDigit).toLong
+
+  /** The batch id of the generation each row was read from: one regex on
+    * the `gen-<id>`/`snap-<id>` segment of its file path, the same for
+    * both layouts (`gen-<id>/part-*` and `gen-<id>/bucket=<b>/part-*`). */
+  private def genSeq: Column =
+    regexp_extract(input_file_name(),
+      "/(?:gen|snap)-(\\d+)/(?:bucket=\\d+/)?[^/]+$", 1).cast("long")
+
+  /** ONE scan over the flat generation dirs of `chains` (bucket → its
+    * live generations) that keeps a row of bucket `b` from generation `g`
+    * only when `g` is in `b`'s chain: a generation still live for some
+    * buckets can hold stale rows of others, superseded by a later fold
+    * or snapshot. Rows keep `bucket` and gain `_seq`, their
+    * generation's batch id. The membership test compares ids, which is
+    * exact because no store holds `gen-<n>` and `snap-<n>` live at once
+    * (a snapshot resets every chain).
+    *
+    * `buckets` restricts the read to those chains; when it leaves out
+    * some of the store's buckets, a plain `bucket IN (…)` predicate also
+    * goes down to the Parquet scan, where the files' sort on `bucket`
+    * lets row-group statistics skip the rest once files hold several
+    * row groups ([[writeBuckets]] cites the measurement). The scan still
+    * opens every file of every generation read. Footers are merged, so
+    * additively evolved generations read with nulls for the columns they
+    * lack. */
+  private def scanGens(spark: SparkSession, target: String,
+      chains: Map[Int, Seq[String]],
+      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
+    val read = buckets.fold(chains)(bs => chains.view.filterKeys(bs).toMap)
+    val members = read.toSeq
+      .flatMap { case (b, gens) => gens.map(g => genId(g) -> b) }
+      .groupMap(_._1)(_._2)
+    if (members.isEmpty) None
+    else {
+      val gens = read.values.flatten.toSeq.distinct.sorted
+      val all = spark.read.option("mergeSchema", "true")
+        .parquet(gens.map(g => s"$target/$g"): _*)
+      val scanned =
+        if (read.size < chains.size) all.filter(col("bucket").isin(read.keys.toSeq.sorted: _*))
+        else all
+      val live = members.toSeq.sortBy(_._1).map { case (id, bs) =>
+        col("_seq") === id && col("bucket").isin(bs.sorted: _*)
+      }.reduce(_ || _)
+      Some(scanned.withColumn("_seq", genSeq).filter(live))
+    }
+  }
+
+  /** [[scanGens]] for generations written by [[writeCells]]: ONE scan
+    * over the `bucket=<b>` dirs of `chains` (restricted to `buckets`),
+    * which hold exactly each chain's rows, so the path list is the whole
+    * membership test and prunes the files a read opens. Rows get `bucket`
+    * from their dir and `_seq` from their generation. */
+  private def scanCells(spark: SparkSession, target: String,
+      chains: Map[Int, Seq[String]],
+      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
+    val paths = buckets.fold(chains)(bs => chains.view.filterKeys(bs).toMap).toSeq
+      .flatMap { case (b, gens) => gens.map(g => s"$target/$g/bucket=$b") }
+    if (paths.isEmpty) None
+    else Some(spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      .withColumn("bucket", regexp_extract(input_file_name(),
+        "/bucket=(\\d+)/[^/]+$", 1).cast("int"))
+      .withColumn("_seq", genSeq))
+  }
+
   /** ONE multi-path scan over the live rows of `chains`, each row's
     * batch-id `_seq` parsed from its file path. Chain order equals
     * batch-id order by construction (appends only ever extend the tail;
@@ -149,16 +283,16 @@ object DeltaStore {
     * live generation, up to `maxLiveGens` of them).
     *
     * The store's `BUCKETBY` stamp picks the layout: a pk-hash store is
-    * read by [[BucketStore.scanGens]], a store bucketed by a semantic key
-    * by [[BucketStore.scanCells]]. Both merge footers, so a
+    * read by [[scanGens]], a store bucketed by a semantic key by
+    * [[scanCells]]. Both merge footers, so a
     * schema-ADDITIVE stream (a later batch's net carrying a new column —
     * the CDC analog of ADD COLUMN) resolves with nulls for pre-evolution
     * rows. Rows keep `bucket`; [[chainFrames]] drops it. */
   private def liveRows(spark: SparkSession, target: String,
       chains: Map[Int, Seq[String]],
       buckets: Option[Set[Int]] = None): Option[DataFrame] =
-    if (Files.exists(bucketByPath(target))) BucketStore.scanCells(spark, target, chains, buckets)
-    else BucketStore.scanGens(spark, target, chains, buckets)
+    if (Files.exists(bucketByPath(target))) scanCells(spark, target, chains, buckets)
+    else scanGens(spark, target, chains, buckets)
 
   /** [[liveRows]] without the `bucket` column: the state columns,
     * `net_op` and `_seq`. */
@@ -167,8 +301,8 @@ object DeltaStore {
       buckets: Option[Set[Int]] = None): Option[DataFrame] =
     liveRows(spark, target, chains, buckets).map(_.drop("bucket"))
 
-  /** Resolved current state (None when the store is empty). Same output
-    * schema as [[BucketStore.read]]: pk cols + value cols, no `net_op`. */
+  /** Resolved current state (None when the store is empty): pk cols +
+    * value cols, no `net_op`. */
   def read(spark: SparkSession, target: String): Option[DataFrame] = {
     val chains = readManifest(target)
     chainFrames(spark, target, chains).map { all =>
@@ -184,7 +318,7 @@ object DeltaStore {
     *
     * History is bounded by compaction, as in any LSM/delta-log store
     * (Delta Lake's VACUUM horizon): a chain-cap fold, auto/offline
-    * snapshot, or rewrite re-asserts pre-fold rows under the folding
+    * or snapshot re-asserts pre-fold rows under the folding
     * batch's id, so states OLDER than the newest fold are gone. The
     * store records that horizon (`HISTORY` file, monotone) and this read
     * REFUSES an `asOfBatch` below it — silently returning partial state
@@ -220,7 +354,7 @@ object DeltaStore {
     *     an accepted window — see the floor guard). The scan opens every
     *     file of the generations in the touched buckets' chains; only
     *     Parquet row-group statistics on `bucket` skip the rows of other
-    *     buckets ([[BucketStore.scanGens]]). So feed cost follows the
+    *     buckets ([[scanGens]]). So feed cost follows the
     *     generations the changed buckets live in, not the changed keys:
     *     a chain that reaches back to a store-wide fold or snapshot reads
     *     that generation's files too. Only a store bucketed by a semantic
@@ -253,7 +387,7 @@ object DeltaStore {
         "horizon are unrecoverable, as after any LSM compaction)")
     val chains = readManifest(target)
     val touched = chains.view.filter { case (_, gens) =>
-      gens.exists { g => val id = BucketStore.genId(g); id > fromBatch && id <= toBatch }
+      gens.exists { g => val id = genId(g); id > fromBatch && id <= toBatch }
     }.keySet.toSet
     // An idle window (store exists, no bucket holds a generation in
     // (from, to]) is the COMMON case for a polling CDC-out consumer —
@@ -307,15 +441,9 @@ object DeltaStore {
     * Called BEFORE the fold's flip: a crash in between leaves the floor
     * conservatively high — [[readAt]] refuses slightly more than
     * necessary, never serves a collapsed state. */
-  private def raiseHistoryFloor(target: String, batchId: Long): Unit = {
-    if (batchId > readHistoryFloor(target)) {
-      Files.createDirectories(Paths.get(target))
-      val tmp = Paths.get(target, s"HISTORY.tmp-${java.util.UUID.randomUUID}")
-      Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, historyPath(target),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def raiseHistoryFloor(target: String, batchId: Long): Unit =
+    if (batchId > readHistoryFloor(target))
+      ManifestStore.LocalFs.publish(target, "HISTORY", batchId.toString)
 
   /** Union of the live chains WITHOUT the per-pk LWW fold — the read
     * path for APPEND-ONLY stores (insert-only nets, globally unique pks:
@@ -323,11 +451,8 @@ object DeltaStore {
     * fold would only burn a corpus-wide shuffle; skipping it keeps the
     * read a plain multi-path scan whose column pruning reaches the
     * parquet footers directly (a consumer selecting (doc_id, bands)
-    * never drags the shingle arrays through an aggregation). Tolerates
-    * mixed-era chains (mergeSchema): rows from generations written by
-    * [[BucketStore]] before a migration carry no `net_op` and read as
-    * null — kept; genuine tombstones (never produced by an append-only
-    * writer) are dropped defensively.
+    * never drags the shingle arrays through an aggregation). Tombstones
+    * (never produced by an append-only writer) are dropped defensively.
     * `buckets`, when given, restricts the scan to those chains — for
     * stores bucketed by a semantic key (the IVF index's cell id), the
     * caller's candidate cells prune to a subset of the FILES, not just a
@@ -335,12 +460,8 @@ object DeltaStore {
     * of the corpus on disk. */
   def readAppendOnly(spark: SparkSession, target: String,
       buckets: Option[Set[Int]] = None): Option[DataFrame] =
-    chainFrames(spark, target, readManifest(target), buckets).map { rows =>
-      val df = rows.drop("_seq")
-      if (df.columns.contains("net_op"))
-        df.filter(col("net_op").isNull || col("net_op") =!= "delete").drop("net_op")
-      else df
-    }
+    chainFrames(spark, target, readManifest(target), buckets).map(
+      _.drop("_seq").filter(col("net_op") =!= "delete").drop("net_op"))
 
   private def pkColsPath(target: String): Path = Paths.get(target, "PKCOLS")
 
@@ -348,41 +469,27 @@ object DeltaStore {
 
   /** Stamp a store whose buckets are a caller-supplied semantic key, not
     * the pk hash (atomic, once). [[snapshot]] refuses stamped stores. */
-  private def markSemanticBuckets(target: String): Unit = {
-    val p = bucketByPath(target)
-    if (!Files.exists(p)) {
-      Files.createDirectories(p.getParent)
-      val tmp = Paths.get(target, s"BUCKETBY.tmp-${java.util.UUID.randomUUID}")
-      Files.write(tmp, "semantic".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def markSemanticBuckets(target: String): Unit =
+    if (!Files.exists(bucketByPath(target)))
+      ManifestStore.LocalFs.publish(target, "BUCKETBY", "semantic")
 
   /** Write a generation in the store's layout, picked by its `BUCKETBY`
     * stamp: one dir per bucket for a semantic key
-    * ([[BucketStore.writeCells]], at most `maxBuckets` of them), flat
-    * files sorted by `bucket` for the pk hash
-    * ([[BucketStore.writeBuckets]]). Returns the buckets written. */
+    * ([[writeCells]], at most `maxBuckets` of them), flat files sorted by
+    * `bucket` for the pk hash ([[writeBuckets]]). Returns the buckets
+    * written. */
   private def writeGeneration(df: DataFrame, target: String, genDir: String,
       maxBuckets: Int): Set[Int] =
-    if (Files.exists(bucketByPath(target))) BucketStore.writeCells(df, genDir, maxBuckets)
-    else BucketStore.writeBuckets(df, genDir)
+    if (Files.exists(bucketByPath(target))) writeCells(df, genDir, maxBuckets)
+    else writeBuckets(df, genDir)
 
   /** The resolution key is part of the store's identity; persist it at
     * first append so readers need no out-of-band schema knowledge. */
-  private def writePkCols(target: String, pkCols: Seq[String]): Unit = {
-    Files.createDirectories(Paths.get(target))
-    val p = pkColsPath(target)
-    if (!Files.exists(p)) {
-      // tmp + atomic rename, mirroring writeManifest: a crash mid-write
-      // must never leave a truncated PKCOLS for the exists-guard to keep
-      val tmp = Paths.get(target, s"PKCOLS.tmp-${java.util.UUID.randomUUID}")
-      Files.write(tmp, pkCols.mkString(",").getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def writePkCols(target: String, pkCols: Seq[String]): Unit =
+    // atomic, like the manifest: a crash mid-write must never leave a
+    // truncated PKCOLS for the exists-guard to keep
+    if (!Files.exists(pkColsPath(target)))
+      ManifestStore.LocalFs.publish(target, "PKCOLS", pkCols.mkString(","))
 
   private def inferPkCols(target: String): Seq[String] =
     new String(Files.readAllBytes(pkColsPath(target)), StandardCharsets.UTF_8)
@@ -392,7 +499,7 @@ object DeltaStore {
     * for buckets that keep appending and (b) folded base rows for buckets
     * at their chain cap, and return the manifest phase 2 flips to.
     * Split from [[append]] so crash-injection tests can die between the
-    * phases, exactly like [[BucketStore.writeGen]]. */
+    * phases. */
   def writeGen(net: DataFrame, target: String, pkCols: Seq[String],
       nBuckets: Int, batchId: Long,
       maxChain: Int = defaultMaxChain,
@@ -420,7 +527,7 @@ object DeltaStore {
     }
     writePkCols(target, pkCols)
     if (bucketExpr.isDefined) markSemanticBuckets(target)
-    val bucketOf = bucketExpr.getOrElse(BucketStore.bucketCol(pkCols, nBuckets))
+    val bucketOf = bucketExpr.getOrElse(bucketCol(pkCols, nBuckets))
     val globalFold = manifest0.values.flatten.toSet.size >= maxLiveGens
     def foldsOnAppend(b: Int): Boolean = manifest0.getOrElse(b, Nil).size + 1 > maxChain
     // a batch can fold only if some chain (or, with maxChain < 1, even a
@@ -457,7 +564,10 @@ object DeltaStore {
           val base = chainFrames(spark, target, manifest0, Some(foldBuckets))
           val newDeltas = bucketed.filter(col("bucket").isin(foldBuckets.toSeq: _*))
             .drop("bucket").withColumn("_seq", lit(batchId))
-          val all = base.map(_.unionByName(newDeltas)).getOrElse(newDeltas)
+          // by name, missing columns null: the fold reads an additively
+          // evolved store the way every read does
+          val all = base.map(_.unionByName(newDeltas, allowMissingColumns = true))
+            .getOrElse(newDeltas)
           Some(resolve(all, pkCols)
             .withColumn("net_op", lit("insert"))
             .withColumn("bucket", bucketOf))
@@ -468,7 +578,7 @@ object DeltaStore {
         raiseHistoryFloor(target, batchId)
       }
       val out = foldedPart
-        .map(f => deltaPart.unionByName(f, allowMissingColumns = false))
+        .map(f => deltaPart.unionByName(f, allowMissingColumns = true))
         .getOrElse(deltaPart)
       // a folded bucket can net to empty (all rows deleted): the write
       // holds no row of it, and its chain must be dropped, not reset
@@ -531,9 +641,9 @@ object DeltaStore {
     val all = chainFrames(spark, target, chains).get
     // every key resolved away (all tombstoned) writes no bucket's rows:
     // the manifest legitimately flips to empty and the GC sweeps everything
-    val present = BucketStore.writeBuckets(resolve(all, pkCols)
+    val present = writeBuckets(resolve(all, pkCols)
       .withColumn("net_op", lit("insert"))
-      .withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), genDir)
+      .withColumn("bucket", bucketCol(pkCols, nBuckets)), genDir)
     raiseHistoryFloor(target, applied)
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied)
   }
@@ -571,17 +681,13 @@ object DeltaStore {
     // versions. Exactly the rows that make a store non-append-only are
     // update/delete net-ops, so the guard is data-derived and exact; a
     // store that happens to hold only inserts (unique keys) merges
-    // safely. Null net_op (pre-migration BucketStore rows) is fine —
-    // readAppendOnly keeps those too. Cost: one short-circuit probe over
-    // data this maintenance reads anyway.
-    if (merged.columns.contains("net_op")) {
-      val lww = merged.filter(col("net_op").isNotNull && col("net_op") =!= "insert")
-        .head(1).nonEmpty
-      require(!lww,
-        s"$target holds update/delete net-ops — it is an LWW store, and a " +
-          "verbatim file-merge would destroy last-writer-wins order; use " +
-          "snapshot (maintenance type \"snapshot\") instead")
-    }
+    // safely. Cost: one short-circuit probe over data this maintenance
+    // reads anyway.
+    val lww = merged.filter(col("net_op") =!= "insert").head(1).nonEmpty
+    require(!lww,
+      s"$target holds update/delete net-ops — it is an LWW store, and a " +
+        "verbatim file-merge would destroy last-writer-wins order; use " +
+        "snapshot (maintenance type \"snapshot\") instead")
     // The insert-only probe alone is NOT sufficient: a key re-INSERTED
     // in a later generation is still version-ordered by _seq, and the
     // verbatim merge collapses both versions under one snap id — the
@@ -589,17 +695,13 @@ object DeltaStore {
     // whichever version compares larger. Append-only by contract means
     // globally unique pks; enforce it (one agg over data this
     // maintenance reads anyway — the short-circuit probe shape).
-    val pkCols =
-      if (Files.exists(pkColsPath(target))) inferPkCols(target) else Seq.empty
-    if (pkCols.nonEmpty && pkCols.forall(merged.columns.contains)) {
-      val dup = merged.groupBy(pkCols.map(col): _*)
-        .agg(count(lit(1)).as("_c")).filter(col("_c") > 1).head(1).nonEmpty
-      require(!dup,
-        s"$target holds multiple live rows for one pk — re-inserted keys " +
-          "are version-ordered by generation, and a verbatim file-merge " +
-          "would collapse the versions under one id; use snapshot " +
-          "(maintenance type \"snapshot\") instead")
-    }
+    val dup = merged.groupBy(inferPkCols(target).map(col): _*)
+      .agg(count(lit(1)).as("_c")).filter(col("_c") > 1).head(1).nonEmpty
+    require(!dup,
+      s"$target holds multiple live rows for one pk — re-inserted keys " +
+        "are version-ordered by generation, and a verbatim file-merge " +
+        "would collapse the versions under one id; use snapshot " +
+        "(maintenance type \"snapshot\") instead")
     val present = writeGeneration(merged, target, genDir, chains.size)
     raiseHistoryFloor(target, applied)
     flip(target, present.map(b => b -> Seq(genName)).toMap, applied, fs)
@@ -622,30 +724,6 @@ object DeltaStore {
     val fire = readManifest(target).values.flatten.toSet.size >= minLiveGens
     if (fire) snapshot(spark, target, nBuckets)
     fire
-  }
-
-  /** Reset-write: land `net` (state rows carrying `net_op`) as the
-    * store's SINGLE generation, every chain reset to it — the
-    * migration / offline-fold entry for a caller that computed the full
-    * resolved state itself (e.g. [[graft.ops.Admission]] upgrading a
-    * pre-delta store layout in one pass). Crash contract identical to
-    * [[append]]: the generation is written complete (`_SUCCESS`
-    * required) before the atomic flip, a replayed batch is detected by
-    * generation name / `#applied` and skipped, and superseded
-    * generations are swept only after the flip. */
-  def rewrite(net: DataFrame, target: String, pkCols: Seq[String],
-      nBuckets: Int, batchId: Long,
-      fs: ManifestStore = ManifestStore.LocalFs): Unit = {
-    val genName = s"gen-$batchId"
-    val genDir = s"$target/$genName"
-    val manifest0 = readManifest(target)
-    if (manifest0.values.exists(_.contains(genName)) ||
-        batchId <= readApplied(target)) return
-    writePkCols(target, pkCols)
-    val present = writeGeneration(
-      net.withColumn("bucket", BucketStore.bucketCol(pkCols, nBuckets)), target, genDir, nBuckets)
-    raiseHistoryFloor(target, batchId)
-    flip(target, present.map(b => b -> Seq(genName)).toMap, batchId, fs)
   }
 
   /** Append one compacted net-change batch (both phases). */

@@ -4,9 +4,9 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** The two filesystem primitives the incremental stores
-  * ([[BucketStore]], [[DeltaStore]]) need beyond plain file IO — the
-  * object-store porting surface. Everything else in the store algebra
+/** The two filesystem primitives the incremental store ([[DeltaStore]])
+  * needs beyond plain file IO — the object-store porting surface.
+  * Everything else in the store algebra
   * (generations, chains, the `#applied` replay header) is
   * filesystem-agnostic; ONLY these two operations change per backend:
   *
@@ -24,7 +24,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     throw rather than overwrite: under the single-writer contract a
   *     lost condition means split-brain (two appliers), and the correct
   *     outcome is a failed batch — the streaming retry re-reads the
-  *     flipped state and converges through the stores' generation-keyed
+  *     flipped state and converges through the store's generation-keyed
   *     replay guards.
   *   - `sweep` is BEST-EFFORT and runs strictly AFTER a successful
   *     publish. A crash (or failure) between publish and sweep only
@@ -45,7 +45,9 @@ trait ManifestStore {
 object ManifestStore {
 
   /** Local-filesystem (and HDFS-compatible, where rename is atomic)
-    * implementation — the harness default. */
+    * implementation — the harness default. Its `publish` is also the
+    * engine's one atomic small-file writer (store stamps, the
+    * staged-slice marker). */
   object LocalFs extends ManifestStore {
     def publish(target: String, manifestName: String, body: String): Unit = {
       Files.createDirectories(Paths.get(target))

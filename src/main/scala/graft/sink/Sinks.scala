@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Sink library. The reference's MySQL sinks are wire-protocol appliers;
-  * here the apply semantics are expressed as (a) pure SQL-statement
-  * generation (testable without a database, pluggable into a JDBC
-  * `foreachPartition` writer) and (b) pure DataFrame merge algebra (the
-  * state-transition the statements would effect, used by tests and by
-  * parquet-target application).
+  * here the apply semantics are expressed as pure SQL-statement
+  * generation ([[SqlGen]]: testable without a database, pluggable into a
+  * JDBC `foreachPartition` writer); parquet targets apply through
+  * [[DeltaStore]].
   */
 object Sinks {
 
@@ -70,28 +69,5 @@ object SqlGen {
     case null => "NULL"
     case s: String => "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
     case other => other.toString
-  }
-}
-
-/** The state-transition semantics of the batch apply (K2): given a target
-  * table state and a compacted net-change set, produce the post-apply
-  * state. Pure DataFrame algebra — one outer join — so the contract the
-  * SQL statements implement is testable and usable directly against
-  * parquet targets. At scale this is the classic merge: shuffle both
-  * sides by PK once, or broadcast the (small, compacted) change set. */
-object Merge {
-
-  /** @param target  current state, one row per pk
-    * @param changes compacted net changes: pk cols + `net_op` + value cols
-    */
-  def applyNetChanges(target: DataFrame, changes: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val valueCols = target.columns.filterNot(pkCols.contains)
-    val c = changes.select(
-      pkCols.map(col) ++ Seq(col("net_op")) ++
-        valueCols.map(v => col(v).as(s"c_$v")): _*)
-    target.join(c, pkCols, "full_outer")
-      .filter(coalesce(col("net_op"), lit("keep")) =!= "delete")
-      .select(pkCols.map(col) ++ valueCols.map(v =>
-        when(col("net_op").isNotNull, col(s"c_$v")).otherwise(col(v)).as(v)): _*)
   }
 }

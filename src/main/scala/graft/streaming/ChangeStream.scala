@@ -36,8 +36,9 @@ object ChangeStream {
     *
     * `sliceBy` picks the slicing column and with it the apply regime:
     *  - `event_id` (default): log order — every batch's keys spray
-    *    across all buckets (the uniform-update regime, BucketStore's
-    *    worst case and DeltaStore's best);
+    *    across all buckets (the uniform-update regime: the worst case
+    *    for a read-modify-write apply, the best for DeltaStore's
+    *    appends);
     *  - `user_id`: key ranges — each batch touches only its own keys'
     *    buckets (the key-partitioned/backfill regime, where
     *    read-modify-write's O(touched) is small). A key's ops stay in
@@ -159,9 +160,10 @@ object ChangeStream {
 
   private val functions = org.apache.spark.sql.functions
 
-  /** Per-micro-batch compaction + merge apply: each batch is compacted
-    * (P8) and merged into the target with `Sinks.Merge` semantics via
-    * `foreachBatch`. Batch id + idempotent merge ⇒ at-least-once safe. */
+  /** Per-micro-batch compaction + apply: each batch is compacted (P8)
+    * and handed to `applyBatch` with its batch id via `foreachBatch`.
+    * Batch id + idempotent apply (e.g. [[graft.sink.DeltaStore.append]])
+    * ⇒ at-least-once safe. */
   def compactedApply(changelog: DataFrame, checkpoint: String)(
       applyBatch: (DataFrame, Long) => Unit): StreamingQuery =
     changelog.writeStream
@@ -218,15 +220,6 @@ object ChangeStream {
       netOp.map(op => NetRow(tbl, pk, op, lastSeq, rId, rK, rV)))
   }
 
-  /** @param ttl evict a key's state after this much processing-time
-    * inactivity (None = keep forever). At unbounded key cardinality the
-    * state store grows without bound otherwise; after eviction a
-    * returning key's `inDb` is re-inferred from its first op — correct
-    * as long as the TTL exceeds the source's max replay window.
-    * CAVEAT: with a TTL set, run the query under an interval trigger
-    * (`Trigger.ProcessingTime(...)`) — pending timeouts make the default
-    * as-fast-as-possible trigger busy-loop empty batches, which also
-    * starves `processAllAvailable` in tests. */
   /** One funnel event after projection/filtering (only step-type events
     * with non-null entity, ts, and id reach the state — a NULL entity
     * identifies no one and every funnel form drops it; `user` stays
@@ -271,27 +264,11 @@ object ChangeStream {
     * step i−1's), emit the chain if step 1 is reached. Recomputing the
     * chain from the sets — not patching it — is what makes ARBITRARY
     * cross-batch disorder exact: the sets are order-insensitive, and
-    * the chain is a pure function of them. */
-  private[graft] def funnelFold(user: Option[Long], stepTypes: Seq[String],
-      prev: Option[FunnelProgress], batch: Seq[FunnelEvent])
-      : (FunnelProgress, Option[FunnelUpd]) =
-    funnelFoldTtl(user, stepTypes, prev, batch, wmMs = Long.MinValue)
-
-  /** The conversion-window fold ([[graft.ops.Funnel.stepsByKeyWithin]]
-    * semantics): steps 2..k constrained to `ts − anchorTs ≤ withinNs`
-    * where the anchor is the step-1 pick. `Long.MaxValue` = no window
-    * (the difference of two non-negative epochs can't exceed it). */
-  private[graft] def funnelFoldWithin(user: Option[Long],
-      stepTypes: Seq[String], prev: Option[FunnelProgress],
-      batch: Seq[FunnelEvent], withinNs: Long)
-      : (FunnelProgress, Option[FunnelUpd]) =
-    funnelFoldTtl(user, stepTypes, prev, batch, wmMs = Long.MinValue,
-      withinNs = withinNs)
-
-  /** The fold's watermark-evicting core. `wmMs` is the event-time
-    * watermark (ms) at this batch's start; `Long.MinValue` = the
-    * exact-forever form (nothing stale, nothing frozen, nothing
-    * dropped — bit-identical to the pre-TTL fold).
+    * the chain is a pure function of them.
+    *
+    * `wmMs` is the event-time watermark (ms) at this batch's start;
+    * `Long.MinValue` (the default) = the exact-forever form (nothing
+    * stale, nothing frozen, nothing dropped).
     *
     * Staleness is judged in MILLISECONDS with `<=` — a strict SUPERSET
     * of whatever late-row filtering Spark's own watermark machinery
@@ -299,8 +276,11 @@ object ChangeStream {
     * effective drop rule is exactly this one and the DuckDB oracle can
     * replay it: survivor ⇔ floor(ts_ns/10⁶) > wm_ms.
     *
-    * `withinNs` adds the conversion-window constraint (steps 2..k must
-    * land within withinNs of the step-1 anchor's ts). Freezing stays
+    * `withinNs` adds the conversion-window constraint ([[graft.ops.
+    * Funnel.stepsByKeyWithin]] semantics: steps 2..k must land within
+    * withinNs of the step-1 anchor's ts; `Long.MaxValue`, the default,
+    * = no window — the difference of two non-negative epochs can't
+    * exceed it). Freezing stays
     * EXACT with the window: picks are (ts, id)-monotone, so stale
     * picks always form a chain PREFIX; once the anchor is frozen it is
     * final (every future survivor's ts sits strictly above the
@@ -310,9 +290,9 @@ object ChangeStream {
     * move EARLIER (a late above-watermark step-1 event), which only
     * shrinks the window — so no evicted or rejected event ever becomes
     * eligible later, and the full-walk recompute re-clips the chain. */
-  private[graft] def funnelFoldTtl(user: Option[Long], stepTypes: Seq[String],
-      prev: Option[FunnelProgress], batch: Seq[FunnelEvent], wmMs: Long,
-      withinNs: Long = Long.MaxValue)
+  private[graft] def funnelFold(user: Option[Long], stepTypes: Seq[String],
+      prev: Option[FunnelProgress], batch: Seq[FunnelEvent],
+      wmMs: Long = Long.MinValue, withinNs: Long = Long.MaxValue)
       : (FunnelProgress, Option[FunnelUpd]) = {
     val ord = implicitly[Ordering[(Long, Long)]]
     def stale(tsNs: Long): Boolean = Math.floorDiv(tsNs, 1000000L) <= wmMs
@@ -449,7 +429,7 @@ object ChangeStream {
     * arbitrary cross-batch disorder — the fold recomputes the anchored
     * walk from the order-insensitive key sets each batch, so a late
     * event that re-decides the anchor re-clips every later step (spec-
-    * pinned); composable with `evictDelay` (see [[funnelFoldTtl]] for
+    * pinned); composable with `evictDelay` (see [[funnelFold]] for
     * why freezing stays exact under the window). */
   def streamingFunnel(raw: DataFrame, stepTypes: Seq[String],
       evictDelay: Option[String] = None,
@@ -498,7 +478,7 @@ object ChangeStream {
         (user: Option[Long], events: Iterator[FunnelEvent],
             state: GroupState[FunnelProgress]) =>
           val wmMs = if (ttl) state.getCurrentWatermarkMs() else Long.MinValue
-          val (next, upd) = funnelFoldTtl(user, stepTypes,
+          val (next, upd) = funnelFold(user, stepTypes,
             state.getOption, events.toSeq, wmMs, window)
           if (next.keys.isEmpty && next.frozen.isEmpty) state.remove()
           else state.update(next)
@@ -549,6 +529,15 @@ object ChangeStream {
       }
   }
 
+  /** @param ttl evict a key's state after this much processing-time
+    * inactivity (None = keep forever). At unbounded key cardinality the
+    * state store grows without bound otherwise; after eviction a
+    * returning key's `inDb` is re-inferred from its first op — correct
+    * as long as the TTL exceeds the source's max replay window.
+    * CAVEAT: with a TTL set, run the query under an interval trigger
+    * (`Trigger.ProcessingTime(...)`) — pending timeouts make the default
+    * as-fast-as-possible trigger busy-loop empty batches, which also
+    * starves `processAllAvailable` in tests. */
   def statefulCompact(flat: Dataset[FlatEvent],
       ttl: Option[java.time.Duration] = None): Dataset[NetRow] = {
     import flat.sparkSession.implicits._

@@ -99,12 +99,7 @@ object Staging {
     drop.toString
   }
 
-  private def writeMarker(marker: java.nio.file.Path, sig: String): Unit = {
-    val tmp = marker.resolveSibling(s"SOURCE.tmp-${java.util.UUID.randomUUID}")
-    java.nio.file.Files.write(tmp,
-      sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, marker,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeMarker(marker: java.nio.file.Path, sig: String): Unit =
+    graft.sink.ManifestStore.LocalFs.publish(
+      marker.getParent.toString, marker.getFileName.toString, sig)
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Admission, Dedup}
-import graft.sink.BucketStore
 import graft.ops.Admission.readStore
 
 /** The admission store's packed banded form: candidate generation reads
@@ -52,31 +51,6 @@ class AdmissionSpec extends SparkSpec {
     assert(storedIds(cfg) == Set(1L, 2L, 4L))
     assert(bandRows(cfg) == wantBands(cfg))
     assert(bandRows(cfg).map(_._1) == Set(1L, 2L, 4L))
-  }
-
-  test("a legacy two-store layout is upgraded in one pass and its sibling removed") {
-    val cfg = cfgIn("graft-adm-upgrade")
-    // write the OLD layout directly: a signature store without the packed
-    // band column, plus the sibling band store the old code maintained
-    val sig = Admission.signatures(
-      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), cfg.perms)
-    BucketStore.merge(sig.withColumn("net_op", lit("insert")),
-      cfg.target, Seq("doc_id"), cfg.nBuckets, 0L)
-    BucketStore.merge(
-      Dedup.lshBands(sig, "sig", cfg.bands, cfg.rows, "doc_id")
-        .withColumn("net_op", lit("insert")),
-      cfg.bandTarget, Seq("doc_id", "band"), cfg.nBuckets, 0L)
-    assert(!readStore(spark, cfg.target).get.columns.contains("bands"))
-    // the next batch still dedupes against the full legacy corpus (bands
-    // derived from signatures one last time), rewrites the WHOLE corpus
-    // with the packed column under its own generation, and removes the
-    // orphaned sibling — a partial upgrade of only the new docs would
-    // silently blind every later batch to the pre-upgrade corpus
-    Admission.admitBatch(Seq((3L, base), (4L, third)).toDF("doc_id", "text"), cfg, 1L)
-    assert(storedIds(cfg) == Set(1L, 2L, 4L))
-    assert(bandRows(cfg) == wantBands(cfg))
-    assert(bandRows(cfg).map(_._1) == Set(1L, 2L, 4L))
-    assert(!new java.io.File(cfg.bandTarget).exists())
   }
 
   test("an empty (or all-filtered) first batch neither crashes nor creates a store") {
@@ -186,6 +160,5 @@ class AdmissionSpec extends SparkSpec {
     Admission.admitBatch(Seq((3L, base), (4L, third)).toDF("doc_id", "text"), cfg, 1L)
     assert(storedIds(cfg) == ids)
     assert(bandRows(cfg) == bands)
-    assert(!new java.io.File(cfg.bandTarget).exists())
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.sink.{BucketStore, DeltaStore}
+import graft.sink.DeltaStore
 
 /** Randomized CRASH-POINT property check for the store write paths —
   * the composition DeltaLatticeSpec (random maintenance interleavings)
@@ -146,46 +146,6 @@ class CrashPropSpec extends SparkSpec {
       }
       val res = SCTest.check(
         SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
-      assert(res.passed, res.status.toString)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  test("bucket store: crash-before-flip and redelivery converge, 40 cases") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val prop = Prop.forAll(programGen) { prog =>
-        val target = Files.createTempDirectory("graft-crash-b").toString + "/state"
-        val model = scala.collection.mutable.Map[(String, Long), Long]()
-        prog.batches.zipWithIndex.foreach { case (Batch(rows, kill), bi) =>
-          val b = bi.toLong
-          rows.foreach { case (t, pk, op) =>
-            if (op == "delete") model.remove((t, pk))
-            else model((t, pk)) = pk * 100 + b
-          }
-          val net = rows.map { case (t, pk, op) =>
-            (t, pk, op, pk * 100 + b, bi, 0.0)
-          }.toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v")
-          def deliver(): Unit =
-            BucketStore.merge(net, target, pkCols, prog.nBuckets, b)
-          kill match {
-            case BeforeFlip | BeforeFlipSnap | Torn =>
-              BucketStore.writeGen(net, target, pkCols, prog.nBuckets, b)
-              deliver()
-            case Redeliver => deliver(); deliver()
-            case NoKill => deliver()
-          }
-          val got = BucketStore.read(spark, target)
-            .map(_.select("tbl", "pk", "r_id").collect()
-              .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap)
-            .getOrElse(Map.empty)
-          assert(got === model.toMap, s"batch $b (kill $kill) diverged")
-        }
-        rmTree(new java.io.File(target).getParentFile)
-        true
-      }
-      val res = SCTest.check(
-        SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
       assert(res.passed, res.status.toString)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.sink.{BucketStore, DeltaStore}
+import graft.sink.DeltaStore
 
 /** The append-only delta-log target: last-writer-wins resolution,
-  * O(|batch|) appends, chain-capped compaction, and the BucketStore
-  * crash contract (atomic flip, replay idempotence, GC). */
+  * O(|batch|) appends, chain-capped compaction, and the crash contract
+  * (atomic flip, replay idempotence, GC). */
 class DeltaStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,28 +110,41 @@ class DeltaStoreSpec extends SparkSpec {
   }
 
   test("schema-additive append: new column resolves, old rows read null") {
-    val target = tmp("graft-delta-evolve")
-    DeltaStore.append(netOf(("t", 1L, "insert", 1L, 10, 0.5)),
-      target, pkCols, nBuckets = 4, batchId = 0)
-    // batch 1's net carries a NEW column (the ADD COLUMN analog) and
-    // also updates key 1; key 2 is new with the column populated
-    val evolved = Seq(
-      ("t", 1L, "update", 1L, 11, 1.5, "x"),
-      ("t", 2L, "insert", 2L, 20, 2.5, "y"))
-      .toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v", "r_extra")
-    DeltaStore.append(evolved, target, pkCols, nBuckets = 4, batchId = 1)
-    val got = DeltaStore.read(spark, target).get
-    assert(got.columns.contains("r_extra"),
-      "evolved column must survive the chain read, not silently drop")
-    val byPk = got.collect().map(r =>
-      r.getAs[Long]("pk") -> Option(r.getAs[String]("r_extra"))).toMap
-    assert(byPk === Map(1L -> Some("x"), 2L -> Some("y")))
-    // a key never touched after the evolution reads the column as null
-    DeltaStore.append(netOf(("t", 3L, "insert", 3L, 30, 3.5)),
-      target, pkCols, nBuckets = 4, batchId = 2)
-    val after = DeltaStore.read(spark, target).get.collect().map(r =>
-      r.getAs[Long]("pk") -> Option(r.getAs[String]("r_extra"))).toMap
-    assert(after(3L) === None && after(1L) === Some("x"))
+    // the same evolution down each write path: (maxChain, appends of key
+    // 1 before the evolved batch). The default cap with one prior append
+    // never folds; maxChain = 1 folds every touched bucket on every
+    // batch, so the evolved batch, and the batch after it that omits the
+    // new column, each fold stored rows of the other schema; the last
+    // case lands the evolved batch on key 1's chain at its cap
+    val paths = Seq(DeltaStore.defaultMaxChain -> 1, 1 -> 1,
+      DeltaStore.defaultMaxChain -> DeltaStore.defaultMaxChain)
+    paths.foreach { case (maxChain, prior) =>
+      val target = tmp("graft-delta-evolve")
+      (0 until prior).foreach { b =>
+        DeltaStore.append(netOf(("t", 1L, if (b == 0) "insert" else "update", 1L, 10, 0.5)),
+          target, pkCols, nBuckets = 4, batchId = b, maxChain = maxChain)
+      }
+      // this batch's net carries a NEW column (the ADD COLUMN analog) and
+      // also updates key 1; key 2 is new with the column populated
+      val evolved = Seq(
+        ("t", 1L, "update", 1L, 11, 1.5, "x"),
+        ("t", 2L, "insert", 2L, 20, 2.5, "y"))
+        .toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v", "r_extra")
+      DeltaStore.append(evolved, target, pkCols, nBuckets = 4, batchId = prior,
+        maxChain = maxChain)
+      val got = DeltaStore.read(spark, target).get
+      assert(got.columns.contains("r_extra"),
+        "evolved column must survive the chain read, not silently drop")
+      val byPk = got.collect().map(r =>
+        r.getAs[Long]("pk") -> Option(r.getAs[String]("r_extra"))).toMap
+      assert(byPk === Map(1L -> Some("x"), 2L -> Some("y")), s"maxChain $maxChain")
+      // a key never touched after the evolution reads the column as null
+      DeltaStore.append(netOf(("t", 3L, "insert", 3L, 30, 3.5)),
+        target, pkCols, nBuckets = 4, batchId = prior + 1, maxChain = maxChain)
+      val after = DeltaStore.read(spark, target).get.collect().map(r =>
+        r.getAs[Long]("pk") -> Option(r.getAs[String]("r_extra"))).toMap
+      assert(after(3L) === None && after(1L) === Some("x"), s"maxChain $maxChain")
+    }
   }
 
   test("optimize refuses an LWW store (update/delete net-ops present)") {
@@ -268,7 +281,7 @@ class DeltaStoreSpec extends SparkSpec {
     val target = tmp("graft-delta-foldtime")
     val keys = (1L to 50L).map(pk => ("t", pk))
     val bucketOf = keys.toDF("tbl", "pk")
-      .withColumn("b", BucketStore.bucketCol(pkCols, 4)).collect()
+      .withColumn("b", DeltaStore.bucketCol(pkCols, 4)).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     val a = keys.head
     val b = keys.find(k => bucketOf(k) != bucketOf(a)).get
@@ -343,7 +356,7 @@ class DeltaStoreSpec extends SparkSpec {
     * hash, grouped by bucket, with the bucket ids. */
   private def keysByBucket(nBuckets: Int, n: Int, per: Int): Seq[(Int, Seq[(String, Long)])] =
     (0L until 200L).map(pk => ("t", pk)).toDF("tbl", "pk")
-      .withColumn("b", BucketStore.bucketCol(pkCols, nBuckets)).collect()
+      .withColumn("b", DeltaStore.bucketCol(pkCols, nBuckets)).collect()
       .map(r => r.getInt(2) -> (r.getString(0), r.getLong(1))).toSeq
       .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
       .collect { case (b, ks) if ks.size >= per => b -> ks.take(per) }.take(n)
@@ -433,33 +446,36 @@ class DeltaStoreSpec extends SparkSpec {
     assert(DeltaStore.readApplied(target) == 8L)
     checkReads(8)
 
-    // --- BucketStore: the touched bucket moves, the old generation stays ---
-    val bt = tmp("graft-bucket-members")
+    // --- maxChain = 1: the touched bucket moves, the old generation stays ---
+    val bt = tmp("graft-fold-members")
     val bmodel = scala.collection.mutable.Map[K, V]()
     def merge(id: Long, ops: (K, String, Int)*): Unit = {
       applyTo(bmodel, ops)
-      BucketStore.merge(net(ops), bt, pkCols, nBuckets, id)
+      DeltaStore.append(net(ops), bt, pkCols, nBuckets = nBuckets,
+        batchId = id, maxChain = 1)
     }
-    def bstate = BucketStore.read(spark, bt).map(_.collect().map { r =>
+    def bstate = DeltaStore.read(spark, bt).map(_.collect().map { r =>
       (r.getAs[String]("tbl"), r.getAs[Long]("pk")) ->
         (r.getAs[Long]("r_id"), r.getAs[Int]("r_k"), r.getAs[Double]("r_v"))
     }.toSeq).getOrElse(Seq.empty)
     merge(0, (x1, "insert", 0), (x2, "insert", 0), (y1, "insert", 0), (z1, "insert", 0))
     merge(1, (x1, "update", 1), (x2, "delete", 0))
-    assert(BucketStore.readManifest(bt) == Map(bx -> "gen-1", by -> "gen-0", bz -> "gen-0"))
+    assert(DeltaStore.readManifest(bt) ==
+      Map(bx -> Seq("gen-1"), by -> Seq("gen-0"), bz -> Seq("gen-0")))
     assert(genRows(bt, "gen-0").map(_._1).toSet == Set(x1, x2, y1, z1))
     assert(bstate.size == bmodel.size && bstate.toMap == bmodel.toMap)
-    // the merge's touched-bucket read spans gen-0 and gen-1
+    // the fold's touched-bucket read spans gen-0 and gen-1
     merge(2, (x1, "update", 2), (y1, "update", 2))
-    assert(BucketStore.readManifest(bt) == Map(bx -> "gen-2", by -> "gen-2", bz -> "gen-0"))
+    assert(DeltaStore.readManifest(bt) ==
+      Map(bx -> Seq("gen-2"), by -> Seq("gen-2"), bz -> Seq("gen-0")))
     val merged = genRows(bt, "gen-2")
     assert(merged.size == bmodel.size - 1 && merged.toMap == bmodel.toMap - z1)
     assert(bstate.size == bmodel.size && bstate.toMap == bmodel.toMap)
     // an all-deleted bucket leaves the manifest; an empty batch keeps it
     merge(3, (x1, "delete", 0))
-    assert(BucketStore.readManifest(bt) == Map(by -> "gen-2", bz -> "gen-0"))
+    assert(DeltaStore.readManifest(bt) == Map(by -> Seq("gen-2"), bz -> Seq("gen-0")))
     merge(4)
-    assert(BucketStore.readManifest(bt) == Map(by -> "gen-2", bz -> "gen-0"))
+    assert(DeltaStore.readManifest(bt) == Map(by -> Seq("gen-2"), bz -> Seq("gen-0")))
     assert(bstate.toMap == bmodel.toMap && onDisk(bt) == Set("gen-0", "gen-2"))
   }
 
@@ -832,7 +848,7 @@ class DeltaStoreSpec extends SparkSpec {
     val target = tmp("graft-delta-feedprune")
     val nBuckets = 8
     def bucketOf(k: (String, Long)): Int = Seq(k).toDF("tbl", "pk")
-      .select(BucketStore.bucketCol(pkCols, nBuckets)).head().getInt(0)
+      .select(DeltaStore.bucketCol(pkCols, nBuckets)).head().getInt(0)
     def append(id: Long, rows: (String, Long, String, Long, Int, Double)*): Unit =
       DeltaStore.append(netOf(rows: _*), target, pkCols,
         nBuckets = nBuckets, batchId = id, maxChain = 100)

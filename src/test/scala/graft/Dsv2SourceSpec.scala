@@ -82,32 +82,28 @@ class Dsv2SourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("config-driven sync over the dsv2 source: both incremental sinks agree") {
+  test("config-driven sync over the dsv2 source: delta state equals batch compaction") {
     // the custom source driving the APPLY path through the one-binary
-    // front-end (source type events_dsv2): multi-batch rate-limited
-    // drain into each incremental sink, final states cross-validated —
-    // chunking and the rate limit are deterministic, so both drains see
-    // identical batch cuts, and the apply algebra makes the final state
-    // batch-cut-independent anyway
-    def drain(sinkType: String): org.apache.spark.sql.DataFrame = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-dsv2-$sinkType")
-      graft.pipeline.Pipeline.runStream(spark, s"""{
-        "source": {"type": "events_dsv2", "dir": "$sf",
-                   "maxRowsPerTrigger": "300"},
-        "processors": [],
-        "sink": {"type": "$sinkType", "path": "$dir/state",
-                 "checkpoint": "$dir/ckpt", "pk": ["tbl", "pk"], "buckets": 16}
-      }""")
-      if (sinkType == "parquet_merge")
-        graft.sink.BucketStore.read(spark, s"$dir/state").get
-      else graft.sink.DeltaStore.read(spark, s"$dir/state").get
-    }
-    val cols = Seq("tbl", "pk", "r_id", "r_k", "r_v")
-    val m = drain("parquet_merge").select(cols.map(org.apache.spark.sql.functions.col): _*)
-    val d = drain("parquet_delta").select(cols.map(org.apache.spark.sql.functions.col): _*)
-    assert(m.count() > 0)
-    assert(m.exceptAll(d).isEmpty && d.exceptAll(m).isEmpty,
-      "dsv2-driven merge and delta final states diverge")
+    // front-end (source type events_dsv2): a multi-batch rate-limited
+    // drain into the delta store, whose final state must equal one-shot
+    // compaction of the same events — the apply algebra makes the final
+    // state batch-cut-independent
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-delta")
+    graft.pipeline.Pipeline.runStream(spark, s"""{
+      "source": {"type": "events_dsv2", "dir": "$sf",
+                 "maxRowsPerTrigger": "300"},
+      "processors": [],
+      "sink": {"type": "parquet_delta", "path": "$dir/state",
+               "checkpoint": "$dir/ckpt", "pk": ["tbl", "pk"], "buckets": 16}
+    }""")
+    val cols = Seq("tbl", "pk", "r_id", "r_k", "r_v").map(col)
+    val d = graft.sink.DeltaStore.read(spark, s"$dir/state").get.select(cols: _*)
+    val want = graft.op.Compactor.compact(graft.source.Changelog.fromEvents(spark, sf))
+      .filter(col("net_op") =!= "delete").select(cols: _*)
+    assert(d.count() > 0)
+    assert(d.exceptAll(want).isEmpty && want.exceptAll(d).isEmpty,
+      "dsv2-driven delta state diverges from batch compaction")
   }
 
   test("dsv2 source feeds the standard operator chain") {

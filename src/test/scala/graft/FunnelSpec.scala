@@ -182,7 +182,7 @@ class FunnelSpec extends SparkSpec {
     // funnel over the SURVIVING events (arrival-dropped: ts_ms <= wm at
     // arrival), and after every fold the kept state holds no stale
     // event while the frozen prefix holds only matured picks
-    import graft.streaming.ChangeStream.{FunnelEvent, FunnelProgress, funnelFoldTtl}
+    import graft.streaming.ChangeStream.{FunnelEvent, FunnelProgress, funnelFold}
     val ord = implicitly[Ordering[(Long, Long)]]
     // greedy walk with an optional conversion window (anchor = first
     // pick): the TTL fold must stay exact when COMPOSED with the
@@ -239,7 +239,7 @@ class FunnelSpec extends SparkSpec {
           survivors ++= mine.filter(_.ts / 1000000L > wm)
             .map(e => e.ty -> ((e.ts, e.id)))
           if (mine.nonEmpty) {
-            val (next, upd) = funnelFoldTtl(Some(u), steps, st, mine, wm, w)
+            val (next, upd) = funnelFold(Some(u), steps, st, mine, wm, w)
             st = Some(next)
             upd.foreach(x => last = Some(x))
             // state bound: nothing stale survives in the kept sets;
@@ -351,7 +351,7 @@ class FunnelSpec extends SparkSpec {
     // stream, INCLUDING the case where a late batch re-decides the
     // anchor and the window re-clips previously-emitted later steps
     import graft.streaming.ChangeStream.{FunnelEvent, FunnelProgress,
-      FunnelUpd, funnelFoldWithin}
+      FunnelUpd, funnelFold}
     val ord = implicitly[Ordering[(Long, Long)]]
     val gen = for {
       evs <- evGen; steps <- stepsGen; w <- Gen.choose(0L, 12L)
@@ -372,7 +372,7 @@ class FunnelSpec extends SparkSpec {
           val mine = b.filter(e => e.ent == u && steps.contains(e.ty))
             .map(e => FunnelEvent(Some(u), e.ty, e.t, e.id))
           if (mine.nonEmpty) {
-            val (next, upd) = funnelFoldWithin(Some(u), steps, st, mine, w)
+            val (next, upd) = funnelFold(Some(u), steps, st, mine, withinNs = w)
             st = Some(next)
             upd.foreach(x => last = Some(x))
             // window state bound: once an anchor exists, kept events
@@ -419,7 +419,7 @@ class FunnelSpec extends SparkSpec {
   }
 
   test("step-1 prune: dead above-anchor events evicted; dup-step-type guard fails closed") {
-    import graft.streaming.ChangeStream.{FunnelEvent, funnelFold, funnelFoldTtl}
+    import graft.streaming.ChangeStream.{FunnelEvent, funnelFold}
     // distinct step types: the anchor is a MIN, so only the step-1
     // set's minimum is ever pickable — view@5 is dead weight and must
     // not survive the batch boundary (TODO r18 candidate 4)
@@ -451,11 +451,11 @@ class FunnelSpec extends SparkSpec {
     // frozen anchor (TTL form): the pick is FINAL, so every remaining
     // head-typed candidate is dead — the view entry empties even for
     // events the watermark alone would have kept
-    val (t1, _) = funnelFoldTtl(Some(1L), Seq("view", "click"), None, Seq(
+    val (t1, _) = funnelFold(Some(1L), Seq("view", "click"), None, Seq(
       FunnelEvent(Some(1L), "view", 1000000000L, 30L),
       FunnelEvent(Some(1L), "view", 9000000000L, 31L),
       FunnelEvent(Some(1L), "click", 7000000000L, 32L)), wmMs = Long.MinValue)
-    val (t2, _) = funnelFoldTtl(Some(1L), Seq("view", "click"), Some(t1),
+    val (t2, _) = funnelFold(Some(1L), Seq("view", "click"), Some(t1),
       Nil, wmMs = 2000L)
     assert(t2.frozen == Seq((1000000000L, 30L)) &&
       !t2.keys.contains("view"), t2.toString)
@@ -467,16 +467,16 @@ class FunnelSpec extends SparkSpec {
     // delivers a LATE, EARLIER step-1 event — the anchor moves to it,
     // the old steps fall outside [anchor, anchor+W], and the re-walk
     // must shrink the emitted chain back to depth 1
-    import graft.streaming.ChangeStream.{FunnelEvent, funnelFoldWithin}
+    import graft.streaming.ChangeStream.{FunnelEvent, funnelFold}
     val steps = List("a", "b", "c")
     val w = 3L
-    val (s1, u1) = funnelFoldWithin(Some(1L), steps, None, Seq(
+    val (s1, u1) = funnelFold(Some(1L), steps, None, Seq(
       FunnelEvent(Some(1L), "a", 5L, 1L),
       FunnelEvent(Some(1L), "b", 6L, 2L),
-      FunnelEvent(Some(1L), "c", 7L, 3L)), w)
+      FunnelEvent(Some(1L), "c", 7L, 3L)), withinNs = w)
     assert(u1.exists(u => u.depth == 3L && u.ts_arr == Seq(5L, 6L, 7L)))
-    val (_, u2) = funnelFoldWithin(Some(1L), steps, Some(s1), Seq(
-      FunnelEvent(Some(1L), "a", 0L, 0L)), w)
+    val (_, u2) = funnelFold(Some(1L), steps, Some(s1), Seq(
+      FunnelEvent(Some(1L), "a", 0L, 0L)), withinNs = w)
     assert(u2.exists(u => u.depth == 1L && u.ts_arr == Seq(0L)),
       s"anchor re-decision must re-clip the chain, got $u2")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import graft.sink.{BucketStore, DeltaStore, ManifestStore}
+import graft.sink.{DeltaStore, ManifestStore}
 
 /** The object-store porting seam, pinned with fault-injecting
   * [[ManifestStore]] impls: a lost conditional put must fail the batch
@@ -34,7 +34,7 @@ class ManifestStoreSpec extends SparkSpec {
       org.apache.spark.sql.functions.lit("insert"))
 
   private def state(target: String): Map[Long, String] =
-    BucketStore.read(spark, target)
+    DeltaStore.read(spark, target)
       .map(_.as[(Long, String)].collect().toMap).getOrElse(Map.empty)
 
   private def genDirs(target: String): Set[String] =
@@ -44,40 +44,44 @@ class ManifestStoreSpec extends SparkSpec {
   test("a lost conditional put fails the batch, leaves the old state readable, and replay converges") {
     val target = java.nio.file.Files.createTempDirectory("graft-ms-lost")
       .resolve("store").toString
-    BucketStore.merge(net(1L -> "a"), target, Seq("pk"), 1, 0L)
+    DeltaStore.append(net(1L -> "a"), target, Seq("pk"), 1, 0L)
     assert(state(target) == Map(1L -> "a"))
     // batch 1's generation is fully written, but the flip's publish loses
     // its condition: the batch must FAIL (no silent overwrite — under the
     // single-writer contract a lost condition means split-brain)...
     intercept[IllegalStateException] {
-      BucketStore.merge(net(2L -> "b"), target, Seq("pk"), 1, 1L, fs = LostCondition)
+      DeltaStore.append(net(2L -> "b"), target, Seq("pk"), 1, 1L, fs = LostCondition)
     }
     // ...and readers still see exactly the pre-batch state through the
     // old manifest (publish was all-or-nothing)
     assert(state(target) == Map(1L -> "a"))
     // the streaming retry replays the batch (same id) against the real
     // store and converges — the orphaned gen-1 dir from the failed
-    // attempt is overwritten by its own replay, then flipped in
-    BucketStore.merge(net(2L -> "b"), target, Seq("pk"), 1, 1L)
+    // attempt is overwritten by its own replay, then flipped in (the
+    // append keeps gen-0 in the chain)
+    DeltaStore.append(net(2L -> "b"), target, Seq("pk"), 1, 1L)
     assert(state(target) == Map(1L -> "a", 2L -> "b"))
-    assert(genDirs(target) == Set("gen-1")) // gen-0 swept by the good flip
+    assert(DeltaStore.readManifest(target) == Map(0 -> Seq("gen-0", "gen-1")))
+    assert(genDirs(target) == Set("gen-0", "gen-1"))
   }
 
   test("a crash between publish and sweep orphans generations that the next flip reclaims") {
     val target = java.nio.file.Files.createTempDirectory("graft-ms-crash")
       .resolve("store").toString
-    BucketStore.merge(net(1L -> "a"), target, Seq("pk"), 1, 0L)
-    // nBuckets = 1: every batch rewrites the single bucket, so gen-0 is
-    // fully superseded by gen-1 — but the sweep "crashes" first
-    BucketStore.merge(net(2L -> "b"), target, Seq("pk"), 1, 1L, fs = CrashBeforeSweep)
+    DeltaStore.append(net(1L -> "a"), target, Seq("pk"), 1, 0L)
+    DeltaStore.append(net(2L -> "b"), target, Seq("pk"), 1, 1L)
+    // the file-merge maintenance folds the chain into snap-1, so gen-0
+    // and gen-1 are fully superseded — but the sweep "crashes" first
+    DeltaStore.optimizeAppendOnly(spark, target, fs = CrashBeforeSweep)
     // the NEW state is visible (publish committed before the crash) and
-    // the superseded generation is merely orphaned on disk
+    // the superseded generations are merely orphaned on disk
+    assert(DeltaStore.readManifest(target) == Map(0 -> Seq("snap-1")))
     assert(state(target) == Map(1L -> "a", 2L -> "b"))
-    assert(genDirs(target) == Set("gen-0", "gen-1"))
+    assert(genDirs(target) == Set("gen-0", "gen-1", "snap-1"))
     // the next ordinary flip's sweep reclaims every unreferenced dir
-    BucketStore.merge(net(3L -> "c"), target, Seq("pk"), 1, 2L)
+    DeltaStore.append(net(3L -> "c"), target, Seq("pk"), 1, 2L)
     assert(state(target) == Map(1L -> "a", 2L -> "b", 3L -> "c"))
-    assert(genDirs(target) == Set("gen-2"))
+    assert(genDirs(target) == Set("snap-1", "gen-2"))
   }
 
   test("DeltaStore flips through the same seam: crash-before-sweep orphans, next append reclaims") {

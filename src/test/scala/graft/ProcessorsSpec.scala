@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.op.{Checker, Processors}
-import graft.sink.{Merge, SqlGen, Sinks}
+import graft.sink.{SqlGen, Sinks}
 
 class ProcessorsSpec extends SparkSpec {
   import spark.implicits._
@@ -115,16 +115,6 @@ class ProcessorsSpec extends SparkSpec {
       "UPDATE `t` SET `c`=DEFAULT(`c`) WHERE `id`=1")
     assert(SqlGen.deleteIn("t", "id", Seq(1, 2)) ==
       "DELETE FROM `t` WHERE `id` IN (1,2)")
-  }
-
-  test("Merge.applyNetChanges applies insert/update/delete net ops") {
-    val target = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("pk", "s")
-    val changes = Seq(
-      (1L, "update", "a2"), (3L, "delete", null: String), (4L, "insert", "d")
-    ).toDF("pk", "net_op", "s")
-    val got = Merge.applyNetChanges(target, changes, Seq("pk"))
-      .as[(Long, String)].collect().toMap
-    assert(got == Map(1L -> "a2", 2L -> "b", 4L -> "d"))
   }
 
   test("P3 logical indirection: first-substring replace keeps shard suffix") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.op.Compactor
-import graft.sink.Merge
+import graft.sink.DeltaStore
 import graft.source.Changelog
 import graft.streaming.ChangeStream
 
@@ -103,14 +103,14 @@ class RestartSpec extends SparkSpec {
     val cfg = s"""{
       "source": {"type": "events_stream", "dir": "$sf"},
       "processors": [],
-      "sink": {"type": "parquet_merge", "path": "$target",
+      "sink": {"type": "parquet_delta", "path": "$target",
                "checkpoint": "$ckpt", "pk": ["tbl", "pk"]}
     }"""
     val snap = graft.pipeline.Pipeline.runStream(spark, cfg)
     // the sync task publishes its qps gauge (reference metrics.go:16-23)
     assert(snap.exists(_.numInputRows == 1000L),
       s"expected a progress snapshot covering the 1000-event batch, got $snap")
-    val got = graft.sink.BucketStore.read(spark, target).get
+    val got = DeltaStore.read(spark, target).get
       .select("tbl", "pk", "r_k").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> Option(r.get(2))).toMap
     val want = Compactor.compact(Changelog.fromEvents(spark, sf))
@@ -120,12 +120,11 @@ class RestartSpec extends SparkSpec {
     assert(got == want && got.nonEmpty)
     // re-run from the same checkpoint: no new batches, target unchanged
     graft.pipeline.Pipeline.runStream(spark, cfg)
-    val again = graft.sink.BucketStore.read(spark, target).get.count()
+    val again = DeltaStore.read(spark, target).get.count()
     assert(again == got.size)
   }
 
   test("crash between generation write and manifest flip loses nothing") {
-    import graft.sink.BucketStore
     val target = Files.createTempDirectory("graft-swap-t").toString + "/state"
     val ckpt = Files.createTempDirectory("graft-swap-c").toString
     val pkCols = Seq("tbl", "pk")
@@ -137,11 +136,11 @@ class RestartSpec extends SparkSpec {
         if (crashBeforeFlip && !crashedOnce) {
           // generation fully written, MANIFEST never flipped — the exact
           // window the old overwrite-in-place sink corrupted
-          BucketStore.writeGen(net, target, pkCols, 8, id)
+          DeltaStore.writeGen(net, target, pkCols, 8, id)
           crashedOnce = true
           throw new RuntimeException("injected crash before manifest flip")
         }
-        BucketStore.merge(net, target, pkCols, 8, id)
+        DeltaStore.append(net, target, pkCols, 8, id)
       }
       try q.awaitTermination()
       catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
@@ -151,12 +150,12 @@ class RestartSpec extends SparkSpec {
     assert(crashedOnce)
     // pre-flip state is still consistently readable (empty here: batch 0
     // never committed) — the manifest references no torn generation
-    val midManifest = BucketStore.readManifest(target)
-    assert(midManifest.values.forall(g =>
+    val midManifest = DeltaStore.readManifest(target)
+    assert(midManifest.values.flatten.forall(g =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(target, g, "_SUCCESS"))))
 
     runOnce(crashBeforeFlip = false) // replay overwrites its own partial gen
-    val got = BucketStore.read(spark, target).get
+    val got = DeltaStore.read(spark, target).get
       .select("tbl", "pk", "r_k").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> Option(r.get(2))).toMap
     val want = Compactor.compact(Changelog.fromEvents(spark, sf))
@@ -165,61 +164,28 @@ class RestartSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1)) -> Option(r.get(2))).toMap
     assert(got == want && got.nonEmpty)
     // every live generation completed its write
-    assert(BucketStore.readManifest(target).values.toSet.forall(g =>
+    assert(DeltaStore.readManifest(target).values.flatten.forall(g =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(target, g, "_SUCCESS"))))
   }
 
-  test("a net that omits a stored column fails loudly unless drops are allowed") {
-    import graft.sink.BucketStore
-    import spark.implicits._
-    val target = Files.createTempDirectory("graft-drop").toString + "/state"
-    val pkCols = Seq("tbl", "pk")
-    BucketStore.merge(Seq(("t", 1L, "insert", 10L, 0.5))
-      .toDF("tbl", "pk", "net_op", "r_id", "r_v"),
-      target, pkCols, nBuckets = 4, batchId = 0)
-    // schema drift: the next net forgot r_v — the old net-authoritative
-    // read would have silently dropped it from the whole store. Same pk
-    // so the merge reads the stored bucket (the guard rides the footer
-    // of files the merge reads anyway; drift that touches only fresh
-    // buckets surfaces at the next fold of an old one — still loud).
-    val narrow = Seq(("t", 1L, "update", 20L)).toDF("tbl", "pk", "net_op", "r_id")
-    val e = intercept[IllegalArgumentException] {
-      BucketStore.merge(narrow, target, pkCols, nBuckets = 4, batchId = 1)
-    }
-    assert(e.getMessage.contains("r_v"))
-    // the store is untouched by the refused merge
-    assert(BucketStore.read(spark, target).get.columns.contains("r_v"))
-    assert(BucketStore.read(spark, target).get.count() == 1)
-    // intentional evolution is explicit — and additive evolution (a NEW
-    // column) needs no flag: old generations read it as null
-    BucketStore.merge(narrow, target, pkCols, nBuckets = 4, batchId = 1,
-      allowDropColumns = true)
-    assert(!BucketStore.read(spark, target).get.columns.contains("r_v"))
-    val wide = Seq(("t", 1L, "update", 30L, 7))
-      .toDF("tbl", "pk", "net_op", "r_id", "r_extra")
-    BucketStore.merge(wide, target, pkCols, nBuckets = 4, batchId = 2)
-    val rows = BucketStore.read(spark, target).get
-    assert(rows.columns.contains("r_extra") && rows.count() == 1)
-  }
-
   test("additive evolution touching SOME buckets: read merges, never drops") {
-    import graft.sink.BucketStore
     import spark.implicits._
     val target = Files.createTempDirectory("graft-evolve-part").toString + "/state"
     val pkCols = Seq("tbl", "pk")
     // 8 keys spread across the 4 hash buckets
-    BucketStore.merge((1L to 8L).map(k => ("t", k, "insert", k * 10, 0.5)).toDF(
+    // maxChain = 1: every batch folds the buckets it touches
+    DeltaStore.append((1L to 8L).map(k => ("t", k, "insert", k * 10, 0.5)).toDF(
       "tbl", "pk", "net_op", "r_id", "r_v"),
-      target, pkCols, nBuckets = 4, batchId = 0)
+      target, pkCols, nBuckets = 4, batchId = 0, maxChain = 1)
     // the evolving batch touches ONE key → one bucket rewritten with the
     // new column; the other buckets keep the pre-evolution footer. The
-    // store now has mixed per-bucket schemas — read must merge them (the
-    // old first-file-schema read silently dropped r_extra or not
-    // depending on path order).
-    BucketStore.merge(Seq(("t", 1L, "update", 10L, 0.5, "x")).toDF(
+    // store now has mixed per-bucket schemas — read must merge them (a
+    // first-file-schema read silently drops r_extra or not depending on
+    // path order).
+    DeltaStore.append(Seq(("t", 1L, "update", 10L, 0.5, "x")).toDF(
       "tbl", "pk", "net_op", "r_id", "r_v", "r_extra"),
-      target, pkCols, nBuckets = 4, batchId = 1)
-    val rows = BucketStore.read(spark, target).get
+      target, pkCols, nBuckets = 4, batchId = 1, maxChain = 1)
+    val rows = DeltaStore.read(spark, target).get
     assert(rows.columns.contains("r_extra"),
       "evolved column must survive a read spanning mixed-schema buckets")
     val byPk = rows.collect().map(r =>
@@ -229,32 +195,31 @@ class RestartSpec extends SparkSpec {
   }
 
   test("bucket store folds generations down: live gens stay bounded") {
-    import graft.sink.BucketStore
     import spark.implicits._
     val target = Files.createTempDirectory("graft-gens").toString + "/state"
     val pkCols = Seq("tbl", "pk")
     // 12 single-key batches with maxLiveGens=4: without fold-down the
-    // store would hold 12 generations; with it, every 4th merge rewrites
-    // all live buckets into one gen and GC reclaims the rest
+    // store would hold 12 generations; with it, the append that finds 4
+    // live gens folds all live buckets into one gen and GC reclaims the
+    // rest
     (0 until 12).foreach { i =>
       val net = Seq(("t", i.toLong, "insert", i.toLong, i, i / 2.0))
         .toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v")
-      BucketStore.merge(net, target, pkCols, nBuckets = 8, batchId = i,
+      DeltaStore.append(net, target, pkCols, nBuckets = 8, batchId = i,
         maxLiveGens = 4)
     }
-    val liveGens = BucketStore.readManifest(target).values.toSet
+    val liveGens = DeltaStore.readManifest(target).values.flatten.toSet
     assert(liveGens.size <= 4, s"generations not folded: $liveGens")
     // no unreferenced generation dirs left on disk
     val onDisk = new java.io.File(target).list().filter(_.startsWith("gen-")).toSet
     assert(onDisk == liveGens, s"orphan generations: ${onDisk -- liveGens}")
     // state is complete and correct after the folds
-    val got = BucketStore.read(spark, target).get
+    val got = DeltaStore.read(spark, target).get
       .select("pk", "r_k").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == (0 until 12).map(i => i.toLong -> i).toMap)
   }
 
   test("empty and all-cancelling batches leave no orphan generation dirs") {
-    import graft.sink.BucketStore
     import spark.implicits._
     val target = Files.createTempDirectory("graft-empty-gens").toString + "/state"
     val pkCols = Seq("tbl", "pk")
@@ -262,28 +227,31 @@ class RestartSpec extends SparkSpec {
       rows.toSeq.toDF("tbl", "pk", "net_op", "r_id", "r_k", "r_v")
     def onDisk() = Option(new java.io.File(target).list()).getOrElse(Array.empty)
       .filter(_.startsWith("gen-")).toSet
-    BucketStore.merge(net(("t", 1L, "insert", 1L, 1, 1.0)), target, pkCols, 8, 0)
+    // maxChain = 1: every batch folds the buckets it touches
+    def merge(n: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      DeltaStore.append(n, target, pkCols, 8, id, maxChain = 1)
+    merge(net(("t", 1L, "insert", 1L, 1, 1.0)), 0)
     // an empty net (e.g. an admission batch that rejected every doc) must
     // write nothing: a gen dir holding only _SUCCESS is referenced by no
     // manifest entry and would leak one dir per empty batch forever
-    val m1 = BucketStore.readManifest(target)
-    BucketStore.merge(net(), target, pkCols, 8, 1)
-    assert(BucketStore.readManifest(target) == m1)
-    assert(onDisk() == m1.values.toSet, s"orphans: ${onDisk() -- m1.values.toSet}")
+    val m1 = DeltaStore.readManifest(target)
+    merge(net(), 1)
+    assert(DeltaStore.readManifest(target) == m1)
+    val live = m1.values.flatten.toSet
+    assert(onDisk() == live, s"orphans: ${onDisk() -- live}")
     // a batch that deletes EVERYTHING nets every touched bucket to empty:
     // the manifest empties and the batch's own output dir is swept
-    BucketStore.merge(net(("t", 1L, "delete", 0L, 0, 0.0)), target, pkCols, 8, 2)
-    assert(BucketStore.readManifest(target).isEmpty)
+    merge(net(("t", 1L, "delete", 0L, 0, 0.0)), 2)
+    assert(DeltaStore.readManifest(target).isEmpty)
     assert(onDisk().isEmpty, s"orphans: ${onDisk()}")
-    assert(BucketStore.read(spark, target).isEmpty)
+    assert(DeltaStore.read(spark, target).isEmpty)
     // at-least-once redelivery of that batch (crash fell between flip and
-    // checkpoint commit): deleting absent keys is a no-op, and the sweep
-    // reclaims the replay's own re-written dir
-    BucketStore.merge(net(("t", 1L, "delete", 0L, 0, 0.0)), target, pkCols, 8, 2)
-    assert(BucketStore.readManifest(target).isEmpty && onDisk().isEmpty)
+    // checkpoint commit): the #applied guard skips it, writing nothing
+    merge(net(("t", 1L, "delete", 0L, 0, 0.0)), 2)
+    assert(DeltaStore.readManifest(target).isEmpty && onDisk().isEmpty)
     // the store stays writable past the replayed id
-    BucketStore.merge(net(("t", 2L, "insert", 2L, 2, 2.0)), target, pkCols, 8, 3)
-    assert(BucketStore.read(spark, target).get.count() == 1)
+    merge(net(("t", 2L, "insert", 2L, 2, 2.0)), 3)
+    assert(DeltaStore.read(spark, target).get.count() == 1)
   }
 
   test("pipeline config assembles and runs end to end") {
