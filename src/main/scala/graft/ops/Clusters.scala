@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.math.BigInteger
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,137 +12,207 @@ import org.apache.spark.sql.functions._
   * even when a and c are not themselves a pair, and exactly one
   * canonical doc survives per group.
   *
-  * Algorithm: hash-min label propagation with pointer jumping — every
-  * node starts as its own label, and each round takes the min over its
-  * own label, its neighbors' labels, AND its label's label (the jump:
-  * effective depth doubles per round). At fixpoint the label is the
-  * component's min node id (deterministic canonical choice). Rounds =
-  * O(log diameter); a `maxIters` bound turns a pathological graph into
-  * a loud failure rather than an unbounded job.
+  * Algorithm: contraction first (Kiveris et al., "Connected Components
+  * in MapReduce and Beyond", SoCC 2014). A LEVEL takes an edge set,
+  * written (least, greatest) with self-loops dropped, and repartitions
+  * it on the smaller endpoint with no fixed partition count, so AQE
+  * coalesces the session's shuffle partitions by bytes (with Spark's
+  * defaults an edge set under ~1 MB, `minPartitionSize`, is ONE
+  * partition). Each partition runs one
+  * union-find over its edges ([[UnionFind]]: union by min id, so a
+  * root is its local component's min id) and emits (node, local root)
+  * for every node it saw. A node seen by several partitions has
+  * several roots; one fold per node keeps its minimum root `m` and its
+  * distinct roots, and that fold is the level's one lineage cut
+  * ([[Lineage.cutLazy]]). One job over the cut counts the nodes with
+  * two or more roots. None: every component lies inside one local
+  * component, `m` is its min id, and the level is the last. Otherwise
+  * each such node gives the next level's edges (m, other root) — a
+  * graph over roots only, with the same components — and labels
+  * compose back down as label(v) = next(m(v)), identity where `v` is
+  * absent from the next level. Labels are the component's min id.
   *
-  * Convergence: labels only ever DECREASE (min-fold), so the exact sum
-  * of labels is a strictly monotone potential — an equal sum in two
-  * consecutive rounds is the fixpoint. Each round's sum is ONE Spark
-  * job over the round's checkpoint RDD (a per-partition exact sum,
-  * folded on the driver); that job is also the action that fills the
-  * checkpoint blocks, so a round costs its shuffle stages plus one job
-  * and no shuffle of its own. The identity labels are never summed:
-  * self-loops are dropped from the edge set (a node's own label is
-  * already in its fold), so a remaining edge a–b between two nodes
-  * lowers max(a, b) in round 1, and comparison starts at round 2. An
-  * edge set that is empty after that needs no round at all. Round 1
-  * also skips the jump join, a no-op on identity labels.
+  * Levels: an edge set that fits one partition settles in ONE level,
+  * whatever its diameter. Across partitions a level merges what its
+  * partitions see together, and a component's largest node (never a
+  * root) always leaves it, so levels are finite; AQE then packs the
+  * smaller root graph into fewer partitions. The partitioning is
+  * salted by the level: unsalted, the next level's edges land in the
+  * partitions that produced them, and a path whose ids rise along it
+  * loses one node per level. Rising paths are still the slow shape
+  * (over 4 partitions a level drops about a quarter of their nodes),
+  * so `maxIters` bounds LEVELS and turns a pathological graph into a
+  * loud failure rather than an unbounded job.
   *
-  * Scale shape: each round is one keyed equi-join (labels × edges)
-  * and one min-agg — both shuffle on the node id, no broadcast of
-  * anything corpus-sized. The symmetrized edge set is one plan
-  * (each edge exploded into both directions, then deduplicated — a
-  * union of the two directions would plan the caller's edge
-  * derivation twice) cached once across rounds. Lineage is cut every
-  * round (RDD `localCheckpoint`; a deployment would checkpoint to the
-  * cluster FS) so round k does not replay rounds 1..k−1 — and the
-  * PREVIOUS round's checkpoint is unpersisted explicitly as soon as
-  * the next is materialized, so the loop holds exactly ONE round of
-  * label blocks at any moment (Dataset.localCheckpoint leaves the
-  * superseded rounds to the async ContextCleaner, whose GC-driven
-  * timing made repeated runs churn the block store and read as bench
-  * noise). Callers should contract identical-signature cliques BEFORE
-  * building edges (CC over distinct signatures, labels joined back to
-  * docs) — a 10⁶-doc exact-dup clique is one contracted node instead
-  * of 10¹² edges.
+  * Memory: one partition's union-find holds every node its edges name,
+  * in primitive arrays — an open-addressing id → index table at load
+  * ≤ 1/2 plus an id and a parent per index, about 40 bytes per node,
+  * up to ~2× that while the table grows. The edges stream through it.
+  * Coalescing merges partitions and never splits one, so a partition
+  * takes at most about 1/`spark.sql.shuffle.partitions` of a level's
+  * edges (more under key skew), and the map holds their nodes.
+  *
+  * Null ids: an edge with one null end makes the null id a node that
+  * takes the least label among its non-null neighbors and joins no two
+  * components (it receives labels, never passes one on). Its roots
+  * ride each level as (root, null) edges, so its label is the last
+  * level's `m`. A both-null edge is dropped like a self-loop.
+  *
+  * Each level's checkpoint stays persisted behind the returned frame
+  * (the composition reads them all) and is registered for
+  * [[GraphBlocks.release]]; levels shrink, so the first dominates.
+  * Callers should contract identical-signature cliques BEFORE building
+  * edges (CC over distinct signatures, labels joined back to docs) — a
+  * 10⁶-doc exact-dup clique is one contracted node instead of 10¹²
+  * edges.
   */
 object Clusters {
 
-  /** The undirected edge set of `edges` (aId, bId) as distinct directed
-    * (src, dst) pairs, both directions, self-loops dropped. One plan:
-    * each edge explodes into its two directions, so the caller's edge
-    * derivation is planned (and run) once. */
-  private def symmetricEdges(edges: DataFrame, aId: String,
-      bId: String): DataFrame =
-    edges
-      .select(explode(array(
-        struct(col(aId).as("src"), col(bId).as("dst")),
-        struct(col(bId).as("src"), col(aId).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // null-safe: an edge with one null end still propagates a label
-      // to the null id, as it always has; a loop never changes one
-      .filter(!(col("src") <=> col("dst")))
-      .distinct()
+  /** Union-find over one partition's long ids, in primitive arrays: an
+    * open-addressing table (linear probing, Fibonacci hashing, power-of-
+    * two size) maps an id to a dense index — a slot holds index + 1, 0
+    * is empty, so every long is a valid id — and `parent` links indices.
+    * Union hangs the root with the larger id under the one with the
+    * smaller, so a root is its set's min id; `find` halves paths. */
+  private final class UnionFind {
+    private var bits = 4
+    private var keys = new Array[Long](1 << bits)
+    private var slots = new Array[Int](1 << bits)
+    private var ids = new Array[Long](8)
+    private var parent = new Array[Int](8)
+    private var n = 0
 
-  /** Exact sum of the non-null labels of a checkpointed (v, comp)
-    * label RDD: one job, per-partition partial sums in a long that
-    * spill into a BigInteger on overflow, folded on the driver. */
-  private def potential(labels: RDD[InternalRow]): BigInteger =
-    labels.sparkContext.runJob(labels, (rows: Iterator[InternalRow]) => {
-      var big = BigInteger.ZERO
-      var acc = 0L
-      rows.foreach { r =>
-        if (!r.isNullAt(1)) {
-          val v = r.getLong(1)
-          val s = acc + v
-          if (((acc ^ s) & (v ^ s)) < 0) { big = big.add(BigInteger.valueOf(acc)); acc = v }
-          else acc = s
+    def size: Int = n
+    def id(i: Int): Long = ids(i)
+
+    private def slot(x: Long, ks: Array[Long], ss: Array[Int], b: Int): Int = {
+      var s = ((x * 0x9E3779B97F4A7C15L) >>> (64 - b)).toInt
+      while (ss(s) != 0 && ks(s) != x) s = (s + 1) & (ss.length - 1)
+      s
+    }
+
+    /** The dense index of `x`, added as its own set when new. */
+    def index(x: Long): Int = {
+      val s = slot(x, keys, slots, bits)
+      if (slots(s) != 0) slots(s) - 1
+      else {
+        if (n == ids.length) {
+          ids = java.util.Arrays.copyOf(ids, 2 * n)
+          parent = java.util.Arrays.copyOf(parent, 2 * n)
         }
+        ids(n) = x; parent(n) = n
+        keys(s) = x; slots(s) = n + 1
+        n += 1
+        if (2 * n > slots.length) grow()
+        n - 1
       }
-      big.add(BigInteger.valueOf(acc))
-    }).foldLeft(BigInteger.ZERO)(_.add(_))
+    }
+
+    private def grow(): Unit = {
+      val b = bits + 1
+      val ks = new Array[Long](1 << b)
+      val ss = new Array[Int](1 << b)
+      var i = 0
+      while (i < n) {
+        val s = slot(ids(i), ks, ss, b)
+        ks(s) = ids(i); ss(s) = i + 1
+        i += 1
+      }
+      bits = b; keys = ks; slots = ss
+    }
+
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+
+    def union(x: Long, y: Long): Unit = {
+      val a = find(index(x)); val b = find(index(y))
+      if (a != b) { if (ids(a) < ids(b)) parent(b) = a else parent(a) = b }
+    }
+
+    def root(i: Int): Long = ids(find(i))
+  }
+
+  /** One partition of a level: union-find over its (u, w) edges, then
+    * (node, local root) for every node it saw, and (null, root) once
+    * per distinct root among the null id's neighbors (w = None). */
+  private def contract(edges: Iterator[(Long, Option[Long])])
+      : Iterator[(Option[Long], Long)] = {
+    val uf = new UnionFind
+    val nullNbrs = new scala.collection.mutable.ArrayBuilder.ofInt
+    edges.foreach {
+      case (u, Some(w)) => uf.union(u, w)
+      case (u, None) => nullNbrs += uf.index(u)
+    }
+    Iterator.range(0, uf.size).map(i => (Some(uf.id(i)), uf.root(i))) ++
+      nullNbrs.result().iterator.map(uf.root).distinct.map(r => (None, r))
+  }
 
   /** (idCol, comp) for every node: `comp` = min node id reachable in
-    * the undirected graph `edges` (aId, bId). Isolated nodes keep
-    * their own id. Raises if not converged within `maxIters`. */
+    * the undirected graph `edges` (aId, bId). One row per distinct id of
+    * `nodes` and of the edges' endpoints; isolated nodes keep their own
+    * id. Raises if the roots still merge after `maxIters` levels. */
   def components(nodes: DataFrame, idCol: String, edges: DataFrame,
       aId: String, bId: String, maxIters: Int = 25): DataFrame = {
-    val sym = symmetricEdges(edges, aId, bId).cache()
-    // the edge count decides the no-edge shortcut below (and fills the
-    // edge cache every round reads)
-    val nEdges = sym.count()
-    var labels = nodes
-      .select(col(idCol).cast("long").as("v"), col(idCol).cast("long").as("comp"))
-    // no edge: the identity labels are the fixpoint (distinct, as a
-    // round's min-fold would leave them)
-    if (nEdges == 0) labels = labels.distinct()
-    var pot: Option[BigInteger] = None
-    var converged = nEdges == 0
-    var it = 0
-    // the live checkpoint RDD for the current `labels`; replaced (and
-    // the old one unpersisted) every round — see the scaladoc
-    var liveRdds: Seq[RDD[InternalRow]] = Nil
-    while (!converged && it < maxIters) {
-      val prop = sym
-        .join(labels.select(col("v").as("src"), col("comp")), "src")
-        .select(col("dst").as("v"), col("comp"))
-      // pointer jumping: also fold in comp(comp(v)) — effective depth
-      // doubles per round, so rounds = O(log diameter) instead of
-      // O(diameter) (a 100-hop chain resolves in ~7 rounds). Round 1's
-      // labels are the identity, whose jump is itself: skipped.
-      val candidates =
-        if (it == 0) labels.unionByName(prop)
-        else labels.unionByName(prop).unionByName(labels.as("x")
-          .join(labels.select(col("v").as("comp"), col("comp").as("jcomp")), "comp")
-          .select(col("v"), col("jcomp").as("comp")))
-      val folded = candidates.groupBy("v").agg(min("comp").as("comp"))
-      // Under AQE the cut itself executes the plan's shuffle stages
-      // (join + jump + min-fold) to pick the final plan; the potential
-      // job then runs the final stage and persists the blocks.
-      val (next, rdds) = Lineage.cutLazy(folded)
-      val nextPot = potential(rdds.head)
-      liveRdds.foreach(_.unpersist(blocking = false))
-      liveRdds = rdds
-      converged = pot.contains(nextPot)
-      pot = Some(nextPot)
-      labels = next
-      it += 1
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val a = col(aId).cast("long"); val b = col(bId).cast("long")
+    // (least, greatest); an edge with one null end keeps it as w
+    var level = edges
+      .select(least(a, b).as("u"),
+        when(a.isNotNull && b.isNotNull, greatest(a, b)).as("w"))
+      .filter(col("u").isNotNull && !(col("u") <=> col("w")))
+    var cuts = Vector.empty[(DataFrame, RDD[InternalRow])]
+    var multi = 1L
+    while (multi > 0 && cuts.size < maxIters) {
+      // salted by the level (see the scaladoc): edges one level saw
+      // apart meet in fresh partitions at the next
+      val seen = level.repartition(col("u"), lit(cuts.size))
+        .as[(Long, Option[Long])]
+        .mapPartitions(contract).toDF("v", "r")
+      // level 0 also folds in the node set (no root of their own), so
+      // every node has a row and the last level's cut is the answer
+      val rows = if (cuts.isEmpty) seen.unionByName(
+          nodes.select(col(idCol).cast("long").as("v"),
+            lit(null).cast("long").as("r")))
+        else seen
+      val fold = rows.groupBy("v").agg(
+        coalesce(min("r"), col("v")).as("m"), collect_set("r").as("roots"))
+      // Under AQE the cut runs the level's shuffle stages (the caller's
+      // edge derivation too, at level 0); the count job below runs the
+      // final stage and persists the blocks
+      val (cut, rdds) = Lineage.cutLazy(fold)
+      multi = rdds.head.sparkContext.runJob(rdds.head,
+        (it: Iterator[InternalRow]) =>
+          it.count(r => !r.isNullAt(0) && r.getArray(2).numElements() > 1)
+      ).map(_.toLong).sum
+      cuts :+= (cut, rdds.head)
+      // (m, other root) per multi-root node; the null id's roots become
+      // (root, null) edges, so it reads the next level's labels
+      level = cut.filter(col("v").isNull || size(col("roots")) > 1)
+        .select(explode(when(col("v").isNull,
+            transform(col("roots"), r =>
+              struct(r.as("u"), lit(null).cast("long").as("w"))))
+          .otherwise(transform(array_remove(col("roots"), col("m")), r =>
+              struct(col("m").as("u"), r.as("w"))))).as("e"))
+        .select("e.u", "e.w")
     }
-    sym.unpersist()
-    require(converged,
-      s"components: no fixpoint after $maxIters rounds — component diameter " +
-        "exceeds the bound (raise maxIters, or contract dense cliques first)")
-    // the final round's checkpoint stays persisted: the returned frame
-    // reads from it — registered so GraphBlocks.release can free it
-    // eagerly (one round of blocks, not one per round)
+    if (multi > 0) cuts.foreach(_._2.unpersist(blocking = false))
+    require(multi == 0,
+      s"components: no fixpoint after $maxIters levels — roots still " +
+        "merge (raise maxIters, or contract dense cliques first)")
+    // compose down: label(v) = next(m(v)); the null id follows the null
+    // row (its key is null, and `<=>` matches null to null)
+    val labels = cuts.map(_._1).reduceRight { (cut, next) =>
+      cut.join(next.select(col("v").as("_k"), col("m").as("_c")),
+          when(col("v").isNotNull, col("m")) <=> col("_k"), "left")
+        .select(col("v"), coalesce(col("_c"), col("m")).as("m"))
+    }
     GraphBlocks.register(
-      labels.select(col("v").as(idCol), col("comp")),
-      liveRdds)
+      labels.select(col("v").as(idCol), col("m").as("comp")),
+      cuts.map(_._2))
   }
 
   /** Quality-aware canonical selection — the release-side keep/drop
@@ -193,7 +261,7 @@ object Clusters {
     * measured similarity, so components only grow through genuine
     * near-dup chains. Scale shape: candidates are the LSH bucket
     * equi-join (never all pairs), verification is per-candidate, CC is
-    * [[components]] (hash-min + pointer jumping, doc-id keyed). One
+    * [[components]] (contraction-first union-find, doc-id keyed). One
     * cache, (id, sh, sig), feeds both the band fan-out and the verify
     * joins, and is freed as soon as [[components]] returns. */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
@@ -241,16 +309,16 @@ object Clusters {
       .join(sig.select(col(idCol).as("b_id"), col("sh").as("_shb")), "b_id")
       .filter(inter * 1.0 / uni >= minJaccard)
       .select("a_id", "b_id")
+    // components folds the node set by id, so `docs` needs no distinct
     val labeled = components(
-        docs.select(col(idCol).as("id")).filter(col("id").isNotNull)
-          .distinct(),
+        docs.select(col(idCol).as("id")).filter(col("id").isNotNull),
         "id", edges, "a_id", "b_id")
       .select(col("id").as(idCol), col("comp").as("cluster"))
-    // components ran EAGERLY (the edge derivation fills during
-    // sym.count() and every round materializes), so the signature
-    // cache is fully consumed — free it now instead of pinning blocks
-    // until session end; the returned frame reads the CC checkpoint
-    // (or, with no edge, `docs`), not this cache
+    // components ran EAGERLY (level 0's cut runs the edge derivation,
+    // and every level materializes), so the signature cache is fully
+    // consumed — free it now instead of pinning blocks until session
+    // end; the returned frame reads the levels' checkpoints, not this
+    // cache
     sig.unpersist(blocking = false)
     labeled
   }

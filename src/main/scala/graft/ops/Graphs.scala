@@ -35,10 +35,10 @@ import org.apache.spark.sql.functions._
   * partial-sum before the exchange, so a 10⁸-in-link node receives one
   * long per upstream partition, not 10⁸ rows). The edge set with its
   * out-degrees attached is computed ONCE and cached across rounds;
-  * lineage is cut every round with the same explicit RDD
-  * localCheckpoint + previous-round unpersist discipline as
-  * [[Clusters.components]] (round k must not replay rounds 1..k−1, and
-  * the loop holds exactly one round of rank blocks at any moment). On
+  * lineage is cut every round ([[Lineage.cut]], an internal-row
+  * localCheckpoint) and the previous round's blocks are unpersisted
+  * (round k must not replay rounds 1..k−1, and the loop holds exactly
+  * one round of rank blocks at any moment). On
   * a cluster the checkpoint goes to the cluster FS; iterations are a
   * fixed budget — rank deltas shrink geometrically (damping), so a
   * deployment picks iterations ≈ log(tolerance)/log(damp), not a
@@ -214,9 +214,9 @@ object Graphs {
     }
     nodes.unpersist()
     eod.unpersist()
-    // the final round's checkpoint stays persisted for the caller, as
-    // in Clusters.components — registered so GraphBlocks.release can
-    // free it without a global sweep
+    // the final round's checkpoint stays persisted for the caller —
+    // registered so GraphBlocks.release can free it without a global
+    // sweep
     GraphBlocks.register(
       ranks.select(col("n").as("node"), col("rank").as("rank_units")),
       liveRdds)

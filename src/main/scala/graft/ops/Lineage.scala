@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The per-round lineage-cut discipline shared by the iterative ops
-  * (components, pageRank, LPA, BFS, k-core, triangles): checkpoint +
-  * materialize each round, so round k's plan reads the previous
-  * round's BLOCKS instead of re-deriving rounds 1..k−1 (an unrolled
+  * (pageRank, LPA, BFS, k-core, triangles, and components, whose
+  * rounds are contraction levels): checkpoint + materialize each
+  * round, so round k's plan reads the previous round's BLOCKS instead
+  * of re-deriving rounds 1..k−1 (an unrolled
   * iterative plan re-analyzes its whole past every action — the r14 CC
   * probe distortion).
   *

@@ -489,13 +489,15 @@ object Pipeline {
       c.get("idCol").asText(), c.get("clusterCol").asText(),
       c.get("scoreCol").asText())),
     // connected components over an edge frame (aCol, bCol): node set =
-    // union of endpoints, labels = min reachable id (hash-min + pointer
-    // jumping, per-round lineage cuts)
+    // union of endpoints (a null one too), labels = min reachable id
+    // (per-partition union-find, then levels over the roots until none
+    // merge; one lineage cut per level; `maxIters` bounds levels)
     "components" -> (c => df => {
       import org.apache.spark.sql.functions.col
       val a = c.get("aCol").asText(); val b = c.get("bCol").asText()
+      // components folds its node set by id: no distinct needed here
       val nodes = df.select(col(a).as("_n"))
-        .unionByName(df.select(col(b).as("_n"))).distinct()
+        .unionByName(df.select(col(b).as("_n")))
       graft.ops.Clusters.components(nodes, "_n", df, a, b,
         maxIters = if (c.has("maxIters")) c.get("maxIters").asInt() else 25)
         .withColumnRenamed("_n", if (c.has("idOut")) c.get("idOut").asText()

@@ -346,35 +346,44 @@ class GraphsPropSpec extends SparkSpec {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  /** Labels and round count of one `Clusters.components` call. A round
-    * is one lineage cut (a `localCheckpoint` execution) plus one job
-    * outside SQL (its potential); both counts must agree. */
-  private def components(nodes: Seq[Long], edges: Seq[(Long, Long)])
+  /** Labels and level count of one `Clusters.components` call on
+    * `session`. A level is one lineage cut (a `localCheckpoint`
+    * execution) plus one job outside SQL (its multi-root count); both
+    * counts must agree. */
+  private def components(nodes: Seq[Long], edges: Seq[(Long, Long)],
+      session: org.apache.spark.sql.SparkSession = spark)
       : (Map[Long, Long], Long) = {
+    val ss = session
+    import ss.implicits._
     var labeled: org.apache.spark.sql.DataFrame = null
-    val Observed(runs, _, bareJobs) = Observed(spark) {
+    val Observed(runs, _, bareJobs) = Observed(session) {
       labeled = graft.ops.Clusters.components(nodes.toDF("id"), "id",
         edges.toDF("a", "b"), "a", "b")
     }
-    val rounds = runs.count(_._1.takeWhile(_ != ' ') == "localCheckpoint")
-    assert(bareJobs == rounds, s"$bareJobs jobs outside SQL for $rounds rounds")
+    val levels = runs.count(_._1.takeWhile(_ != ' ') == "localCheckpoint")
+    assert(bareJobs == levels, s"$bareJobs jobs outside SQL for $levels levels")
     val got = labeled.as[(Long, Long)].collect()
     assert(got.length == nodes.size, s"one label per node: ${got.toSeq}")
-    (got.toMap, rounds.toLong)
+    (got.toMap, levels.toLong)
   }
 
-  test("components equals a sequential union-find; rounds 0 without " +
-      "edges, 2 for a star") {
-    val gen = for {
-      n <- Gen.choose(1, 12)
-      nEdges <- Gen.choose(0, 14)
-      edges <- Gen.listOfN(nEdges,
-        Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
-    } yield ((0L until n).toList, edges)
-    val prop = Prop.forAll(gen) { case (nodes, edges) =>
+  private val componentsGen = for {
+    n <- Gen.choose(1, 12)
+    nEdges <- Gen.choose(0, 14)
+    edges <- Gen.listOfN(nEdges,
+      Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
+  } yield ((0L until n).toList, edges)
+
+  /** The model property on `session`; the level count of every drawn
+    * graph. */
+  private def componentsProp(session: org.apache.spark.sql.SparkSession)
+      : Seq[Long] = {
+    val levels = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val prop = Prop.forAll(componentsGen) { case (nodes, edges) =>
       // duplicate and reversed copies of the drawn edges ride along
       val withDups = edges ++ edges.take(2) ++ edges.take(2).map(_.swap)
-      val (got, _) = components(nodes, withDups)
+      val (got, lv) = components(nodes, withDups, session)
+      levels += lv
       val want = componentsModel(nodes, withDups)
       if (got != want)
         println(s"MISMATCH nodes=$nodes edges=$withDups\n got=$got\n want=$want")
@@ -383,30 +392,51 @@ class GraphsPropSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
+    levels.toSeq
+  }
+
+  test("components equals a union-find model; small graphs take one level") {
+    // spec-sized edge sets coalesce to one partition, whose union-find
+    // settles every component: one level, whatever the diameter
+    assert(componentsProp(spark).forall(_ == 1L))
 
     val nodes = (0L until 6L).toList
-    // no edge, or self-loops only: identity labels, no round
+    // no edge, or self-loops only: identity labels, in one level
     for (edges <- Seq(Nil, nodes.map(n => n -> n))) {
-      val (got, rounds) = components(nodes, edges)
+      val (got, levels) = components(nodes, edges)
       assert(got == nodes.map(n => n -> n).toMap)
-      assert(rounds == 0L, s"$edges ran $rounds rounds")
+      assert(levels == 1L, s"$edges ran $levels levels")
     }
-    // a star around the min id settles in round 1; round 2 confirms it
-    val (star, starRounds) = components(nodes, nodes.tail.map(0L -> _))
+    // a star around the min id, and a clique
+    val (star, starLevels) = components(nodes, nodes.tail.map(0L -> _))
     assert(star == nodes.map(_ -> 0L).toMap)
-    assert(starRounds == 2L)
-    // a 40-node path, listed in scrambled order, needs several rounds
+    assert(starLevels == 1L)
+    val clique = for (x <- nodes; y <- nodes if x < y) yield (y, x)
+    val (cl, clLevels) = components(nodes, clique)
+    assert(cl == nodes.map(_ -> 0L).toMap)
+    assert(clLevels == 1L)
+    // a 40-node path, listed in scrambled order
     val perm = new scala.util.Random(7).shuffle((0L until 40L).toList)
     val path = perm.zip(perm.tail)
-    val (chain, chainRounds) = components(perm, path)
+    val (chain, chainLevels) = components(perm, path)
     assert(chain == componentsModel(perm, path))
     assert(chain.values.toSet == Set(0L))
-    assert(chainRounds > 2L, s"path converged in $chainRounds rounds")
-    // ids at both ends of the long range: the label sums overflow a long
+    assert(chainLevels == 1L, s"path settled in $chainLevels levels")
+    // ids at both ends of the long range
     val wide = Seq(Long.MaxValue, Long.MaxValue - 1, Long.MaxValue - 2,
       Long.MinValue, Long.MinValue + 1, 5L)
     val wideEdges = Seq(wide(0) -> wide(1), wide(1) -> wide(2),
       wide(3) -> wide(4), wide(4) -> wide(5))
     assert(components(wide, wideEdges)._1 == componentsModel(wide, wideEdges))
+  }
+
+  test("components equals the model across uncoalesced partitions") {
+    // a child session whose shuffles keep all 4 partitions: a level's
+    // union-find then sees only part of a component, and the roots
+    // merge over further levels (the shared session stays as it is)
+    val spread = spark.newSession()
+    spread.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val levels = componentsProp(spread)
+    assert(levels.exists(_ >= 2L), s"no drawn graph took two levels: $levels")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
@@ -357,13 +356,22 @@ class OpsSpec extends SparkSpec {
     assert(got.toSeq === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L)
       .map(identity), s"got ${got.toSeq}")
-    // a diameter-4 path cannot converge in 2 rounds: loud failure
-    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
+    // a path whose ids rise along it, over 4 partitions that AQE may
+    // not coalesce (a child session; the shared one stays as it is):
+    // a level merges only edges that share a partition, so one level
+    // cannot settle it — loud failure at maxIters = 1, labels without it
+    val spread = spark.newSession()
+    spread.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val rising = spread.range(40).select(col("id").as("a"),
+      (col("id") + 1).as("b"))
     val e = intercept[IllegalArgumentException] {
-      Clusters.components(Seq(1L, 2L, 3L, 4L, 5L).toDF("id"), "id",
-        path, "a", "b", maxIters = 2)
+      Clusters.components(spread.range(41).toDF(), "id", rising, "a", "b",
+        maxIters = 1)
     }
     assert(e.getMessage.contains("fixpoint"))
+    val settled = Clusters.components(spread.range(41).toDF(), "id", rising, "a", "b")
+    assert(settled.select("comp").distinct().as[Long].collect().toSeq ==
+      Seq(0L))
   }
 
   test("nearDupClusters: verified-edge CC — chains merge, dissimilar and short docs stay singletons") {
@@ -421,38 +429,32 @@ class OpsSpec extends SparkSpec {
     val caches = runs.flatMap { case (_, qe) => cachesIn(qe) }
       .map(r => r.cacheBuilder -> r.output.map(_.name))
       .distinctBy { case (b, _) => System.identityHashCode(b) }
-    // the symmetrized edge set is components' cache; its plan holds the
-    // caller's edge derivation ONCE — no union of the two directions
-    val edgeCaches = caches.filter(_._2 == Seq("src", "dst"))
-    assert(edgeCaches.size == 1, s"caches: ${caches.map(_._2)}")
-    val symPlan = edgeCaches.head._1.logicalPlan
-    assert(!symPlan.exists(_.isInstanceOf[Union]),
-      "the symmetrized edge plan holds a union of the two directions")
-    // … and everything else is the ONE signature cache
-    assert(caches.filterNot(_._2 == Seq("src", "dst")).map(_._2) ==
-      Seq(Seq("doc_id", "sh", "sig")), s"caches: ${caches.map(_._2)}")
+    // the ONE signature cache is every cache the call reads: the
+    // edges stream into components' first level uncached
+    assert(caches.map(_._2) == Seq(Seq("doc_id", "sh", "sig")),
+      s"caches: ${caches.map(_._2)}")
   }
 
-  test("components runs one job outside SQL per round and no identity " +
-      "potential") {
+  test("components runs one cut and one job outside SQL per level") {
     import graft.ops.Clusters
     val nodes = (0L until 8L).toDF("id")
     val star = (1L until 8L).map(0L -> _).toDF("a", "b")
-    var labeled: org.apache.spark.sql.DataFrame = null
-    val Observed(runs, _, bareJobs) = Observed(spark) {
-      labeled = Clusters.components(nodes, "id", star, "a", "b")
+    val clique = for (x <- 0L until 8L; y <- 0L until x) yield (x, y)
+    for (edges <- Seq(star, clique.toDF("a", "b"))) {
+      var labeled: org.apache.spark.sql.DataFrame = null
+      val Observed(runs, _, bareJobs) = Observed(spark) {
+        labeled = Clusters.components(nodes, "id", edges, "a", "b")
+      }
+      // an edge set this small is one partition: its union-find
+      // settles the graph in ONE level, whose lineage cut is the only
+      // SQL execution (the edges are never counted or cached apart)
+      assert(runs.map(_._1.takeWhile(_ != ' ')) == Seq("localCheckpoint"),
+        s"executions: ${runs.map(_._1)}")
+      // the level's multi-root count is one job over its checkpoint RDD
+      assert(bareJobs == 1, s"$bareJobs jobs outside SQL for one level")
+      assert(labeled.as[(Long, Long)].collect().toMap ==
+        (0L until 8L).map(_ -> 0L).toMap)
     }
-    // a round is one lineage cut: one localCheckpoint execution
-    val n = runs.count(_._1.takeWhile(_ != ' ') == "localCheckpoint")
-    assert(n == 2, s"a star around the min id takes $n rounds")
-    // the edge fill, then one lineage cut per round — no aggregate
-    // action over the identity labels or any round's labels
-    assert(runs.map(_._1.takeWhile(_ != ' ')) ==
-      "count" +: Seq.fill(n)("localCheckpoint"), s"executions: ${runs.map(_._1)}")
-    // each round's potential is one job over its checkpoint RDD
-    assert(bareJobs == n, s"$bareJobs jobs outside SQL for $n rounds")
-    assert(labeled.as[(Long, Long)].collect().toMap ==
-      (0L until 8L).map(_ -> 0L).toMap)
   }
 
   test("pqTopK: exact reconstruction when every vector is a codeword") {

@@ -486,6 +486,26 @@ class PipelineCfgSpec extends SparkSpec {
       .withColumnRenamed("_n", "node")) && cc.nonEmpty)
   }
 
+  test("components stage: an edge with one null end labels the null id") {
+    // the stage's node set is the union of both endpoint columns, so a
+    // null endpoint is a node too. It takes the least label among its
+    // non-null neighbors and joins no two components: 2 and 9 both
+    // touch it, yet {1, 2} and {6, 9} keep their own labels. A
+    // both-null edge and a self-loop change nothing.
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(9L)),
+      (Some(9L), Some(6L)), (Some(7L), Some(8L)), (None, None),
+      (Some(4L), Some(4L))).toDF("a", "b")
+    val got = graft.pipeline.Pipeline.processorRegistry("components")(
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+          """{"type": "components", "aCol": "a", "bCol": "b"}"""))(edges)
+      .as[(Option[Long], Long)].collect().toMap
+    assert(got == Map(Some(1L) -> 1L, Some(2L) -> 1L, None -> 1L,
+      Some(9L) -> 6L, Some(6L) -> 6L, Some(7L) -> 7L, Some(8L) -> 7L,
+      Some(4L) -> 4L), s"got $got")
+  }
+
   test("near_dup_clusters stage round-trips and preserves the frame") {
     // standalone verified-edge cluster labels (VERDICT r18 item 6):
     // same definition as split_safe's key, reachable without the split
